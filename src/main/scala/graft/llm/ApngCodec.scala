@@ -114,7 +114,7 @@ object ApngCodec {
     // each output frame is a full canvas clone — cap the TOTAL
     // pixel-frame volume, not just per-frame dims, or a hostile
     // 4096-frame animation over a large canvas OOMs the task
-    require(frames.size.toLong * w * h <= 64000000L,
+    require(frames.size.toLong * w * h <= Multimodal.MaxPixels,
       s"APNG ${frames.size} frames x $w x $h exceeds the composite cap")
     // IDAT-as-frame-0 requires its fcTL to cover the full canvas
     if (idatIsFrame) {

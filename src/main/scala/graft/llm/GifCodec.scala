@@ -124,7 +124,7 @@ object GifCodec {
     require(isGif(b), "not a GIF")
     val w = u16(b, 6); val h = u16(b, 8)
     require(w > 0 && h > 0, "GIF missing screen dimensions")
-    require(w.toLong * h <= 64000000L, // canvas + 3-float plane stay
+    require(w.toLong * h <= Multimodal.MaxPixels, // canvas + 3-float plane stay
       s"GIF $w x $h too large to decode dependency-free")  // Int-safe
     val packed = b(10) & 0xFF
     val bgIndex = b(11) & 0xFF

@@ -172,13 +172,13 @@ object IcoCodec {
     * real decoded dims for DIB entries and honest PNGs alike. */
   def decodeAll(b: Array[Byte]): Seq[(Int, Int, Array[Float])] = {
     val dirs = directory(b)
-    require(dirs.map(d => d.w.toLong * d.h).sum <= 64000000L,
+    require(dirs.map(d => d.w.toLong * d.h).sum <= Multimodal.MaxPixels,
       s"ICO directory declares ${dirs.size} entries beyond the pixel cap")
     var seen = 0L // REAL decoded pixels — directories lie, so check
     dirs.map { d => // as each entry lands (each is singly capped)
       val e = decodeEntry(b, d)
       seen += e._1.toLong * e._2
-      require(seen <= 64000000L,
+      require(seen <= Multimodal.MaxPixels,
         "ICO decoded pixel volume exceeds the cap (lying directory)")
       e
     }

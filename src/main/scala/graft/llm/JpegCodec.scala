@@ -20,12 +20,16 @@ import java.io.ByteArrayOutputStream
   * refinement passes, EOB-run skips) per T.81 Annex G — DC first/
   * refine, AC first/refine with correction bits, interleaved DC and
   * single-component AC scan geometry (non-interleaved scans traverse
-  * ceil(compW/8)×ceil(compH/8) blocks of the padded grid). At EOI the
-  * accumulated coefficients dequantize, zigzag-undo, and IDCT once —
-  * so a baseline stream and a progressive re-ordering of the SAME
-  * quantized coefficients decode to IDENTICAL pixels (asserted by
-  * JpegCodecSpec). Chroma upsamples by replication, JFIF YCbCr→RGB
-  * with clamp — returns row-major top-down [r,g,b, …] floats, the
+  * ceil(compW/8)×ceil(compH/8) blocks of the padded grid). A frame
+  * declaring more than [[Multimodal.MaxPixels]] refuses at SOF, before
+  * any array is allocated. At EOI the accumulated coefficients
+  * dequantize, zigzag-undo, and IDCT once — so a baseline stream and a
+  * progressive re-ordering of the SAME quantized coefficients decode to
+  * IDENTICAL pixels (asserted by JpegCodecSpec). The IDCT sums only a
+  * block's nonzero coefficients against precomputed cosine tables, with
+  * the same bits as the textbook 64-term double sum (JpegIdctSpec).
+  * Chroma upsamples by replication, JFIF YCbCr→RGB with clamp —
+  * returns row-major top-down [r,g,b, …] floats, the
   * [[Multimodal.BmpWavDecoder]] plane contract. Arithmetic-coded,
   * lossless, hierarchical, 12-bit and 4-component (CMYK) streams
   * refuse loudly.
@@ -92,28 +96,55 @@ object JpegCodec {
     base.map(t => math.min(255, math.max(1, (t * s + 50) / 100)))
   }
 
-  private def cosTab(u: Int, x: Int): Double =
-    math.cos((2 * x + 1) * u * math.Pi / 16.0)
+  /** cos((2x+1)·u·π/16) at u*8+x: the same doubles as evaluating the
+    * cosine per term, built once. */
+  private val Cos: Array[Double] = Array.tabulate(64) { i =>
+    math.cos((2 * (i & 7) + 1) * (i >> 3) * math.Pi / 16.0)
+  }
 
-  private def cC(u: Int): Double = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
+  /** cC(u)·cC(v) at v*8+u, with cC(0) = 1/√2 and cC(u > 0) = 1. */
+  private val Norm: Array[Double] = Array.tabulate(64) { i =>
+    def cC(u: Int): Double = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
+    cC(i & 7) * cC(i >> 3)
+  }
 
-  /** 2D 8×8 inverse DCT (naive double — 8×8 is 4096 mults, fine). */
-  private def idct(in: Array[Double]): Array[Double] = {
+  /** 2D 8×8 inverse DCT: out(y*8+x) = ¼·Σ cC(u)cC(v)·in(v*8+u)·
+    * cos(u,x)·cos(v,y), summed over the block's nonzero coefficients
+    * only (dequantized blocks are mostly zeros). Terms are added in
+    * ascending v*8+u order, each multiplied left to right as
+    * ((cC(u)cC(v)·in)·cos(u,x))·cos(v,y), exactly as the full 64-term
+    * sum does it. A skipped term is ±0.0; a sum that starts at +0.0 is
+    * never -0.0, so adding ±0.0 never changes it, and the result has the
+    * same bits as the full sum. */
+  private[llm] def idct(in: Array[Double]): Array[Double] = {
+    var n = 0
+    var k = 0
+    while (k < 64) { if (in(k) != 0.0) n += 1; k += 1 }
+    // per nonzero term j: rows(j*8+x) = (cC(u)cC(v)·in)·cos(u,x), vRow(j) = v*8
+    val rows = new Array[Double](n * 8)
+    val vRow = new Array[Int](n)
+    var j = 0
+    k = 0
+    while (j < n) {
+      val c = in(k)
+      if (c != 0.0) {
+        val p = Norm(k) * c
+        val u8 = (k & 7) * 8
+        var x = 0
+        while (x < 8) { rows(j * 8 + x) = p * Cos(u8 + x); x += 1 }
+        vRow(j) = k & ~7
+        j += 1
+      }
+      k += 1
+    }
     val out = new Array[Double](64)
     var y = 0
     while (y < 8) {
       var x = 0
       while (x < 8) {
         var s = 0.0
-        var v = 0
-        while (v < 8) {
-          var u = 0
-          while (u < 8) {
-            s += cC(u) * cC(v) * in(v * 8 + u) * cosTab(u, x) * cosTab(v, y)
-            u += 1
-          }
-          v += 1
-        }
+        j = 0
+        while (j < n) { s += rows(j * 8 + x) * Cos(vRow(j) + y); j += 1 }
         out(y * 8 + x) = s / 4.0
         x += 1
       }
@@ -134,12 +165,12 @@ object JpegCodec {
         while (y < 8) {
           var x = 0
           while (x < 8) {
-            s += in(y * 8 + x) * cosTab(u, x) * cosTab(v, y)
+            s += in(y * 8 + x) * Cos(u * 8 + x) * Cos(v * 8 + y)
             x += 1
           }
           y += 1
         }
-        out(v * 8 + u) = cC(u) * cC(v) * s / 4.0
+        out(v * 8 + u) = Norm(v * 8 + u) * s / 4.0
         u += 1
       }
       v += 1
@@ -253,7 +284,12 @@ object JpegCodec {
 
   /** Decode a baseline or progressive JPEG to (width, height,
     * row-major RGB floats). */
-  def decode(b: Array[Byte]): (Int, Int, Array[Float]) = {
+  def decode(b: Array[Byte]): (Int, Int, Array[Float]) = decodeWith(b, idct)
+
+  /** [[decode]] with the block inverse DCT passed in, so a spec can
+    * decode the same stream through a reference transform. */
+  private[llm] def decodeWith(b: Array[Byte],
+                              idctFn: Array[Double] => Array[Double]): (Int, Int, Array[Float]) = {
     require(isJpeg(b), "not a JPEG (no SOI)")
     val quant = Array.ofDim[Int](4, 64) // natural order
     val dcTabs = new Array[HuffTable](4)
@@ -490,6 +526,10 @@ object JpegCodec {
             require((b(pos + 4) & 0xFF) == 8, "only 8-bit JPEG")
             h = u16(pos + 5); w = u16(pos + 7)
             require(w > 0 && h > 0, "JPEG missing SOF dimensions")
+            // refuse before allocating: the coefficient, plane and output
+            // arrays all scale with the declared (up to 65535²) size
+            require(w.toLong * h <= Multimodal.MaxPixels,
+              s"JPEG $w x $h too large to decode dependency-free")
             val nc = b(pos + 9) & 0xFF
             require(nc == 1 || nc == 3,
               s"only grayscale or YCbCr JPEG ($nc components)")
@@ -579,7 +619,7 @@ object JpegCodec {
             if (c != 0) block(ZigZag(k)) = c.toDouble * q(ZigZag(k))
             k += 1
           }
-          val px = idct(block)
+          val px = idctFn(block)
           val ox = bc * 8; val oy = br2 * 8
           var yy = 0
           while (yy < 8) {

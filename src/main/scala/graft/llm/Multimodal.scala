@@ -30,6 +30,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object Multimodal {
 
+  /** Pixel cap every image decoder checks a header's declared
+    * dimensions against before allocating: 64 M pixels keep the 3-float
+    * output plane (768 MB) and every per-pixel array Int-indexable. */
+  final val MaxPixels = 64000000L
+
   /** One media object: opaque bytes + kind ("image"|"audio"|"video"). */
   case class MediaRow(id: Long, media: Array[Byte], kind: String)
 
@@ -177,7 +182,7 @@ object Multimodal {
         pos += 12 + len
       }
       require(w > 0 && h > 0 && idat.size > 0, "PNG missing IHDR/IDAT")
-      require(w.toLong * h <= 64000000L,
+      require(w.toLong * h <= MaxPixels,
         s"PNG $w x $h too large to decode dependency-free")
       require(color != 3 || palette != null, "palette PNG missing PLTE")
       // sample geometry: channels × depth bits per pixel; the filter

@@ -74,7 +74,7 @@ object PnmCodec {
     t.pos = 2
     val w = t.nextInt()
     val h = t.nextInt()
-    require(w > 0 && h > 0 && w.toLong * h <= 64000000L,
+    require(w > 0 && h > 0 && w.toLong * h <= Multimodal.MaxPixels,
       s"PNM $w x $h out of decodable range")
     val maxval = if (kind == 1 || kind == 4) 1 else t.nextInt()
     require(maxval > 0 && maxval < 65536, s"PNM maxval $maxval")

@@ -37,7 +37,7 @@ object QoiCodec {
     val h = be32(bytes, 8)
     val channels = bytes(12) & 0xFF
     val colorspace = bytes(13) & 0xFF
-    require(w > 0 && h > 0 && w.toLong * h <= 64000000L,
+    require(w > 0 && h > 0 && w.toLong * h <= Multimodal.MaxPixels,
       s"QOI $w x $h out of range")
     require(channels == 3 || channels == 4, s"QOI channels $channels")
     require(colorspace <= 1, s"QOI colorspace $colorspace")

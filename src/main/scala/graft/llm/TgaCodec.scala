@@ -55,7 +55,7 @@ object TgaCodec {
     val topDown = (desc & 0x20) != 0
     val rle = imgType >= 9
     val baseType = if (rle) imgType - 8 else imgType
-    require(w.toLong * h <= 64000000L, s"TGA $w x $h too large")
+    require(w.toLong * h <= Multimodal.MaxPixels, s"TGA $w x $h too large")
 
     var pos = 18 + idLen
     require(pos <= b.length, s"TGA ID field (len=$idLen) overruns the file")

@@ -119,7 +119,7 @@ object TiffCodec {
 
     val w = one(256).toInt
     val h = one(257).toInt
-    require(w > 0 && h > 0 && w.toLong * h <= 64000000L,
+    require(w > 0 && h > 0 && w.toLong * h <= Multimodal.MaxPixels,
       s"TIFF $w x $h out of decodable range")
     val spp = one(277, 1L).toInt
     require(spp == 1 || spp == 3,

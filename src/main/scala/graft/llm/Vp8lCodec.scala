@@ -311,10 +311,6 @@ object Vp8lCodec {
   // ---------------------------------------------------------------
   // DECODER
   // ---------------------------------------------------------------
-  /** Hard allocation cap (crafted 14-bit dims max out at 16384² ≈
-    * 268M pixels × 4 B — refuse far below that). */
-  private val MaxPixels = 64000000L
-
   def decode(bytes: Array[Byte]): (Int, Int, Array[Float]) = {
     val (w, h, px) = decodeArgb(bytes)
     val out = new Array[Float](w * h * 3)
@@ -343,7 +339,7 @@ object Vp8lCodec {
     val h = r.readBits(14) + 1
     r.readBits(1) // alpha hint
     require(r.readBits(3) == 0, "unknown VP8L version")
-    require(w.toLong * h <= MaxPixels,
+    require(w.toLong * h <= Multimodal.MaxPixels,
       s"VP8L $w x $h too large to decode dependency-free")
     val px = decodeImageStream(r, w, h, isLevel0 = true)
     (w, h, px)
@@ -426,7 +422,7 @@ object Vp8lCodec {
     }
     // --- pixel loop ---
     val n = w * h
-    require(n >= 1 && n <= MaxPixels, s"sub-image $w x $h")
+    require(n >= 1 && n <= Multimodal.MaxPixels, s"sub-image $w x $h")
     val px = new Array[Int](n)
     val cache = if (cacheSize > 0) new Array[Int](cacheSize) else null
     def insert(p: Int): Unit =

@@ -377,4 +377,51 @@ class JpegCodecSpec extends AnyFunSuite {
     val err = maxErr(out, planeOf(w, h, sharp))
     assert(err <= 96.0f, s"sharp-plane error $err looks structural")
   }
+
+  test("encoder output is pinned: SHA-256 of four parameter sets") {
+    // the encoder's exact bytes: any change to the forward DCT's
+    // arithmetic or to the bitstream layout moves a digest
+    val pix = (x: Int, y: Int) =>
+      ((x * 7 + y * 13) % 256, (96 + x * 2 + y) % 256, (x * y + 101) % 256)
+    def sha256(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b)
+        .map(v => f"${v & 0xFF}%02x").mkString
+    val cases = Seq(
+      "4:4:4" -> JpegCodec.encode(45, 37, pix),
+      "4:2:0" -> JpegCodec.encode(45, 37, pix, sampH = 2, sampV = 2),
+      "restart 3" -> JpegCodec.encode(45, 37, pix, restartInterval = 3),
+      "progressive" -> JpegCodec.encode(45, 37, pix, progressive = true))
+    val expected = Map(
+      "4:4:4" -> "f5cb41ad06d81eda9473b8d1ee13bf2e392724303c88a00eb948142ea4284d91",
+      "4:2:0" -> "52e36606bb81ac2416dd56db4008ce1e1a18bbb9d21ce458c78ef40e06ea1881",
+      "restart 3" -> "549cd88a4931e4e782e839f878c33522b47a3e32e42ffcc059e0f3adbdbf2093",
+      "progressive" -> "b3f08f4f8f8f6f0ff2102d21ec88d59c5b5e6aa8630c470878e19eed3f257cbf")
+    for ((name, bytes) <- cases) assert(sha256(bytes) == expected(name), name)
+  }
+
+  test("hostile SOF dimensions refuse before allocating") {
+    // 65535² overflows the padded block count in Int (it wraps to 0);
+    // 40000² would ask for gigabytes of coefficients before any scan
+    def withDims(b: Array[Byte], w: Int, h: Int): Array[Byte] = {
+      val sof = b.indices.find(i => (b(i) & 0xFF) == 0xFF &&
+        i + 1 < b.length && (b(i + 1) & 0xFF) == 0xC0).get
+      val out = b.clone()
+      out(sof + 5) = (h >> 8).toByte; out(sof + 6) = h.toByte
+      out(sof + 7) = (w >> 8).toByte; out(sof + 8) = w.toByte
+      out
+    }
+    // SOI, then a grayscale SOF0 (8-bit, 1 component, 1x1, table 0), EOI
+    val headerOnly = Array(0xFF, 0xD8, 0xFF, 0xC0, 0x00, 0x0B, 0x08,
+      0x00, 0x10, 0x00, 0x10, 0x01, 0x01, 0x11, 0x00, 0xFF, 0xD9).map(_.toByte)
+    val full = JpegCodec.encode(16, 16, smooth, 90)
+    for (stream <- Seq(full, headerOnly); (w, h) <- Seq((65535, 65535), (40000, 40000))) {
+      val e = intercept[IllegalArgumentException] {
+        JpegCodec.decode(withDims(stream, w, h))
+      }
+      assert(e.getMessage.contains("too large"), s"${w}x$h: ${e.getMessage}")
+    }
+    // the same header at its real size still parses up to the missing scan
+    val e = intercept[IllegalArgumentException] { JpegCodec.decode(headerOnly) }
+    assert(e.getMessage.contains("SOS"))
+  }
 }
