@@ -2,6 +2,9 @@ package graft.llm
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.util.ByteCodecs
+import graft.util.ByteCodecs.isPng
+
 /** APNG (Animated PNG, PNG 3rd-edition chunks acTL/fcTL/fdAT) — the
   * second animation container web crawls carry next to GIF.
   *
@@ -15,22 +18,19 @@ import scala.collection.mutable.ArrayBuffer
   * otherwise it is NOT part of the animation and only fdAT frames
   * render.
   *
-  * Frame rasters are decoded by a self-contained Inflater + filter
-  * undo at 8-bit depth, color types 0/2/4/6, non-interlaced — the
-  * shapes APNG encoders actually emit; anything else refuses loudly.
-  * (The still-image PNG path in Multimodal keeps its own wider depth
-  * matrix; this decoder exists because compositing needs the alpha
-  * plane that path deliberately drops.)
+  * Frame rasters inflate and undo their row filters through the
+  * shared [[graft.util.ByteCodecs]] kernels, at 8-bit depth, color
+  * types 0/2/3/4/6, non-interlaced — the shapes APNG encoders actually
+  * emit; anything else refuses loudly. Only the RGBA lift is local:
+  * the still-image PNG path in Multimodal keeps its own wider depth
+  * matrix, and this decoder exists because compositing needs the
+  * alpha plane that path deliberately drops.
   */
 object ApngCodec {
 
   private def be32(b: Array[Byte], i: Int): Int =
     ((b(i) & 0xFF) << 24) | ((b(i + 1) & 0xFF) << 16) |
       ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
-
-  private def isPng(b: Array[Byte]): Boolean =
-    b.length >= 8 && (b(0) & 0xFF) == 0x89 && b(1) == 'P' && b(2) == 'N' &&
-      b(3) == 'G'
 
   /** PNG signature + an acTL chunk before IDAT. */
   def isApng(b: Array[Byte]): Boolean = {
@@ -188,45 +188,16 @@ object ApngCodec {
       case 0 | 3 => 1; case 4 => 2; case 2 => 3; case _ => 4
     }
     val stride = w * chans
-    val raw = new Array[Byte]((1 + stride) * h)
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(z)
-    var got = 0
-    while (got < raw.length && !inf.finished()) {
-      val n = inf.inflate(raw, got, raw.length - got)
-      require(n > 0 || !inf.needsInput(), "truncated APNG frame raster")
-      got += n
-    }
-    inf.end()
-    require(got == raw.length, s"APNG frame raster short ($got)")
-    def paeth(a: Int, bb: Int, c: Int): Int = {
-      val pa = math.abs(bb - c); val pb = math.abs(a - c)
-      val pc = math.abs(a + bb - 2 * c)
-      if (pa <= pb && pa <= pc) a else if (pb <= pc) bb else c
-    }
-    val prev = new Array[Int](stride)
-    val cur = new Array[Int](stride)
+    val rawLen = (1 + stride) * h
+    val raw = ByteCodecs.inflate(z, 0, z.length, nowrap = false,
+      maxOut = rawLen)
+    require(raw.length == rawLen, s"APNG frame raster short (${raw.length})")
+    ByteCodecs.unfilter(raw, 0, h, stride, chans)
     val out = new Array[Float](w * h * 4)
     var y = 0
     while (y < h) {
-      val base = y * (1 + stride)
-      val filter = raw(base) & 0xFF
-      require(filter <= 4, s"APNG filter $filter")
-      var i = 0
-      while (i < stride) {
-        val x = raw(base + 1 + i) & 0xFF
-        val a = if (i >= chans) cur(i - chans) else 0
-        val bb = prev(i)
-        val c = if (i >= chans) prev(i - chans) else 0
-        cur(i) = (filter match {
-          case 0 => x
-          case 1 => x + a
-          case 2 => x + bb
-          case 3 => x + (a + bb) / 2
-          case _ => x + paeth(a, bb, c)
-        }) & 0xFF
-        i += 1
-      }
+      val row = y * (1 + stride) + 1
+      def cur(i: Int): Int = raw(row + i) & 0xFF
       var x = 0
       while (x < w) {
         val d = (y * w + x) * 4
@@ -252,7 +223,6 @@ object ApngCodec {
         }
         x += 1
       }
-      System.arraycopy(cur, 0, prev, 0, stride)
       y += 1
     }
     out
@@ -275,17 +245,9 @@ object ApngCodec {
     require(f0.x == 0 && f0.y == 0, "frame 0 must cover the canvas")
     val out = new ArrayBuffer[Byte]()
     out ++= Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
-    def be32(v: Int): Array[Byte] = Array(
-      ((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-      ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      out ++= be32(data.length)
-      out ++= typ.getBytes("US-ASCII")
-      out ++= data
-      val crc = new java.util.zip.CRC32()
-      crc.update(typ.getBytes("US-ASCII")); crc.update(data)
-      out ++= be32(crc.getValue.toInt)
-    }
+    def be32(v: Int): Array[Byte] = ImageFixtures.be32(v)
+    def chunk(typ: String, data: Array[Byte]): Unit =
+      out ++= ImageFixtures.pngChunk(typ, data)
     chunk("IHDR", be32(f0.w) ++ be32(f0.h) ++
       Array[Byte](8, 6, 0, 0, 0)) // 8-bit RGBA, non-interlaced
     chunk("acTL", be32(frames.size) ++ be32(0))
@@ -303,14 +265,7 @@ object ApngCodec {
         raster(o) = r.toByte; raster(o + 1) = g.toByte
         raster(o + 2) = b.toByte; raster(o + 3) = f.alpha(x, y).toByte
       }
-      val z = {
-        val d = new java.util.zip.Deflater()
-        d.setInput(raster); d.finish()
-        val bos = new ArrayBuffer[Byte]()
-        val buf = new Array[Byte](8192)
-        while (!d.finished()) { val n = d.deflate(buf); bos ++= buf.take(n) }
-        d.end(); bos.toArray
-      }
+      val z = ByteCodecs.deflate(raster)
       if (i == 0) chunk("IDAT", z)
       else { chunk("fdAT", be32(seq) ++ z); seq += 1 }
     }

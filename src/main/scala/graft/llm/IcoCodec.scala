@@ -58,9 +58,7 @@ object IcoCodec {
 
   /** Decode entry `i` to (w, h, RGBA). */
   private def decodeEntry(b: Array[Byte], d: Dir): (Int, Int, Array[Float]) = {
-    val isPng = d.len >= 8 && (b(d.off) & 0xFF) == 0x89 &&
-      b(d.off + 1) == 'P' && b(d.off + 2) == 'N' && b(d.off + 3) == 'G'
-    if (isPng) {
+    if (graft.util.ByteCodecs.isPng(b, d.off)) {
       val png = java.util.Arrays.copyOfRange(b, d.off, d.off + d.len)
       val (w, h, px) = Multimodal.BmpWavDecoder.decodePngWithDims(png)
       val chans = px.length / (w * h)

@@ -2,6 +2,8 @@ package graft.llm
 
 import java.io.ByteArrayOutputStream
 
+import graft.util.ByteCodecs
+
 /** Deterministic minimal-but-valid image byte fixtures for the
   * multimodal metadata path (q88 / ImageHeadersSpec). Each builder
   * emits exactly the header structure [[graft.plans.ImageMeta]]
@@ -13,7 +15,7 @@ import java.io.ByteArrayOutputStream
   */
 object ImageFixtures {
 
-  private def be32(v: Int): Array[Byte] =
+  private[llm] def be32(v: Int): Array[Byte] =
     Array(((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
           ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
 
@@ -79,12 +81,6 @@ object ImageFixtures {
                         extraChunks: Seq[(String, Array[Byte])] = Nil,
                         depth: Int = 8)
       : Array[Byte] = {
-    def paeth(a: Int, b: Int, c: Int): Int = {
-      val p = a + b - c
-      val pa = math.abs(p - a); val pb = math.abs(p - b)
-      val pc = math.abs(p - c)
-      if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-    }
     val bitspp = depth * channels
     val bpp = math.max(1, bitspp / 8) // filter step in bytes
     /** One pass scanline, packed to bytes. */
@@ -136,31 +132,14 @@ object ImageFixtures {
               case 1 => cur(i) - left
               case 2 => cur(i) - up
               case 3 => cur(i) - (left + up) / 2
-              case _ => cur(i) - paeth(left, up, ul)
+              case _ => cur(i) - ByteCodecs.paeth(left, up, ul)
             }
             filtered.write(v & 0xFF)
           }
         }
       }
     }
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(filtered.toByteArray); defl.finish()
-    val buf = new Array[Byte](8192)
-    val idat = new ByteArrayOutputStream()
-    while (!defl.finished()) {
-      val n = defl.deflate(buf); idat.write(buf, 0, n)
-    }
-    defl.end()
-    def chunk(typ: String, data: Array[Byte]): Array[Byte] = {
-      val o = new ByteArrayOutputStream()
-      o.write(be32(data.length))
-      val tb = typ.getBytes("US-ASCII")
-      o.write(tb); o.write(data)
-      val crc = new java.util.zip.CRC32()
-      crc.update(tb); crc.update(data)
-      o.write(be32(crc.getValue.toInt))
-      o.toByteArray
-    }
+    val ib = ByteCodecs.deflate(filtered.toByteArray)
     val ihdr = new ByteArrayOutputStream()
     ihdr.write(be32(width)); ihdr.write(be32(height))
     ihdr.write(depth)
@@ -170,13 +149,20 @@ object ImageFixtures {
     val out = new ByteArrayOutputStream()
     out.write(Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
       .map(_.toByte))
-    out.write(chunk("IHDR", ihdr.toByteArray))
-    extraChunks.foreach { case (t, d) => out.write(chunk(t, d)) }
-    val ib = idat.toByteArray
-    out.write(chunk("IDAT", ib.take(ib.length / 2)))
-    out.write(chunk("IDAT", ib.drop(ib.length / 2)))
-    out.write(chunk("IEND", Array.emptyByteArray))
+    out.write(pngChunk("IHDR", ihdr.toByteArray))
+    extraChunks.foreach { case (t, d) => out.write(pngChunk(t, d)) }
+    out.write(pngChunk("IDAT", ib.take(ib.length / 2)))
+    out.write(pngChunk("IDAT", ib.drop(ib.length / 2)))
+    out.write(pngChunk("IEND", Array.emptyByteArray))
     out.toByteArray
+  }
+
+  /** One PNG chunk (RFC 2083 §3.2): length, type, data, real CRC32. */
+  private[llm] def pngChunk(typ: String, data: Array[Byte]): Array[Byte] = {
+    val tb = typ.getBytes("US-ASCII")
+    val crc = new java.util.zip.CRC32()
+    crc.update(tb); crc.update(data)
+    be32(data.length) ++ tb ++ data ++ be32(crc.getValue.toInt)
   }
 
   /** FULL 8-bit truecolor PNG (RFC 2083: color type 2 = RGB, or 6 =
@@ -184,7 +170,7 @@ object ImageFixtures {
     * data through [[pngEncode]] — a decoder must undo all five
     * filters (and, with `interlace = true`, the Adam7 pass geometry)
     * to round-trip `pix`. Counterpart of [[bmp]] for
-    * [[Multimodal.BmpWavDecoder]]'s Inflater-backed PNG path
+    * [[Multimodal.BmpWavDecoder]]'s PNG path
     * (q215/q247 / MultimodalDecodeSpec). */
   def pngFull(width: Int, height: Int, pix: (Int, Int) => (Int, Int, Int),
               rgba: Boolean = false, interlace: Boolean = false,

@@ -2,6 +2,9 @@ package graft.llm
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
+import graft.util.ByteCodecs
+import graft.util.ByteCodecs.isPng
+
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, processed in partition-local batches.
   *
@@ -15,8 +18,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * formats decodable with the JDK alone — 24-bpp uncompressed BMP,
   * the WAV encoding matrix, FLAC ([[FlacCodec]], q256), PNG across
   * the full (color type, bit depth) matrix, plain or Adam7 (zlib
-  * IDAT via `java.util.zip.Inflater` + the five scanline filters;
-  * [[BmpWavDecoder]], oracle-checked by q189/q190/q215/q247/q257),
+  * IDAT inflate + the five scanline filters, both shared
+  * [[graft.util.ByteCodecs]] kernels; [[BmpWavDecoder]],
+  * oracle-checked by q189/q190/q215/q247/q257),
   * baseline AND progressive JPEG ([[JpegCodec]], q242/q245), GIF
   * incl. animations ([[GifCodec]], q249), lossless WebP
   * ([[Vp8lCodec]], q258), and MJPEG-in-AVI
@@ -68,9 +72,9 @@ object Multimodal {
     * reorder, 4-byte row padding — returns row-major top-down
     * [r,g,b, r,g,b, …] as floats), non-interlaced 8-bit truecolor
     * RGB(A) or palette-indexed (PLTE) PNG ("image", sniffed by
-    * signature: JDK-Inflater zlib IDAT + per-scanline filter undo —
-    * same plane contract, alpha/tRNS dropped), WAV across the real
-    * encoding matrix ("audio": RIFF chunk walk with odd-size pad
+    * signature: [[graft.util.ByteCodecs]] zlib inflate + row-filter
+    * undo — same plane contract, alpha/tRNS dropped), WAV across the
+    * real encoding matrix ("audio": RIFF chunk walk with odd-size pad
     * bytes — int PCM 8/16/24/32, IEEE float32/64, G.711 µ-law/A-law,
     * WAVE_FORMAT_EXTENSIBLE; returns raw sample values), FLAC
     * ("audio", fLaC sniff → [[FlacCodec]]: the full lossless
@@ -94,17 +98,6 @@ object Multimodal {
       ((b(off) & 0xFF) << 24) | ((b(off + 1) & 0xFF) << 16) |
         ((b(off + 2) & 0xFF) << 8) | (b(off + 3) & 0xFF)
 
-    private def isPng(b: Array[Byte]): Boolean =
-      b.length >= 8 && (b(0) & 0xFF) == 0x89 && b(1) == 'P' &&
-        b(2) == 'N' && b(3) == 'G'
-
-    private def paeth(a: Int, b: Int, c: Int): Int = {
-      val p = a + b - c
-      val pa = math.abs(p - a); val pb = math.abs(p - b)
-      val pc = math.abs(p - c)
-      if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-    }
-
     /** The Adam7 pass grid (x0, y0, dx, dy) per RFC 2083 §2.6; a
       * non-interlaced image is the single identity pass. */
     private val Adam7: Seq[(Int, Int, Int, Int)] = Seq(
@@ -116,10 +109,9 @@ object Multimodal {
       * grayscale at 1/2/4/8/16 bits, palette at 1/2/4/8, truecolor
       * RGB(A) and gray+alpha at 8/16 — non-interlaced OR Adam7-
       * interlaced — chunk walk, all IDAT chunks concatenated into ONE
-      * zlib stream (§2.3) and inflated with JDK
-      * `java.util.zip.Inflater`, then the five per-scanline filters
-      * (None/Sub/Up/Average/Paeth, §6) undone against the
-      * reconstructed prior scanline. Interlaced images decode as
+      * zlib stream (§2.3) and inflated by [[ByteCodecs.inflate]], then
+      * the five per-scanline filters (None/Sub/Up/Average/Paeth, §6)
+      * undone by [[ByteCodecs.unfilter]]. Interlaced images decode as
       * seven independently-filtered reduced sub-images (empty passes
       * contribute no bytes, §2.6) whose pixels scatter back to
       * (x0 + i·dx, y0 + j·dy); the non-interlaced path is the same
@@ -202,47 +194,19 @@ object Multimodal {
       val rawLen = passDims.map { case (pw, ph) =>
         if (pw == 0 || ph == 0) 0 else ph * (1 + strideOf(pw))
       }.sum
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(idat.toByteArray)
-      val raw = new Array[Byte](rawLen)
-      var off = 0
-      var stalled = false
-      while (off < rawLen && !inf.finished() && !stalled) {
-        val n = inf.inflate(raw, off, rawLen - off)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary()))
-          stalled = true
-        off += n
-      }
-      inf.end()
-      require(off == rawLen,
-        s"PNG pixel stream inflated to $off bytes, expected $rawLen")
+      val raw = ByteCodecs.inflate(idat.toByteArray, 0, idat.size,
+        nowrap = false, maxOut = rawLen)
+      require(raw.length == rawLen,
+        s"PNG pixel stream inflated to ${raw.length} bytes, expected $rawLen")
       val out = new Array[Float](w * h * 3)
       var rawOff = 0
       for (((x0, y0, dx, dy), (pw, ph)) <- passes.zip(passDims)
            if pw > 0 && ph > 0) {
         val stride = strideOf(pw)
-        val cur = new Array[Int](stride)
-        val pri = new Array[Int](stride) // zeros above each pass's scanline 0
+        ByteCodecs.unfilter(raw, rawOff, ph, stride, bpp)
         var j = 0
         while (j < ph) {
-          val f = raw(rawOff) & 0xFF
-          require(f <= 4, s"unknown PNG filter type $f")
-          val base = rawOff + 1
-          var i = 0
-          while (i < stride) {
-            val x = raw(base + i) & 0xFF
-            val left = if (i >= bpp) cur(i - bpp) else 0
-            val up = pri(i)
-            val ul = if (i >= bpp) pri(i - bpp) else 0
-            cur(i) = f match {
-              case 0 => x
-              case 1 => (x + left) & 0xFF
-              case 2 => (x + up) & 0xFF
-              case 3 => (x + (left + up) / 2) & 0xFF
-              case _ => (x + paeth(left, up, ul)) & 0xFF
-            }
-            i += 1
-          }
+          val cur = rawOff + 1
           // channel c of pixel px out of the unfiltered bytes: 16-bit
           // samples are big-endian pairs, sub-byte samples pack
           // MSB-first within the byte; values stay RAW (0..2^depth−1,
@@ -250,12 +214,13 @@ object Multimodal {
           // oracle replays them exactly
           def sample(px: Int, c: Int): Int =
             if (depth == 16)
-              (cur(px * bpp + c * 2) << 8) | cur(px * bpp + c * 2 + 1)
-            else if (depth == 8) cur(px * bpp + c)
+              ((raw(cur + px * bpp + c * 2) & 0xFF) << 8) |
+                (raw(cur + px * bpp + c * 2 + 1) & 0xFF)
+            else if (depth == 8) raw(cur + px * bpp + c) & 0xFF
             else {
               val bitOff = px * bitspp // sub-byte ⇒ single channel
-              (cur(bitOff >> 3) >> (8 - depth - (bitOff & 7))) &
-                ((1 << depth) - 1)
+              ((raw(cur + (bitOff >> 3)) & 0xFF) >>
+                (8 - depth - (bitOff & 7))) & ((1 << depth) - 1)
             }
           var px = 0
           while (px < pw) {
@@ -277,7 +242,6 @@ object Multimodal {
             }
             px += 1
           }
-          System.arraycopy(cur, 0, pri, 0, stride)
           rawOff += 1 + stride
           j += 1
         }
@@ -762,8 +726,8 @@ object Multimodal {
       b != null && b.length >= 4 && b(0) == '.' && b(1) == 's' &&
         b(2) == 'n' && b(3) == 'd'
 
-    /** Container-sniffed image decode: PNG signature → Inflater PNG
-      * path, SOI → [[JpegCodec]] (baseline or progressive), GIF8x →
+    /** Container-sniffed image decode: PNG signature → the PNG path,
+      * SOI → [[JpegCodec]] (baseline or progressive), GIF8x →
       * [[GifCodec]] (first frame; animations via
       * [[GifCodec.decodeFramesWithDims]]), else 24-bpp BMP. */
     private[graft] def decodeImageWithDims(b: Array[Byte])

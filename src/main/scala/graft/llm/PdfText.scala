@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.ByteCodecs
+
 /** PDF text extraction — after HTML, the largest text source in real
   * crawl-derived training pipelines ([[HtmlText]]'s sibling for
   * `application/pdf` responses).
@@ -13,9 +15,9 @@ import org.apache.spark.sql.functions._
   *     entries) and /Type/ObjStm object streams — what modern
   *     writers actually emit — plus hybrid /XRefStm files; trailer
   *     `/Root` → page-tree walk with inherited `/Resources`
-  *   - stream filter CHAINS (§7.4): `/FlateDecode` via the JDK
-  *     Inflater (the same path the PNG/TIFF codecs use),
-  *     `/LZWDecode` (with `/EarlyChange`), `/ASCIIHexDecode`,
+  *   - stream filter CHAINS (§7.4): `/FlateDecode` and `/LZWDecode`
+  *     (with `/EarlyChange`) through the [[graft.util.ByteCodecs]]
+  *     kernels the PNG/TIFF codecs share, `/ASCIIHexDecode`,
   *     `/ASCII85Decode`, `/RunLengthDecode` — each expansion-capped,
   *     each stage with its own /DecodeParms PNG row predictor
   *     (Predictor 10-15) undo, which xref streams routinely carry
@@ -392,9 +394,12 @@ object PdfText {
       else filters.zipWithIndex.foldLeft(s.raw) { case (data, (name, i)) =>
         val parms = parmsFor(i)
         val decoded = name match {
-          case "FlateDecode" | "Fl" => inflate(data)
+          case "FlateDecode" | "Fl" =>
+            capped(ByteCodecs.inflate(data, 0, data.length, nowrap = false,
+              maxOut = MaxInflate.toInt + 1), "Flate")
           case "LZWDecode" | "LZW" =>
-            lzwDecode(data, intParm(parms, "EarlyChange", 1L))
+            capped(ByteCodecs.lzwDecode(data, 0, data.length,
+              intParm(parms, "EarlyChange", 1L), MaxInflate.toInt + 1), "LZW")
           case "ASCIIHexDecode" | "AHx" => asciiHexDecode(data)
           case "ASCII85Decode" | "A85" => ascii85Decode(data)
           case "RunLengthDecode" | "RL" => runLengthDecode(data)
@@ -406,8 +411,9 @@ object PdfText {
       }
     }
 
-    /** PNG row filters (each row: filter byte + data) — the same
-      * None/Sub/Up/Average/Paeth math the PNG codec undoes. */
+    /** PNG row filters (each row: filter byte + data), undone by the
+      * PNG codec's own [[ByteCodecs.unfilter]]; this keeps only the
+      * /DecodeParms geometry checks and strips the filter bytes. */
     private def pngPredictorUndo(data: Array[Byte], columns: Int,
                                  colors: Int, bpc: Int): Array[Byte] = {
       require(columns > 0 && colors > 0 && bpc > 0 &&
@@ -418,37 +424,13 @@ object PdfText {
       require(rows.toLong * (rowBytes + 1) == data.length,
         s"PNG-predicted stream length ${data.length} not a multiple of " +
           s"row ${rowBytes + 1}")
+      val d = data.clone() // `data` may be the object's cached raw bytes
+      ByteCodecs.unfilter(d, 0, rows, rowBytes, bpp)
       val out = new Array[Byte](rows * rowBytes)
       var r = 0
       while (r < rows) {
-        val ft = data(r * (rowBytes + 1)) & 0xFF
-        val src = r * (rowBytes + 1) + 1
-        val dst = r * rowBytes
-        var i = 0
-        while (i < rowBytes) {
-          val raw = data(src + i) & 0xFF
-          val left = if (i >= bpp) out(dst + i - bpp) & 0xFF else 0
-          val up = if (r > 0) out(dst - rowBytes + i) & 0xFF else 0
-          val ul = if (r > 0 && i >= bpp) out(dst - rowBytes + i - bpp) & 0xFF
-                   else 0
-          val v = ft match {
-            case 0 => raw
-            case 1 => raw + left
-            case 2 => raw + up
-            case 3 => raw + ((left + up) >> 1)
-            case 4 =>
-              val p = left + up - ul
-              val pa = math.abs(p - left)
-              val pb = math.abs(p - up)
-              val pc = math.abs(p - ul)
-              raw + (if (pa <= pb && pa <= pc) left
-                     else if (pb <= pc) up else ul)
-            case other => throw new IllegalArgumentException(
-              s"PNG predictor filter $other")
-          }
-          out(dst + i) = (v & 0xFF).toByte
-          i += 1
-        }
+        System.arraycopy(d, r * (rowBytes + 1) + 1, out, r * rowBytes,
+          rowBytes)
         r += 1
       }
       out
@@ -960,97 +942,16 @@ object PdfText {
       require(first + found < data.length, "ObjStm offset out of range")
       new Lexer(data, (first + found).toInt).value(0)
     }
-
-    private def inflate(data: Array[Byte]): Array[Byte] = {
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 3))
-      val buf = new Array[Byte](65536)
-      var total = 0L
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        require(n > 0 || !inf.needsInput(), "truncated PDF Flate stream")
-        if (n == 0 && inf.needsDictionary())
-          throw new IllegalArgumentException("PDF Flate preset dictionary")
-        total += n
-        require(total <= MaxInflate,
-          s"PDF Flate expansion exceeds $MaxInflate bytes")
-        out.write(buf, 0, n)
-      }
-      inf.end()
-      out.toByteArray
-    }
   }
 
   // ------------------------------------------------------------- filters
 
-  /** PDF LZWDecode (§7.4.4): MSB-first codes, Clear=256, EOD=257,
-    * 9→12-bit widths. /EarlyChange 1 (the default) bumps the width
-    * when the next table slot is 2^w − 1 — the same convention as
-    * TIFF §13 ([[TiffCodec.lzwDecode]]); 0 bumps at 2^w. Output
-    * length is not declared, so this grows a buffer under the
-    * MaxInflate cap instead of TIFF's exact-`expect` contract. */
-  private[graft] def lzwDecode(data: Array[Byte],
-                               earlyChange: Int): Array[Byte] = {
-    require(earlyChange == 0 || earlyChange == 1,
-      s"PDF LZW /EarlyChange $earlyChange")
-    val out = new java.io.ByteArrayOutputStream(math.max(64, data.length * 3))
-    var bitPos = 0L
-    val bitEnd = data.length.toLong * 8
-    def read(width: Int): Int = {
-      require(bitPos + width <= bitEnd, "truncated PDF LZW stream (no EOD)")
-      var v = 0; var k = 0
-      while (k < width) {
-        val p = bitPos + k
-        v = (v << 1) | ((data((p >> 3).toInt) >> (7 - (p & 7).toInt)) & 1)
-        k += 1
-      }
-      bitPos += width
-      v
-    }
-    val prefix = new Array[Int](4096)
-    val append = new Array[Byte](4096)
-    val buf = new Array[Byte](4096)
-    var total = 0L
-    def emit(code: Int): Byte = { // writes the string; returns first byte
-      var c = code; var n = 0
-      while (c >= 258) { buf(n) = append(c); n += 1; c = prefix(c) }
-      require(c < 256, s"corrupt PDF LZW code chain at $code")
-      total += n + 1
-      require(total <= MaxInflate,
-        s"PDF LZW expansion exceeds $MaxInflate bytes")
-      out.write(c)
-      var i = n - 1
-      while (i >= 0) { out.write(buf(i)); i -= 1 }
-      c.toByte
-    }
-    var width = 9
-    var next = 258
-    var prev = -1
-    var done = false
-    while (!done) {
-      val code = read(width)
-      if (code == 257) done = true
-      else if (code == 256) { width = 9; next = 258; prev = -1 }
-      else {
-        require(code < next || (code == next && prev >= 0),
-          s"PDF LZW code $code ahead of table ($next)")
-        val first =
-          if (code < next) emit(code)
-          else { // KwKwK: prev string + its own first byte
-            var c = prev; while (c >= 258) c = prefix(c)
-            prefix(next) = prev; append(next) = c.toByte
-            emit(code)
-          }
-        if (prev >= 0 && next < 4096) {
-          prefix(next) = prev; append(next) = first
-          next += 1
-          if (next == (1 << width) - earlyChange && width < 12) width += 1
-        }
-        prev = code
-      }
-    }
-    out.toByteArray
+  /** A Flate/LZW stage's output, refused past the per-stream cap (the
+    * kernels stop at `MaxInflate + 1` bytes). */
+  private def capped(out: Array[Byte], filter: String): Array[Byte] = {
+    require(out.length <= MaxInflate,
+      s"PDF $filter expansion exceeds $MaxInflate bytes")
+    out
   }
 
   /** ASCIIHexDecode (§7.4.2): hex pairs, whitespace ignored, `>` EOD,
@@ -1640,16 +1541,6 @@ object PdfText {
     bo.toByteArray
   }
 
-  private def deflateBytes(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(raw); d.finish()
-    val bo = new java.io.ByteArrayOutputStream(raw.length)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) bo.write(buf, 0, d.deflate(buf))
-    d.end()
-    bo.toByteArray
-  }
-
   /** Minimal-but-real PDF writer for specs/oracle fixtures: one
     * content stream per page (`Tf`/`Td`/`Tj` + `'` line shows),
     * Helvetica under `encoding` (WinAnsiEncoding default;
@@ -1700,7 +1591,7 @@ object PdfText {
           s"/Contents $contNum 0 R >>\n")
       }
       val raw = content(lines, inv)
-      val payload = if (!flate) raw else deflateBytes(raw)
+      val payload = if (!flate) raw else ByteCodecs.deflate(raw)
       obj(contNum) {
         val filter = if (flate) " /Filter /FlateDecode" else ""
         w(s"<< /Length $lenNum 0 R$filter >>\nstream\n")
@@ -1775,7 +1666,7 @@ object PdfText {
     // encode right-to-left so the declared chain decodes left-to-right
     filters.foldRight(raw) { (f, d) =>
       f match {
-        case "FlateDecode" => deflateBytes(d)
+        case "FlateDecode" => ByteCodecs.deflate(d)
         case "LZWDecode" => TiffCodec.lzwEncode(d) // TIFF = EarlyChange 1
         case "ASCIIHexDecode" => asciiHexEncode(d)
         case "ASCII85Decode" => ascii85Encode(d)
@@ -1886,7 +1777,7 @@ object PdfText {
           s"/Resources << /Font << /F1 3 0 R >> >> " +
           s"/Contents $contNum 0 R >>\n")
       }
-      val payload = deflateBytes(content(lines))
+      val payload = ByteCodecs.deflate(content(lines))
       obj(contNum) {
         w(s"<< /Length ${payload.length} /Filter /FlateDecode >>\nstream\n")
         out.write(payload, 0, payload.length)
@@ -1934,7 +1825,7 @@ object PdfText {
       out.write(body, 0, body.length)
       w("\nendstream\n")
     }
-    val stamp = deflateBytes(content(stampLines))
+    val stamp = ByteCodecs.deflate(content(stampLines))
     obj(6) {
       w(s"<< /Type /XObject /Subtype /Form /BBox [ 0 0 612 792 ] " +
         s"/Resources << /Font << /F1 3 0 R >> >> " +
@@ -2028,7 +1919,7 @@ object PdfText {
     }
     obj(5) {
       val payload =
-        deflateBytes(toUnicodeCMap(chars).getBytes("ISO-8859-1"))
+        ByteCodecs.deflate(toUnicodeCMap(chars).getBytes("ISO-8859-1"))
       w(s"<< /Length ${payload.length} /Filter /FlateDecode >>\nstream\n")
       out.write(payload, 0, payload.length)
       w("\nendstream\n")
@@ -2041,7 +1932,7 @@ object PdfText {
           s"/Resources << /Font << /F1 3 0 R >> >> " +
           s"/Contents $contNum 0 R >>\n")
       }
-      val payload = deflateBytes(contentType0(lines))
+      val payload = ByteCodecs.deflate(contentType0(lines))
       obj(contNum) {
         w(s"<< /Length ${payload.length} /Filter /FlateDecode >>\nstream\n")
         out.write(payload, 0, payload.length)
@@ -2088,7 +1979,7 @@ object PdfText {
     val objOffsets = bodies.scanLeft(0)(_ + _.length).init
     val header = packed.zip(objOffsets)
       .map { case ((num, _), off) => s"$num $off" }.mkString(" ") + "\n"
-    val stmPayload = deflateBytes(
+    val stmPayload = ByteCodecs.deflate(
       (header + bodies.mkString).getBytes("ISO-8859-1"))
 
     val out = new java.io.ByteArrayOutputStream()
@@ -2103,7 +1994,7 @@ object PdfText {
     w("\nendstream\nendobj\n")
     pageLines.zipWithIndex.foreach { case (lines, i) =>
       val num = s0 + 1 + i
-      val payload = deflateBytes(content(lines))
+      val payload = ByteCodecs.deflate(content(lines))
       offsets(num) = out.size().toLong
       w(s"$num 0 obj\n<< /Length ${payload.length} " +
         s"/Filter /FlateDecode >>\nstream\n")
@@ -2126,7 +2017,7 @@ object PdfText {
         (0 until n).map(i => row(1, offsets(s0 + 1 + i), 0)) ++
         Seq(row(1, xsOff, 0))
     require(rows.size == xn + 1)
-    val xrefPayload = deflateBytes(rows.flatten.toArray)
+    val xrefPayload = ByteCodecs.deflate(rows.flatten.toArray)
     w(s"$xn 0 obj\n<< /Type /XRef /Size ${xn + 1} /W [ 1 3 2 ] " +
       s"/Root 1 0 R /Length ${xrefPayload.length} " +
       s"/Filter /FlateDecode >>\nstream\n")
@@ -2179,7 +2070,7 @@ object PdfText {
     val header = packed.zip(objOffsets)
       .map { case ((num, _), off) => s"$num $off" }.mkString(" ") + "\n"
     val stmRaw = (header + bodies.mkString).getBytes("ISO-8859-1")
-    val stmPayload = deflateBytes(stmRaw)
+    val stmPayload = ByteCodecs.deflate(stmRaw)
 
     // ---- assemble the file
     val out = new java.io.ByteArrayOutputStream()
@@ -2194,7 +2085,7 @@ object PdfText {
     w("\nendstream\nendobj\n")
     pageLines.zipWithIndex.foreach { case (lines, i) =>
       val num = s0 + 1 + i
-      val payload = deflateBytes(content(lines))
+      val payload = ByteCodecs.deflate(content(lines))
       offsets(num) = out.size().toLong
       w(s"$num 0 obj\n<< /Length ${payload.length} " +
         s"/Filter /FlateDecode >>\nstream\n")
@@ -2228,7 +2119,7 @@ object PdfText {
       }
       prev = r
     }
-    val xrefPayload = deflateBytes(predicted.toByteArray)
+    val xrefPayload = ByteCodecs.deflate(predicted.toByteArray)
     w(s"$xn 0 obj\n<< /Type /XRef /Size ${xn + 1} /W [ 1 3 2 ] " +
       s"/Root 1 0 R /Length ${xrefPayload.length} /Filter /FlateDecode " +
       s"/DecodeParms << /Predictor 12 /Columns 6 >> >>\nstream\n")

@@ -2,6 +2,9 @@ package graft.llm
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.util.ByteCodecs
+import graft.util.ByteCodecs.{LzwClear, LzwEoi}
+
 /** Dependency-free baseline-TIFF codec (TIFF 6.0).
   *
   * Decode covers the honest web/scan-crawl matrix: both byte orders
@@ -14,7 +17,9 @@ import scala.collection.mutable.ArrayBuffer
   * grayscale, raw samples), 2 (RGB) and 3 (palette, expanded through
   * the 16-bit ColorMap), at 1/8/16-bit sample depths. Planar
   * configuration 2, G3 2-D and JPEG-in-TIFF refuse loudly — the
-  * last is genuinely codec-bound.
+  * last is genuinely codec-bound. LZW and Deflate strips go through
+  * the shared [[graft.util.ByteCodecs]] kernels; PackBits stays here,
+  * since its byte 128 is a no-op where PDF RunLengthDecode ends.
   *
   * The encoder exists for fixtures (the GIF/JPEG pattern): it writes
   * the same matrix so specs can cross-validate bit-exactly against
@@ -178,6 +183,11 @@ object TiffCodec {
                 segRowBytes: Int, what: String): Array[Byte] = {
       require(off + len <= b.length, s"TIFF $what out of range")
       val expect = segRowBytes * segRows
+      def exact(d: Array[Byte], kind: String): Array[Byte] = {
+        require(d.length == expect,
+          s"TIFF $what $kind short (${d.length} < $expect)")
+        d
+      }
       comp match {
         case 1 =>
           require(len >= expect, s"TIFF $what short ($len < $expect)")
@@ -188,8 +198,10 @@ object TiffCodec {
           val srcOff = if (fillOrder == 1) off.toInt else 0
           CcittCodec.decode(src, srcOff, len.toInt, segW, segRows, comp,
             g3TwoD = comp == 3 && (t4Opts & 1L) != 0L)
-        case 5 => lzwDecode(b, off.toInt, len.toInt, expect)
-        case 8 | 32946 => inflate(b, off.toInt, len.toInt, expect)
+        case 5 => exact(ByteCodecs.lzwDecode(b, off.toInt, len.toInt,
+          earlyChange = 1, maxOut = expect), "LZW")
+        case 8 | 32946 => exact(ByteCodecs.inflate(b, off.toInt, len.toInt,
+          nowrap = false, maxOut = expect), "deflate")
         case 32773 => packBitsDecode(b, off.toInt, len.toInt, expect)
         case c => throw new IllegalArgumentException(
           s"TIFF compression $c unsupported (1/2/3/4/5/8/32773/32946)")
@@ -324,22 +336,6 @@ object TiffCodec {
     }
   }
 
-  private def inflate(b: Array[Byte], off: Int, len: Int,
-                      expect: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(b, off, len)
-    val out = new Array[Byte](expect)
-    var got = 0
-    while (got < expect && !inf.finished()) {
-      val n = inf.inflate(out, got, expect - got)
-      require(n > 0 || !inf.needsInput(), "truncated TIFF deflate strip")
-      got += n
-    }
-    inf.end()
-    require(got == expect, s"TIFF deflate strip short ($got < $expect)")
-    out
-  }
-
   private[graft] def packBitsDecode(b: Array[Byte], off: Int, len: Int,
                                     expect: Int): Array[Byte] = {
     val out = new Array[Byte](expect)
@@ -358,80 +354,8 @@ object TiffCodec {
     out
   }
 
-  // TIFF-variant LZW (TIFF 6.0 §13): MSB-first codes, Clear=256,
-  // EOI=257, 9→12-bit widths with the EARLY code-width change (the
-  // width bumps when the NEXT table slot is 2^w - 1, one code sooner
-  // than generic LZW).
-  private val ClearCode = 256
-  private val EoiCode = 257
-
-  private[graft] def lzwDecode(b: Array[Byte], off: Int, len: Int,
-                               expect: Int): Array[Byte] = {
-    val out = new Array[Byte](expect)
-    var o = 0
-    var bitPos = 0L
-    val bitEnd = len.toLong * 8
-    def read(width: Int): Int = {
-      require(bitPos + width <= bitEnd, "truncated TIFF LZW strip")
-      var v = 0; var k = 0
-      while (k < width) {
-        val p = bitPos + k
-        v = (v << 1) | ((b(off + (p >> 3).toInt) >> (7 - (p & 7).toInt)) & 1)
-        k += 1
-      }
-      bitPos += width
-      v
-    }
-    // dictionary as (prefix code, appended byte) pairs; entries 0-255
-    // are roots, 256/257 reserved
-    val prefix = new Array[Int](4096)
-    val append = new Array[Byte](4096)
-    val buf = new Array[Byte](4096)
-    def emit(code: Int): Byte = { // writes the string; returns first byte
-      var c = code; var n = 0
-      while (c >= 258) { buf(n) = append(c); n += 1; c = prefix(c) }
-      require(c < 256, s"corrupt TIFF LZW code chain at $code")
-      val first = c.toByte
-      require(o + n + 1 <= expect, "TIFF LZW output overrun")
-      out(o) = first; o += 1
-      var i = n - 1
-      while (i >= 0) { out(o) = buf(i); o += 1; i -= 1 }
-      first
-    }
-    var width = 9
-    var next = 258
-    var prev = -1
-    var done = false
-    while (!done && o < expect) {
-      val code = read(width)
-      if (code == EoiCode) done = true
-      else if (code == ClearCode) { width = 9; next = 258; prev = -1 }
-      else {
-        require(code < next || (code == next && prev >= 0),
-          s"TIFF LZW code $code ahead of table ($next)")
-        val first =
-          if (code < next) emit(code)
-          else { // KwKwK: prev string + its own first byte
-            var c = prev; while (c >= 258) c = prefix(c)
-            require(o + 1 <= expect, "TIFF LZW output overrun")
-            // emit prev then its first byte by building the entry first
-            prefix(next) = prev; append(next) = c.toByte
-            emit(code)
-          }
-        if (prev >= 0 && next < 4096) {
-          prefix(next) = prev; append(next) = first
-          next += 1
-          if (next == (1 << width) - 1 && width < 12) width += 1
-        } else if (prev < 0) {
-          // first code after clear: nothing added yet
-        }
-        prev = code
-      }
-    }
-    require(o == expect, s"TIFF LZW strip short ($o < $expect)")
-    out
-  }
-
+  /** TIFF-variant LZW (TIFF 6.0 §13) encoder; decoding is the shared
+    * [[ByteCodecs.lzwDecode]] with `earlyChange` 1. */
   private[graft] def lzwEncode(data: Array[Byte]): Array[Byte] = {
     val bits = new ArrayBuffer[Byte]()
     var acc = 0L; var nAcc = 0
@@ -448,7 +372,7 @@ object TiffCodec {
     var next = 258
     val dict = new java.util.HashMap[Long, Integer]()
     def key(p: Int, c: Int): Long = (p.toLong << 8) | c
-    write(ClearCode, width)
+    write(LzwClear, width)
     var i = 0
     var prev = -1
     while (i < data.length) {
@@ -468,7 +392,7 @@ object TiffCodec {
           // the same stream position
           if (next == (1 << width) && width < 12) width += 1
           if (next == 4094) { // table nearly full: clear and restart
-            write(ClearCode, width)
+            write(LzwClear, width)
             dict.clear(); width = 9; next = 258
           }
           prev = c
@@ -476,8 +400,15 @@ object TiffCodec {
       }
       i += 1
     }
-    if (prev >= 0) write(prev, width)
-    write(EoiCode, width)
+    if (prev >= 0) {
+      write(prev, width)
+      // the decoder adds a table entry for this last code too, so it
+      // may widen before EOI; EOI must follow at that width (libtiff's
+      // LZWPostEncode does the same)
+      next += 1
+      if (next == (1 << width) && width < 12) width += 1
+    }
+    write(LzwEoi, width)
     flush()
     bits.toArray
   }
@@ -612,19 +543,6 @@ object TiffCodec {
     d
   }
 
-  private def deflate(d: Array[Byte]): Array[Byte] = {
-    val def_ = new java.util.zip.Deflater()
-    def_.setInput(d); def_.finish()
-    val out = new ArrayBuffer[Byte]()
-    val buf = new Array[Byte](8192)
-    while (!def_.finished()) {
-      val n = def_.deflate(buf)
-      out ++= buf.take(n)
-    }
-    def_.end()
-    out.toArray
-  }
-
   private def build(w: Int, h: Int, spp: Int, bits: Int, photo: Int,
                     raw: Array[Byte], opts: Options,
                     cm: Array[Int]): Array[Byte] = {
@@ -649,7 +567,7 @@ object TiffCodec {
           val enc = CcittCodec.encode(d, segW, segRows, opts.compression)
           if (opts.fillOrder == 1) enc else reverseBits(enc, 0, enc.length)
         case 5 => lzwEncode(d)
-        case 8 => deflate(d)
+        case 8 => ByteCodecs.deflate(d)
         case 32773 => packBitsEncode(d)
         case c => throw new IllegalArgumentException(s"encoder compression $c")
       }

@@ -40,21 +40,10 @@ object Sitemap {
     val bytes =
       if (content.length >= 2 && (content(0) & 0xFF) == 0x1F &&
           (content(1) & 0xFF) == 0x8B) {
-        val in = new java.util.zip.GZIPInputStream(
-          new java.io.ByteArrayInputStream(content), 65536)
-        val out = new java.io.ByteArrayOutputStream(
-          math.min(content.length * 4L, MaxBytes).toInt)
-        val buf = new Array[Byte](65536)
-        var total = 0L
-        var n = in.read(buf)
-        while (n >= 0) {
-          total += n
-          require(total <= MaxBytes,
-            s"gzipped sitemap inflates past the 50 MB protocol limit")
-          out.write(buf, 0, n)
-          n = in.read(buf)
-        }
-        out.toByteArray
+        val out = graft.util.ByteCodecs.gunzip(content, MaxBytes.toInt + 1)
+        require(out.length <= MaxBytes,
+          s"gzipped sitemap inflates past the 50 MB protocol limit")
+        out
       } else content
     require(bytes.length <= MaxBytes,
       s"sitemap document ${bytes.length} bytes exceeds the 50 MB limit")
@@ -173,13 +162,9 @@ object Sitemap {
   }
 
   /** Fixture helper: the `.xml.gz` wire form of a sitemap document. */
-  def gzipped(xml: String): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(xml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    gz.close()
-    bos.toByteArray
-  }
+  def gzipped(xml: String): Array[Byte] =
+    graft.util.ByteCodecs.gzip(
+      xml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   private def escXml(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.ByteCodecs
+
 /** WARC (ISO 28500) reader — the container web crawls (Common Crawl)
   * actually ship. A WARC file is a sequence of records, each
   * `WARC/1.x\r\n` + name:value headers + `\r\n` + a Content-Length-
@@ -380,21 +382,23 @@ object Warc {
   private def decodeCoding(data: Array[Byte], coding: String,
                            kind: String): Array[Byte] = coding match {
     case "gzip" | "x-gzip" =>
-      try inflateCapped(new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(data), 65536), "gzip")
-      catch {
-        case e: java.io.IOException => throw new IllegalArgumentException(
-          s"malformed gzip $kind-Encoding body: ${e.getMessage}")
-      }
+      val out =
+        try ByteCodecs.gunzip(data, MaxHttpBody.toInt + 1)
+        catch {
+          case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(
+              s"malformed gzip $kind-Encoding body: ${e.getMessage}")
+        }
+      httpCapped(out, "gzip")
     case "deflate" =>
       // RFC 9110 says zlib-wrapped; a long tail of servers send a raw
       // deflate stream under the same token — try the spec form, fall
       // back to raw (both verified by the inflater's own checksum /
       // framing, so a wrong guess fails loudly rather than mis-decoding)
-      try inflateBytes(data, raw = false)
+      try inflateBytes(data, nowrap = false)
       catch {
         case _: IllegalArgumentException =>
-          try inflateBytes(data, raw = true)
+          try inflateBytes(data, nowrap = true)
           catch {
             case e: IllegalArgumentException =>
               throw new IllegalArgumentException(
@@ -406,57 +410,18 @@ object Warc {
         "refusing, not mis-decoding)")
   }
 
-  private def inflateCapped(in: java.io.InputStream,
-                            what: String): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(8192)
-    val buf = new Array[Byte](65536)
-    var total = 0L
-    var n = in.read(buf)
-    while (n >= 0) {
-      total += n
-      require(total <= MaxHttpBody,
-        s"HTTP $what body inflates past $MaxHttpBody bytes " +
-          "(decompression bomb?)")
-      out.write(buf, 0, n)
-      n = in.read(buf)
-    }
-    out.toByteArray
+  /** A decoded HTTP body, refused past [[MaxHttpBody]] (the kernels
+    * stop at `MaxHttpBody + 1` bytes). */
+  private def httpCapped(out: Array[Byte], what: String): Array[Byte] = {
+    require(out.length <= MaxHttpBody,
+      s"HTTP $what body inflates past $MaxHttpBody bytes " +
+        "(decompression bomb?)")
+    out
   }
 
-  private def inflateBytes(data: Array[Byte], raw: Boolean): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(raw)
-    try {
-      inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(8192)
-      val buf = new Array[Byte](65536)
-      var total = 0L
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch {
-            case e: java.util.zip.DataFormatException =>
-              throw new IllegalArgumentException(
-                s"deflate stream invalid: ${e.getMessage}")
-          }
-        // a zlib header with FDICT set makes inflate() return 0 with
-        // needsDictionary() — without this check the loop would spin
-        // forever (needsInput() stays false while input remains)
-        if (n == 0 && inf.needsDictionary())
-          throw new IllegalArgumentException(
-            "deflate stream requires a preset dictionary (FDICT)")
-        if (n == 0 && inf.needsInput())
-          throw new IllegalArgumentException("deflate stream truncated")
-        if (n == 0 && !inf.finished())
-          throw new IllegalArgumentException("deflate stream stalled")
-        total += n
-        require(total <= MaxHttpBody,
-          s"HTTP deflate body inflates past $MaxHttpBody bytes " +
-            "(decompression bomb?)")
-        out.write(buf, 0, n)
-      }
-      out.toByteArray
-    } finally inf.end()
-  }
+  private def inflateBytes(data: Array[Byte], nowrap: Boolean): Array[Byte] =
+    httpCapped(ByteCodecs.inflate(data, 0, data.length, nowrap,
+      MaxHttpBody.toInt + 1), "deflate")
 
   /** RFC 9112 §7.1 chunked decoding: hex-size line (extensions after
     * `;` dropped), chunk data, CRLF, …, a zero chunk, then optional
@@ -689,7 +654,7 @@ object Warc {
             pg.contentEncoding.split(',').map(_.trim).filter(_.nonEmpty)
               .foreach { c =>
                 body = c.toLowerCase(java.util.Locale.ROOT) match {
-                  case "gzip" | "x-gzip" => gzipBytes(body)
+                  case "gzip" | "x-gzip" => ByteCodecs.gzip(body)
                   case "deflate" => deflateZlib(body)
                   case "identity" => body
                   // declared-but-unencodable: the HEADER is the test
@@ -720,30 +685,12 @@ object Warc {
       }
     }
     if (!gzipPerRecord) recs.flatten.toArray
-    else recs.toArray.flatMap { r =>
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(r); gz.close()
-      bos.toByteArray
-    }
+    else recs.toArray.flatMap(r => ByteCodecs.gzip(r))
   }
 
-  private[graft] def gzipBytes(raw: Array[Byte]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(raw); gz.close()
-    bos.toByteArray
-  }
-
-  private[graft] def deflateZlib(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater() // zlib-wrapped, the RFC form
-    d.setInput(raw); d.finish()
-    val bos = new java.io.ByteArrayOutputStream(raw.length / 2 + 16)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
-    d.end()
-    bos.toByteArray
-  }
+  /** zlib-wrapped, the RFC 9110 form of the `deflate` coding. */
+  private[graft] def deflateZlib(raw: Array[Byte]): Array[Byte] =
+    ByteCodecs.deflate(raw)
 
   /** Chunked-wire form: varying chunk sizes (1 B up to ~300 B so
     * boundary handling is exercised), one chunk carrying an
