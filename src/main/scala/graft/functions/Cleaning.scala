@@ -48,15 +48,23 @@ object Cleaning {
     * only element-wise "UDF", re-expressed as a codegen-friendly native
     * expression. */
   def percentParse(c: Column): Column =
-    when(c.rlike("%$"),
-         (safeDouble(regexp_replace(c, "%$", "")) / 100).cast("string"))
-      .otherwise(c)
+    percentFrom(isPercent(c), stripPercent(c), c)
+
+  /** F9's tests on a cell: does it end in '%', and the cell without it. */
+  def isPercent(c: Column): Column = c.rlike("%$")
+  def stripPercent(c: Column): Column = regexp_replace(c, "%$", "")
+
+  /** [[percentParse]] from its parts: `isPct`/`stripped` are
+    * [[isPercent]]/[[stripPercent]] of `raw`. A caller that computed the
+    * parts once, as columns of an earlier projection, passes those
+    * columns, so the expression does not repeat its input. */
+  def percentFrom(isPct: Column, stripped: Column, raw: Column): Column =
+    when(isPct, (safeDouble(stripped) / 100).cast("string")).otherwise(raw)
 
   /** Numeric variant of F9 for all-numeric columns: percent → fraction,
     * plain numerics parsed, anything else null. */
   def percentToDouble(c: Column): Column =
-    when(c.rlike("%$"),
-         safeDouble(regexp_replace(c, "%$", "")) / 100)
+    when(isPercent(c), safeDouble(stripPercent(c)) / 100)
       .otherwise(safeDouble(c))
 
   /** F8: scrub "--" and "+" symbols (team_rankings_scraper.py:127-131). */

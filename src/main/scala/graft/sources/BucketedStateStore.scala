@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -13,9 +13,9 @@ import graft.operators.Dedup
   * lives Hive-partitioned by `bucket = pmod(hash(keys), nBuckets)`, so
   * one merge:
   *
-  *   1. buckets the batch and collects its touched bucket ids (≤
-  *      nBuckets driver ints — the PartitionedParquetStore months
-  *      pattern);
+  *   1. buckets and pins the batch, reading its touched bucket ids (≤
+  *      nBuckets driver ints) from the pin's own job — [[PinnedBatch]],
+  *      the helper PartitionedParquetStore's months use too;
   *   2. reads ONLY those bucket directories (planning-time partition
   *      pruning — untouched state is never even scanned);
   *   3. resolves newest-wins per key over (touched buckets ∪ batch) —
@@ -68,15 +68,14 @@ class BucketedStateStore(spark: SparkSession, root: String,
     * versions). An existing-but-EMPTY directory also reads as no
     * table; any other analysis failure on a non-empty directory stays
     * LOUD — silently returning None would let merge()'s overwrite
-    * discard surviving state (review finding). */
+    * discard surviving state (review finding). The empty directory is
+    * probed before the read, not after it fails: once a merge's pin has
+    * observed a metric, Spark's observation listener logs every failed
+    * read as an error. */
   def readOpt(): Option[DataFrame] = {
     recoverInterruptedRescale()
-    if (!fs.exists(rootPath)) None
-    else try Some(spark.read.parquet(root))
-    catch {
-      case e: AnalysisException =>
-        if (fs.listStatus(rootPath).isEmpty) None else throw e
-    }
+    if (!fs.exists(rootPath) || fs.listStatus(rootPath).isEmpty) None
+    else Some(spark.read.parquet(root))
   }
 
   /** Full state, `bucket` partition column included. */
@@ -87,20 +86,14 @@ class BucketedStateStore(spark: SparkSession, root: String,
     * (e.g. Seq($"ts".desc, $"id".desc)); only touched buckets are
     * read and rewritten. */
   def merge(batchRaw: DataFrame, order: Seq[Column]): Unit = {
-    // localCheckpoint: the batch is consumed three times (touched-set
-    // collect, merge union, write) — and the touched-bucket collect
-    // must see the SAME rows the merge does. The touched set rides the
-    // checkpoint materialization itself as an observe() metric (the
-    // Components convergence-sum discipline): ≤ nBuckets driver ints,
-    // ONE action per batch instead of checkpoint + a separate
-    // distinct-collect job.
-    val obs = org.apache.spark.sql.Observation()
-    val batch = withBucket(batchRaw)
-      .observe(obs, collect_set(col("bucket")).as("__tb"))
-      .localCheckpoint()
-    val touched = obs.get.get("__tb")
-      .map(_.asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted)
-      .getOrElse(Seq.empty[Int])
+    // The batch is consumed three times (touched-set lookup, merge
+    // union, write) and the touched-bucket set must describe the SAME
+    // rows the merge sees: PinnedBatch (shared with
+    // PartitionedParquetStore's upserts) pins it with localCheckpoint and
+    // reads the touched set from that one job as an observe() metric —
+    // ≤ nBuckets driver ints, no separate distinct-collect job.
+    val (batch, touchedRows) = PinnedBatch.pin(withBucket(batchRaw), Seq("bucket"))
+    val touched = touchedRows.map(_.getInt(0)).sorted
     val merged = readOpt() match {
       case Some(existing) =>
         // localCheckpoint MATERIALIZES the pruned existing side before

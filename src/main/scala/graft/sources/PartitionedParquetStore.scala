@@ -23,10 +23,24 @@ import graft.operators.Dedup
   *  - missing table/partition ⇒ empty frame (s3_client.py:141-145's
   *    None ⇒ start-fresh semantics).
   *
+  * Every upsert evaluates its batch ONCE: the batch (partition columns
+  * added, key-deduped for [[upsertNewestBatch]]) is pinned with
+  * `localCheckpoint`, and its touched months are read from that same job
+  * ([[PinnedBatch]]). A separate distinct-collect for the months would
+  * re-run the batch's whole lineage — for the rankings collection the
+  * melt, the wide pivot, the final pass and the key dedup — and so would
+  * every consumer of an unpinned batch: the write, and for the
+  * newest-batch merge both its broadcast key set and its union side.
+  * Trade-off: the pinned batch has no lineage, so an executor lost
+  * mid-upsert fails the upsert (the collection's scheduler retries it)
+  * instead of recomputing the lost blocks; the pin policy planned in
+  * ROADMAP.md is where that choice will become switchable.
+  *
   * At 100 TB the per-upsert cost stays bounded by the touched months,
-  * not the table; the dedup shuffle is also partition-bounded. A
-  * log-structured MERGE (Delta-style) would avoid the rewrite entirely,
-  * but dynamic overwrite reproduces reference semantics exactly.
+  * not the table; the dedup shuffle is also partition-bounded, and the
+  * pin holds one collection cycle. A log-structured MERGE (Delta-style)
+  * would avoid the rewrite entirely, but dynamic overwrite reproduces
+  * reference semantics exactly.
   */
 class PartitionedParquetStore(spark: SparkSession, root: String) {
 
@@ -35,16 +49,26 @@ class PartitionedParquetStore(spark: SparkSession, root: String) {
       .withColumn("month", month(col(tsCol)))
 
   /** Read the table (empty frame with no schema match if absent).
-    * Returns None when the table doesn't exist yet. */
-  def readOpt(): Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(root)
-      Some(df)
-    } catch {
+    * Returns None when the table doesn't exist yet. A missing or empty
+    * root is found by a file-system probe rather than a failed read: the
+    * session reports a failed read to its query listeners, and once an
+    * upsert's pin has observed a metric, Spark's observation listener
+    * logs each such failure as an error. */
+  def readOpt(): Option[DataFrame] = {
+    val path = new org.apache.hadoop.fs.Path(root)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val hasData = fs.exists(path) && fs.listStatus(path).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }
+    if (!hasData) None
+    else try Some(spark.read.parquet(root))
+    catch {
       case e: AnalysisException if e.getMessage.contains("PATH_NOT_FOUND") ||
                                    e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
                                    e.getMessage.contains("Path does not exist") => None
     }
+  }
 
   /** S5/P3/P4: projected, partition-pruned read. `months` filters on the
     * partition columns (pruned at planning — no data touched outside);
@@ -74,27 +98,29 @@ class PartitionedParquetStore(spark: SparkSession, root: String) {
       .partitionBy("year", "month")
       .parquet(root)
 
-  /** Existing rows in exactly the partitions `fresh` touches — a pruned
-    * scan driven by the fresh batch's distinct (year,month) set. The
-    * collect is tiny (months, not rows) and buys planning-time pruning. */
-  private def existingTouched(fresh: DataFrame): Option[DataFrame] =
-    readOpt().map { existing =>
-      val touched = fresh.select(col("year"), col("month")).distinct()
-        .collect().map(r => (r.getInt(0), r.getInt(1)))
-      existing.filter(
-        touched.map { case (y, m) => col("year") === y && col("month") === m }
-          .reduceOption(_ || _).getOrElse(lit(false)))
-    }
+  /** Pin the batch (partition columns already added) and return it
+    * with the stored rows of exactly the months it touches — a pruned
+    * scan, planned with the months the pin observed — or None when the
+    * table does not exist yet. The months cost no extra job, and no
+    * consumer below re-runs the batch's lineage. Null-safe equality
+    * keeps a null-timestamp month (`__HIVE_DEFAULT_PARTITION__`) in the
+    * merge instead of letting the overwrite drop its stored rows. */
+  private def pinWithTouched(fresh: DataFrame): (DataFrame, Option[DataFrame]) = {
+    val (batch, touched) = PinnedBatch.pin(fresh, Seq("year", "month"))
+    val stored = readOpt().map(_.filter(
+      touched.map(r => col("year") <=> r.get(0) && col("month") <=> r.get(1))
+        .reduceOption(_ || _).getOrElse(lit(false))))
+    (batch, stored)
+  }
 
   /** K2+A1: history-preserving upsert — full-row distinct on the merged
     * partitions. Idempotent: re-running the same batch is a no-op. */
   def upsertDistinct(freshRaw: DataFrame, tsCol: String): Unit = {
-    val fresh = withPartitionCols(freshRaw, tsCol)
-    val merged = existingTouched(fresh) match {
+    val (fresh, stored) = pinWithTouched(withPartitionCols(freshRaw, tsCol))
+    writeDynamic(stored match {
       case Some(existing) => Dedup.distinctUnion(existing, fresh)
       case None           => fresh.distinct()
-    }
-    writeDynamic(merged)
+    })
   }
 
   /** K2+A2: keyed keep-latest upsert — newest `tsCol` wins per `keys`
@@ -102,11 +128,8 @@ class PartitionedParquetStore(spark: SparkSession, root: String) {
     * team_rankings_data_collector.py:42-45). */
   def upsertKeepLatest(freshRaw: DataFrame, keys: Seq[String], tsCol: String,
                        tiebreak: Seq[Column] = Nil): Unit = {
-    val fresh = withPartitionCols(freshRaw, tsCol)
-    val unioned = existingTouched(fresh) match {
-      case Some(existing) => existing.unionByName(fresh, allowMissingColumns = true)
-      case None           => fresh
-    }
+    val (fresh, stored) = pinWithTouched(withPartitionCols(freshRaw, tsCol))
+    val unioned = stored.fold(fresh)(_.unionByName(fresh, allowMissingColumns = true))
     writeDynamic(
       Dedup.keepLatest(unioned, keys, col(tsCol).desc +: tiebreak))
   }
@@ -115,20 +138,16 @@ class PartitionedParquetStore(spark: SparkSession, root: String) {
     * carries the NEWEST timestamp for every key it touches (true for
     * every scheduled collection run — `tsCol` is stamped at collection
     * time), so keep-latest degenerates to "batch wins its keys". The
-    * batch is key-deduped with a window over the batch alone (tiny),
-    * then merged with a broadcast anti-join: the existing table's plan
-    * is scan → anti → union — ZERO shuffle of stored data, vs
-    * [[upsertKeepLatest]]'s window over the whole touched partition.
+    * batch is key-deduped with a window over the batch alone (tiny) and
+    * pinned, then merged with a broadcast anti-join: the existing
+    * table's plan is scan → anti → union — ZERO shuffle of stored data,
+    * vs [[upsertKeepLatest]]'s window over the whole touched partition.
     * Result is identical to upsertKeepLatest whenever the
     * newest-batch precondition holds. */
   def upsertNewestBatch(freshRaw: DataFrame, keys: Seq[String], tsCol: String,
                         tiebreak: Seq[Column] = Nil): Unit = {
-    val fresh = Dedup.keepLatest(
-      withPartitionCols(freshRaw, tsCol), keys, col(tsCol).desc +: tiebreak)
-    val merged = existingTouched(fresh) match {
-      case Some(existing) => Dedup.mergeSmallUpdates(existing, fresh, keys)
-      case None           => fresh
-    }
-    writeDynamic(merged)
+    val (fresh, stored) = pinWithTouched(Dedup.keepLatest(
+      withPartitionCols(freshRaw, tsCol), keys, col(tsCol).desc +: tiebreak))
+    writeDynamic(stored.fold(fresh)(Dedup.mergeSmallUpdates(_, fresh, keys)))
   }
 }

@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.functions.Cleaning
 
@@ -116,9 +117,29 @@ object TeamRankingsNormalizer {
   }
 
   /** The final wide-frame pass (F8 scrub, F9 percent, P6 empty→null)
-    * over every string column. */
-  def finalPass(wide: DataFrame): DataFrame =
-    Cleaning.mapStringCols(wide, c =>
-      Cleaning.emptyToNull(
-        Cleaning.percentParse(Cleaning.scrubSymbols(c))))
+    * over every string column; other columns pass through. Same result
+    * as `emptyToNull(percentParse(scrubSymbols(c)))` per column, but
+    * built in four projections — scrub; percent test and stripped cell;
+    * percent parse; empty→null — so each step runs once per column.
+    * Composed as one expression, every helper that references its
+    * input more than once would copy the chain below it: 20
+    * regexp_replace and 4 RLIKE calls per column (8 copies of the
+    * scrub). Each stage here references a non-cheap column of the stage
+    * below at least twice, which CollapseProject refuses to inline, so
+    * one column's optimized plan holds 3 regexp_replace and 2 RLIKE. */
+  def finalPass(wide: DataFrame): DataFrame = {
+    val fields = wide.schema.fields.toIndexedSeq
+    def stage(df: DataFrame)(f: Int => Seq[Column]): DataFrame =
+      df.select(fields.indices.flatMap(i =>
+        if (fields(i).dataType == StringType) f(i) else Seq(col(fields(i).name))): _*)
+    def tmp(step: String, i: Int) = col(s"__fp_${step}_$i")
+    val scrubbed = stage(wide)(i =>
+      Seq(Cleaning.scrubSymbols(col(fields(i).name)).as(s"__fp_s_$i")))
+    val split = stage(scrubbed)(i => Seq(tmp("s", i),
+      Cleaning.isPercent(tmp("s", i)).as(s"__fp_pct_$i"),
+      Cleaning.stripPercent(tmp("s", i)).as(s"__fp_num_$i")))
+    val parsed = stage(split)(i => Seq(
+      Cleaning.percentFrom(tmp("pct", i), tmp("num", i), tmp("s", i)).as(s"__fp_p_$i")))
+    stage(parsed)(i => Seq(Cleaning.emptyToNull(tmp("p", i)).as(fields(i).name)))
+  }
 }

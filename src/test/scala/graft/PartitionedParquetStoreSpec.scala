@@ -1,7 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.PartitionedParquetStore
@@ -67,6 +71,105 @@ class PartitionedParquetStoreSpec extends SparkSpec {
     // idempotent re-run
     fast.upsertNewestBatch(batch2, Seq("id"), "timestamp")
     assert(fast.read().count() === 4)
+  }
+
+  private val flavors: Seq[(String, (PartitionedParquetStore, DataFrame) => Unit)] = Seq(
+    "upsertDistinct" -> ((s, b) => s.upsertDistinct(b, "timestamp")),
+    "upsertKeepLatest" -> ((s, b) => s.upsertKeepLatest(b, Seq("id"), "timestamp")),
+    "upsertNewestBatch" -> ((s, b) => s.upsertNewestBatch(b, Seq("id"), "timestamp")))
+
+  /** Every file under `root` by relative path, with its bytes. */
+  private def files(root: String): Map[String, Seq[Byte]] = {
+    val base = Paths.get(root)
+    Files.walk(base).iterator().asScala.filter(Files.isRegularFile(_))
+      .map((p: Path) => base.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+  }
+
+  private def monthDirs(root: String): Set[String] =
+    files(root).keySet.filter(_.endsWith(".parquet")).map(f => f.substring(0, f.lastIndexOf('/')))
+
+  private def rows(store: PartitionedParquetStore): Seq[String] =
+    store.read().select("id", "v", "timestamp").collect().map(_.toString).toSeq.sorted
+
+  test("each upsert flavor evaluates its batch exactly once") {
+    val evaluated = spark.sparkContext.longAccumulator("batch-row-evaluations")
+    val tap = udf { (v: String) => evaluated.add(1); v }
+    val batch2 = Seq(
+      (1L, "a-new", ts("2024-01-20 10:00:00")),
+      (4L, "d", ts("2024-02-10 10:00:00")),
+      (5L, "e", ts("2024-03-02 10:00:00"))
+    ).toDF("id", "v", "timestamp")
+    val evaluations = flavors.map { case (name, upsert) =>
+      val store = new PartitionedParquetStore(spark, tmpDir(s"store-once-$name"))
+      upsert(store, batch1)
+      evaluated.reset()
+      upsert(store, batch2.withColumn("v", tap(col("v"))))
+      assert(store.read().count() === (if (name == "upsertDistinct") 6 else 5), name)
+      name -> evaluated.value.longValue
+    }
+    // row evaluations of the 3-row batch per flavor
+    assert(evaluations === flavors.map(_._1 -> 3L))
+  }
+
+  test("a null-timestamp row keeps its stored partition across upserts") {
+    val root = tmpDir("store-null-ts")
+    val store = new PartitionedParquetStore(spark, root)
+    val undated = Seq((8L, "h", null: Timestamp)).toDF("id", "v", "timestamp")
+    store.upsertDistinct(batch1.unionByName(undated), "timestamp")
+    store.upsertDistinct(
+      Seq((9L, "i", null: Timestamp)).toDF("id", "v", "timestamp"), "timestamp")
+    assert(store.read().filter(col("year").isNull).select("v").as[String]
+      .collect().toSeq.sorted === Seq("h", "i"))
+    assert(store.read().count() === 5)
+  }
+
+  test("touched months: two-month batch, empty batch, first write, rerun") {
+    val stored = Seq(
+      (1L, "a", ts("2024-01-05 10:00:00")),
+      (3L, "c", ts("2024-02-01 10:00:00")),
+      (6L, "f", ts("2024-03-01 10:00:00"))
+    ).toDF("id", "v", "timestamp")
+    // newer than every stored row it shares a key with; spans Feb + Mar
+    val twoMonths = Seq(
+      (3L, "c-new", ts("2024-02-20 10:00:00")),
+      (7L, "g", ts("2024-03-09 10:00:00")),
+      (7L, "g-old", ts("2024-03-08 10:00:00"))
+    ).toDF("id", "v", "timestamp")
+    val empty = twoMonths.filter(lit(false))
+    for ((name, upsert) <- flavors) {
+      // first write into a missing table: the batch's own months only
+      val root = tmpDir(s"store-touched-$name") + "/t"
+      val store = new PartitionedParquetStore(spark, root)
+      upsert(store, stored)
+      assert(monthDirs(root) === Set(1, 2, 3).map(m => s"year=2024/month=$m"))
+      assert(store.read().count() === 3)
+
+      // two-month batch: Feb and Mar are read and rewritten, Jan is not
+      val before = files(root)
+      upsert(store, twoMonths)
+      val after = files(root)
+      val jan = (f: String) => f.startsWith("year=2024/month=1/")
+      assert(after.filter(kv => jan(kv._1)) === before.filter(kv => jan(kv._1)), name)
+      for (m <- Seq(2, 3)) assert(
+        after.keySet.filter(_.startsWith(s"year=2024/month=$m/")) !=
+          before.keySet.filter(_.startsWith(s"year=2024/month=$m/")), s"$name month $m")
+      val expected =
+        if (name == "upsertDistinct") Seq("a", "c", "c-new", "f", "g", "g-old")
+        else Seq("a", "c-new", "f", "g")
+      assert(store.read().select("v").as[String].collect().toSeq.sorted === expected, name)
+      for (m <- Seq(1, 2, 3)) assert(
+        after.keySet.count(f => f.startsWith(s"year=2024/month=$m/") && f.endsWith(".parquet")) === 1)
+
+      // empty batch: no month touched, the store stays byte-for-byte
+      upsert(store, empty)
+      assert(files(root) === after, s"$name rewrote the store for an empty batch")
+
+      // rerun of the same batch: same rows, same month directories
+      val rowsBefore = rows(store)
+      upsert(store, twoMonths)
+      assert(rows(store) === rowsBefore, s"$name rerun changed the rows")
+      assert(monthDirs(root) === Set(1, 2, 3).map(m => s"year=2024/month=$m"))
+    }
   }
 
   test("dynamic overwrite leaves untouched partitions alone") {
