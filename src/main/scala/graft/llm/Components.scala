@@ -45,6 +45,30 @@ object Components {
                           maxIter: Int = 16): DataFrame =
     connectedComponentsWithRounds(edges, aCol, bCol, maxIter)._1
 
+  /** The batch ids an incremental near-dup dedup against accepted
+    * history drops, as one long column `node`: every non-representative
+    * member of an in-batch component (representative = min id, the q60
+    * contract), every member of a component that touches history
+    * ANYWHERE — the accepted historical doc is the component's true
+    * canonical representative, so members that don't collide with the
+    * store directly (9~X, 5~9, 5!~X) must not be re-accepted — and
+    * every direct hit (singleton components never enter the pair
+    * graph). `hits` holds one column: the batch ids with a history
+    * hit. */
+  def historyDrops(pairs: DataFrame, aCol: String, bCol: String,
+                   hits: DataFrame): DataFrame = {
+    val comps = connectedComponents(pairs, aCol, bCol)
+    val hitIds = hits.select(col(hits.columns.head).cast("long").as("__hit"))
+    val poisonedLabels = comps
+      .join(hitIds, col("node") === col("__hit"), "left_semi")
+      .select(col("label").as("__pl")).distinct()
+    comps.join(poisonedLabels, col("label") === col("__pl"), "left_semi")
+      .select(col("node"))
+      .union(comps.filter(col("node") =!= col("label")).select(col("node")))
+      .union(hitIds.select(col("__hit").as("node")))
+      .distinct()
+  }
+
   /** [[connectedComponents]] plus the number of label-update rounds it
     * ran (including the final no-change round that witnesses the
     * fixpoint) — the observable for the O(log diameter) claim: a path

@@ -62,20 +62,14 @@ class BucketedStateStore(spark: SparkSession, root: String,
         s"BucketedStateStore: crash recovery $old -> $root failed")
   }
 
-  /** None when the state table doesn't exist yet (first merge) —
-    * detected by a FILESYSTEM existence probe, not by matching
-    * AnalysisException message text (which drifts across Spark
-    * versions). An existing-but-EMPTY directory also reads as no
-    * table; any other analysis failure on a non-empty directory stays
-    * LOUD — silently returning None would let merge()'s overwrite
-    * discard surviving state (review finding). The empty directory is
-    * probed before the read, not after it fails: once a merge's pin has
-    * observed a metric, Spark's observation listener logs every failed
-    * read as an error. */
+  /** None when the state table doesn't exist yet (first merge) — the
+    * [[ParquetTable]] presence rule, after crash recovery: a non-empty
+    * directory Spark cannot read stays LOUD, because silently
+    * returning None would let merge()'s overwrite discard surviving
+    * state. */
   def readOpt(): Option[DataFrame] = {
     recoverInterruptedRescale()
-    if (!fs.exists(rootPath) || fs.listStatus(rootPath).isEmpty) None
-    else Some(spark.read.parquet(root))
+    ParquetTable.readIfPresent(spark, root)
   }
 
   /** Full state, `bucket` partition column included. */

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -20,8 +20,8 @@ import graft.operators.Dedup
   *    partitionOverwriteMode=dynamic so untouched months never rewrite
   *    — the reference's read-modify-write of one monthly S3 object,
   *    generalized (odds_data_collector.py:31-51);
-  *  - missing table/partition ⇒ empty frame (s3_client.py:141-145's
-  *    None ⇒ start-fresh semantics).
+  *  - missing table ⇒ start fresh (s3_client.py:141-145's None ⇒
+  *    start-fresh semantics, decided by [[ParquetTable]]).
   *
   * Every upsert evaluates its batch ONCE: the batch (partition columns
   * added, key-deduped for [[upsertNewestBatch]]) is pinned with
@@ -48,27 +48,9 @@ class PartitionedParquetStore(spark: SparkSession, root: String) {
     df.withColumn("year", year(col(tsCol)))
       .withColumn("month", month(col(tsCol)))
 
-  /** Read the table (empty frame with no schema match if absent).
-    * Returns None when the table doesn't exist yet. A missing or empty
-    * root is found by a file-system probe rather than a failed read: the
-    * session reports a failed read to its query listeners, and once an
-    * upsert's pin has observed a metric, Spark's observation listener
-    * logs each such failure as an error. */
-  def readOpt(): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(root)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasData = fs.exists(path) && fs.listStatus(path).exists { st =>
-      val name = st.getPath.getName
-      !name.startsWith("_") && !name.startsWith(".")
-    }
-    if (!hasData) None
-    else try Some(spark.read.parquet(root))
-    catch {
-      case e: AnalysisException if e.getMessage.contains("PATH_NOT_FOUND") ||
-                                   e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-                                   e.getMessage.contains("Path does not exist") => None
-    }
-  }
+  /** The whole table, or None when it doesn't exist yet — the
+    * [[ParquetTable]] presence rule. */
+  def readOpt(): Option[DataFrame] = ParquetTable.readIfPresent(spark, root)
 
   /** S5/P3/P4: projected, partition-pruned read. `months` filters on the
     * partition columns (pruned at planning — no data touched outside);

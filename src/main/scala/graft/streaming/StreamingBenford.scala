@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Profiler
+import graft.sources.ParquetTable
 
 /** Streaming Benford monitor — the continuously-running twin of
   * [[Profiler.benfordAudit]]: every micro-batch's first-digit counts
@@ -48,9 +49,8 @@ object StreamingBenford {
         val spark = batch.sparkSession
         val batchCounts = Profiler.firstDigitCounts(batch, valueCol)
           .localCheckpoint() // read twice (batch dev + state merge)
-        val merged = (if (new java.io.File(statePath).exists())
-            spark.read.parquet(statePath).unionByName(batchCounts)
-          else batchCounts)
+        val merged = ParquetTable.readIfPresent(spark, statePath)
+          .fold(batchCounts)(_.unionByName(batchCounts))
           .groupBy(col("digit")).agg(sum(col("n")).as("n"))
           .localCheckpoint() // sever lineage from the file being overwritten
         merged.coalesce(1).write.mode("overwrite").parquet(statePath)

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.sources.ParquetTable
 
 /** Incremental exact-dedup of a document stream against the WHOLE
   * corpus seen so far — the crawl-ingest shape of an LLM training-data
@@ -20,7 +22,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * append); a replay after the store append forwards an empty set
   * (the batch's own hashes now hit the store). Doc ids must be
   * integral (they are cast to long for component labels — string ids
-  * need a stable id-assignment step upstream).
+  * need a stable id-assignment step upstream). A missing store, or a
+  * bare directory, is empty history by the [[ParquetTable]] rule; a
+  * non-empty store Spark cannot read fails the batch instead of
+  * letting duplicates through.
   *
   * This complements the in-stream variants in [[MicroBatchUpsert]]:
   * `dedupedWithinWatermark` bounds its state by the watermark, so it
@@ -40,17 +45,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * deployments where the store is small enough to shuffle.
   */
 object StreamingCorpusDedup {
-
-  /** Accepted-hash store reader: empty frame when absent. */
-  private def storedHashes(spark: SparkSession, storeDir: String): DataFrame =
-    try spark.read.parquet(storeDir).select(col("content_hash"))
-    catch {
-      case e: AnalysisException
-          if e.getMessage.contains("PATH_NOT_FOUND") ||
-             e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-             e.getMessage.contains("Path does not exist") =>
-        spark.emptyDataFrame.select(lit("").as("content_hash")).limit(0)
-    }
 
   /** NEAR-dup variant: incremental MinHash-LSH dedup of a document
     * stream against all accepted history. Each micro-batch:
@@ -94,33 +88,17 @@ object StreamingCorpusDedup {
           // any shared (band, band_hash) bucket is a hit, and a hit on
           // a non-representative member must still poison its whole
           // component below.
-          val hitIds = banded
-            .join(storedBuckets(spark, storeDir), Seq("band", "band_hash"),
-                  "left_semi")
+          val hitIds = ParquetTable.readIfPresent(spark, storeDir)
+            .fold(banded.filter(lit(false))) { stored =>
+              banded.join(stored.select(col("band"), col("band_hash")),
+                          Seq("band", "band_hash"), "left_semi")
+            }
             .select(col("doc")).distinct().persist()
-          // (3) in-batch components. A doc is dropped when it is a
-          // non-representative member (component rep = min id, the
-          // q60 contract) OR its component touches history ANYWHERE —
-          // the accepted historical doc is the component's true
-          // canonical representative, so even members that don't
-          // collide with the store directly (9~X, 5~9, 5!~X) must not
-          // be re-accepted. Plus direct hits (singleton components
-          // never enter the pair graph).
-          val comps = Components.connectedComponents(
-            NearDup.pairsFromBanded(banded, maxBucket), "id_a", "id_b")
-          val poisonedLabels = comps
-            .join(hitIds, comps("node") === hitIds("doc"), "left_semi")
-            .select(col("label")).distinct()
-          val dropped = comps
-            .join(poisonedLabels.withColumnRenamed("label", "__pl"),
-                  col("label") === col("__pl"), "left_semi")
-            .select(col("node"))
-            .union(comps.filter(col("node") =!= col("label"))
-              .select(col("node")))
-            .union(hitIds.select(col("doc").as("node")))
-            .distinct()
-            .withColumnRenamed("node", idCol)
-          val fresh = batch.join(dropped, Seq(idCol), "left_anti")
+          // (3) in-batch components, poisoned by history hits
+          val dropped = Components.historyDrops(
+            NearDup.pairsFromBanded(banded, maxBucket), "id_a", "id_b", hitIds)
+          val fresh = batch.join(dropped.withColumnRenamed("node", "__did"),
+            col(idCol).cast("long") === col("__did"), "left_anti")
           fresh.persist()
           try {
             accept(fresh)
@@ -174,12 +152,14 @@ object StreamingCorpusDedup {
               .cosineNative(spark, col(s"x.$vecCol"), col(s"y.$vecCol"))
               >= lit(threshold))
             .select(col(s"y.$idCol").as(idCol))
-          val histDrop = sig
-            .join(storedEmbedBuckets(spark, storeDir), Seq("__bucket"),
-                  "left_semi")
-            .select(col(idCol))
-          val fresh = sig.join(inBatchDrop.union(histDrop).distinct(),
-                               Seq(idCol), "left_anti")
+          val drops = ParquetTable.readIfPresent(spark, storeDir)
+            .fold(inBatchDrop) { stored =>
+              inBatchDrop.union(sig
+                .join(stored.select(col("bucket").as("__bucket")),
+                      Seq("__bucket"), "left_semi")
+                .select(col(idCol)))
+            }
+          val fresh = sig.join(drops.distinct(), Seq(idCol), "left_anti")
           fresh.persist()
           try {
             accept(fresh.drop("__bucket"))
@@ -190,30 +170,6 @@ object StreamingCorpusDedup {
         } finally sig.unpersist()
       }
       .start()
-
-  /** Accepted-embedding-bucket store reader: empty frame when absent. */
-  private def storedEmbedBuckets(spark: SparkSession,
-                                 storeDir: String): DataFrame =
-    try spark.read.parquet(storeDir).select(col("bucket").as("__bucket"))
-    catch {
-      case e: AnalysisException
-          if e.getMessage.contains("PATH_NOT_FOUND") ||
-             e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-             e.getMessage.contains("Path does not exist") =>
-        spark.emptyDataFrame.select(lit("").as("__bucket")).limit(0)
-    }
-
-  /** Accepted-bucket store reader: empty frame when absent. */
-  private def storedBuckets(spark: SparkSession, storeDir: String): DataFrame =
-    try spark.read.parquet(storeDir).select(col("band"), col("band_hash"))
-    catch {
-      case e: AnalysisException
-          if e.getMessage.contains("PATH_NOT_FOUND") ||
-             e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-             e.getMessage.contains("Path does not exist") =>
-        spark.emptyDataFrame
-          .select(lit(0).as("band"), lit(0L).as("band_hash")).limit(0)
-    }
 
   /** The per-batch history anti-join against the BUCKETED store —
     * exposed (not private) so the plan contract can be asserted: with
@@ -228,6 +184,15 @@ object StreamingCorpusDedup {
     else inBatch.join(spark.table(storeTable).select(col("content_hash")),
                       Seq("content_hash"), "left_anti")
   }
+
+  /** The per-batch history anti-join against the plain-directory
+    * hash store of [[run]] (and [[StreamingWarcIntake]]): an absent
+    * store passes the batch through with no join. */
+  private[streaming] def freshVsStore(inBatch: DataFrame,
+                                      storeDir: String): DataFrame =
+    ParquetTable.readIfPresent(inBatch.sparkSession, storeDir)
+      .fold(inBatch)(stored => inBatch.join(
+        stored.select(col("content_hash")), Seq("content_hash"), "left_anti"))
 
   /** Bucketed-store variant of [[run]]: history lives as a managed
     * table bucketed+sorted by content_hash (`nBuckets` fixed for the
@@ -265,7 +230,6 @@ object StreamingCorpusDedup {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
         val hashed = batch.withColumn("content_hash", md5(col(textCol)))
         // (a) unique within the batch: first arrival wins — an
         // arbitrary-but-deterministic pick via min over the batch's
@@ -273,8 +237,7 @@ object StreamingCorpusDedup {
         // unordered sets here, so full-row distinct then one-per-hash.
         val inBatch = hashed.dropDuplicates("content_hash")
         // (b) absent from the persisted corpus
-        val fresh = inBatch.join(storedHashes(spark, storeDir),
-                                 Seq("content_hash"), "left_anti")
+        val fresh = freshVsStore(inBatch, storeDir)
         // materialize ONCE: accept() and the store append must see the
         // same row set even though `fresh` is lazily planned twice
         fresh.persist()

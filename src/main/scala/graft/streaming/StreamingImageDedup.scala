@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.sources.ParquetTable
 
 /** Incremental PERCEPTUAL image dedup of a media stream against the
   * whole accepted corpus — the multimodal twin of
@@ -21,7 +23,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * an idempotent keyed upsert. A replay after the store append
   * forwards an empty fresh set (the batch's own hashes now verify
   * against the store) — the [[StreamingCorpusDedup]] idempotence
-  * shape, spec-proven.
+  * shape, spec-proven. The store's presence follows the same
+  * [[ParquetTable]] rule: a missing or bare directory is empty
+  * history, an unreadable non-empty one fails the batch.
   *
   * Scale shape: decode/hash is narrow (per-row, in-task); the store
   * holds 8 band rows × (8-byte hash + key) per accepted image —
@@ -37,29 +41,6 @@ object StreamingImageDedup {
       posexplode(array((0 until NumBands).map(b =>
         substring(col("bits"), b * 8 + 1, 8)): _*))
         .as(Seq("band", "band_key")))
-
-  /** Accepted store reader: (band, band_key, __st_bits); empty when
-    * the table doesn't exist yet (filesystem probe, not message
-    * matching — the BucketedStateStore lesson). */
-  private def storedBands(spark: SparkSession, storeDir: String): DataFrame = {
-    def empty = spark.emptyDataFrame
-      .select(lit(0).as("band"), lit("").as("band_key"),
-              lit("").as("__st_bits")).limit(0)
-    val path = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) empty
-    else try spark.read.parquet(storeDir)
-      .select(col("band"), col("band_key"), col("bits").as("__st_bits"))
-    catch {
-      // empty ONLY for an existing-but-empty directory (no files yet);
-      // any other analysis failure over real files stays LOUD — a
-      // schema drift or corrupt store silently reading as "no history"
-      // would disable dedup-against-history and let duplicates into
-      // accept() (the BucketedStateStore.readOpt lesson, mirrored)
-      case e: org.apache.spark.sql.AnalysisException =>
-        if (fs.listStatus(path).isEmpty) empty else throw e
-    }
-  }
 
   /** Run the dedup over a stream of (idCol, mediaCol) rows. Fresh
     * (perceptually novel) rows go to `accept`; their band rows append
@@ -87,11 +68,16 @@ object StreamingImageDedup {
         val banded = bandsOf(hashed, "image_id").persist()
         try {
           // history hits for EVERY batch image (a hit on a
-          // non-representative member must poison its whole component)
-          val hitIds = banded
-            .join(storedBands(spark, storeDir), Seq("band", "band_key"))
-            .filter(NearDup.hammingBits(col("bits"), col("__st_bits"))
-              <= maxBits)
+          // non-representative member must poison its whole component),
+          // each band collision verified against the stored full hash
+          val hitIds = ParquetTable.readIfPresent(spark, storeDir)
+            .fold(banded.filter(lit(false))) { stored =>
+              banded.join(stored.select(col("band"), col("band_key"),
+                                        col("bits").as("__st_bits")),
+                          Seq("band", "band_key"))
+                .filter(NearDup.hammingBits(col("bits"), col("__st_bits"))
+                  <= maxBits)
+            }
             .select(col("image_id")).distinct().persist()
           // in-batch near-dup components: band-collision candidates,
           // Hamming-verified, min-id representative survives (q60)
@@ -104,20 +90,8 @@ object StreamingImageDedup {
             .select(col("a.image_id").as("id_a"),
                     col("b.image_id").as("id_b"))
             .distinct()
-          val comps = Components.connectedComponents(pairs, "id_a", "id_b")
-          val poisonedLabels = comps
-            .join(hitIds, comps("node") === hitIds("image_id"), "left_semi")
-            .select(col("label")).distinct()
-          val dropped = comps
-            .join(poisonedLabels.withColumnRenamed("label", "__pl"),
-                  col("label") === col("__pl"), "left_semi")
-            .select(col("node"))
-            .union(comps.filter(col("node") =!= col("label"))
-              .select(col("node")))
-            .union(hitIds.select(col("image_id").as("node")))
-            .distinct()
-          val fresh = batch.join(
-            dropped.select(col("node").cast("long").as("__did")),
+          val dropped = Components.historyDrops(pairs, "id_a", "id_b", hitIds)
+          val fresh = batch.join(dropped.withColumnRenamed("node", "__did"),
             col(idCol).cast("long") === col("__did"), "left_anti")
           fresh.persist()
           try {

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Scd
+import graft.sources.ParquetTable
 
 /** Streaming SCD2 maintenance: each micro-batch of change events folds
   * into a persisted type-2 dimension table via [[Scd.merge]] — the
@@ -41,8 +42,9 @@ object StreamingScd {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val existing = readIfExists(spark, path)
-        val merged = existing match {
+        // a bare pre-created directory (or one holding just a _SUCCESS
+        // marker) is "no table yet" — the ParquetTable presence rule
+        val merged = ParquetTable.readIfPresent(spark, path) match {
           case Some(table) =>
             Scd.merge(table, batch, keys, col(seqCol), col(tiebreakCol),
                       stateCols)
@@ -55,16 +57,4 @@ object StreamingScd {
         rows.write.mode("overwrite").parquet(path)
       }
       .start()
-
-  /** The table exists only once a write has landed data files — a
-    * bare pre-created directory (or one holding just a _SUCCESS
-    * marker) is "no table yet", not a schema-inference error. */
-  private def readIfExists(spark: SparkSession,
-                           path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    if (hasData) Some(spark.read.parquet(path)) else None
-  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Profiler
+import graft.sources.ParquetTable
 
 /** Streaming maintenance of correlation sufficient statistics — the
   * continuously-running twin of [[Profiler.corrMatrix]]: each
@@ -99,11 +100,7 @@ object StreamingStats {
       batchStats: => DataFrame,
       merge: (DataFrame, DataFrame) => DataFrame): Unit = {
     import org.apache.spark.sql.functions.lit
-    val dir = new java.io.File(statePath)
-    val prior =
-      if (dir.exists && dir.listFiles != null && dir.listFiles.nonEmpty)
-        Some(spark.read.parquet(statePath))
-      else None
+    val prior = ParquetTable.readIfPresent(spark, statePath)
     val lastApplied = prior
       .map(_.select("__last_batch").head.getLong(0)).getOrElse(-1L)
     if (batchId > lastApplied) {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -40,16 +40,6 @@ import graft.llm.HtmlText
   * lays out.
   */
 object StreamingWarcIntake {
-
-  private def storedHashes(spark: SparkSession, storeDir: String): DataFrame =
-    try spark.read.parquet(storeDir).select(col("content_hash"))
-    catch {
-      case e: AnalysisException
-          if e.getMessage.contains("PATH_NOT_FOUND") ||
-             e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-             e.getMessage.contains("Path does not exist") =>
-        spark.emptyDataFrame.select(lit("").as("content_hash")).limit(0)
-    }
 
   /** Parse + extract + gate one batch of (path, content) WARC files.
     * text/html bodies ride the charset ladder into [[HtmlText]];
@@ -135,7 +125,6 @@ object StreamingWarcIntake {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
         val extracted =
           extractBatch(batch, minChars, maxChars, maxLinkDensity)
             .withColumn("content_hash", md5(col("text")))
@@ -149,8 +138,7 @@ object StreamingWarcIntake {
           .select(col("r.uri").as("uri"), col("r.warc_date").as("warc_date"),
             col("r.text").as("text"),
             col("r.link_density").as("link_density"), col("content_hash"))
-        val fresh = inBatch.join(storedHashes(s, storeDir),
-          Seq("content_hash"), "left_anti")
+        val fresh = StreamingCorpusDedup.freshVsStore(inBatch, storeDir)
         fresh.persist()
         try {
           accept(fresh)

@@ -99,16 +99,27 @@ class ComponentsSpec extends SparkSpec {
     // separate convergence-check aggregation per round would add one
     // execution per round on top of the checkpoint's.
     val execs = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var marked = false
     val ql = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = execs.incrementAndGet()
+                             durationNs: Long): Unit =
+        if (qe.analyzed.toString.contains("__count_from_here")) marked = true
+        else execs.incrementAndGet()
       override def onFailure(funcName: String,
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     }
     spark.listenerManager.register(ql)
     try {
+      // a newly registered listener also receives events still queued
+      // from earlier tests (the previous test's final collect); the
+      // queue delivers in order, so count only after a marker query
+      spark.range(1).select(lit(1).as("__count_from_here")).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(marked, "listener never saw the marker query")
+      execs.set(0)
       val edges = (1L until 32L).map(i => (i, i + 1)).toDF("id_a", "id_b")
       val (_, rounds) =
         Components.connectedComponentsWithRounds(edges, "id_a", "id_b")

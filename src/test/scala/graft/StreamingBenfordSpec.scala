@@ -14,8 +14,32 @@ class StreamingBenfordSpec extends SparkSpec {
   import spark.implicits._
 
   test("streamed digit folds == monolithic audit, restart included; drift flags per batch") {
+    scenario(tmpDir("benford-state") + "/state")
+  }
+
+  test("streamed digit folds == monolithic audit, file: URI state path") {
+    scenario(new java.io.File(tmpDir("benford-state-uri") + "/state")
+      .toURI.toString)
+  }
+
+  test("a pre-created empty state directory reads as no state yet") {
     implicit val sq = spark.sqlContext
-    val statePath = tmpDir("benford-state") + "/state"
+    val statePath = tmpDir("benford-empty-state") // exists, holds nothing
+    val values = (1 to 120).map(i => math.pow(1.07, i) % 5000 + 1.0)
+    val mem = MemoryStream[Double]
+    mem.addData(values: _*)
+    StreamingBenford.monitor(mem.toDF().toDF("v"), "v", statePath,
+        tmpDir("benford-empty-audit") + "/audit", tmpDir("benford-empty-ckpt"))
+      .awaitTermination(60000)
+    val streamed = StreamingBenford.currentState(spark, statePath)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val batch = Profiler.firstDigitCounts(values.toDF("v"), "v")
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(streamed == batch)
+  }
+
+  private def scenario(statePath: String): Unit = {
+    implicit val sq = spark.sqlContext
     val auditPath = tmpDir("benford-audit") + "/audit"
     val ckpt = tmpDir("benford-ckpt")
 

@@ -13,9 +13,29 @@ import graft.streaming.StreamingStats
 class StreamingStatsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** A state path written as a `file:` URI — the form the parquet
+    * stores accept, and the one a `java.io.File` probe never finds. */
+  private def uriPath(prefix: String): String =
+    new java.io.File(tmpDir(prefix) + "/state").toURI.toString
+
   test("streamed state folds == monolithic recompute, across restarts") {
+    corrScenario(tmpDir("corr-state") + "/state")
+  }
+
+  test("streamed state folds == monolithic recompute, file: URI state path") {
+    corrScenario(uriPath("corr-state-uri"))
+  }
+
+  test("streamed OLS state folds == monolithic q191 refit, across restarts") {
+    olsScenario(tmpDir("ols-state") + "/state")
+  }
+
+  test("streamed OLS state folds == monolithic q191 refit, file: URI state path") {
+    olsScenario(uriPath("ols-state-uri"))
+  }
+
+  private def corrScenario(statePath: String): Unit = {
     implicit val sq = spark.sqlContext
-    val statePath = tmpDir("corr-state") + "/state"
     val ckpt = tmpDir("corr-ckpt")
     val cols = Seq("x", "y", "z")
 
@@ -63,9 +83,8 @@ class StreamingStatsSpec extends SparkSpec {
     assert(after == before, "replayed batch must not fold into state twice")
   }
 
-  test("streamed OLS state folds == monolithic q191 refit, across restarts") {
+  private def olsScenario(statePath: String): Unit = {
     implicit val sq = spark.sqlContext
-    val statePath = tmpDir("ols-state") + "/state"
     val ckpt = tmpDir("ols-ckpt")
 
     // y = 3 + 2·x1 − 0.5·x2 + deterministic non-linear remainder, so
