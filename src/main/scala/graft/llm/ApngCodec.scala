@@ -2,8 +2,9 @@ package graft.llm
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.util.ByteCodecs
+import graft.util.{ByteCodecs, Containers}
 import graft.util.ByteCodecs.isPng
+import graft.util.Containers.be32
 
 /** APNG (Animated PNG, PNG 3rd-edition chunks acTL/fcTL/fdAT) — the
   * second animation container web crawls carry next to GIF.
@@ -28,23 +29,13 @@ import graft.util.ByteCodecs.isPng
   */
 object ApngCodec {
 
-  private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 24) | ((b(i + 1) & 0xFF) << 16) |
-      ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
-
   /** PNG signature + an acTL chunk before IDAT. */
-  def isApng(b: Array[Byte]): Boolean = {
-    if (!isPng(b)) return false
-    var pos = 8
-    while (pos + 8 <= b.length) {
-      val len = be32(b, pos)
-      val typ = new String(b, pos + 4, 4, "US-ASCII")
-      if (typ == "acTL") return true
-      if (typ == "IDAT" || typ == "IEND") return false
-      if (len < 0 || pos + 12L + len > b.length) return false
-      pos += 12 + len
-    }
-    false
+  def isApng(b: Array[Byte]): Boolean = isPng(b) && {
+    val c = Containers.pngChunks(b)
+    var found = false
+    while (!found && c.next() && !c.is("IDAT") && !c.is("IEND"))
+      found = c.is("acTL")
+    found
   }
 
   private case class Fctl(seq: Int, w: Int, h: Int, x: Int, y: Int,
@@ -54,7 +45,6 @@ object ApngCodec {
   /** (canvasW, canvasH, RGBA canvas per animation frame). */
   def decodeFrames(b: Array[Byte]): (Int, Int, Seq[Array[Float]]) = {
     require(isApng(b), "not an APNG")
-    var pos = 8
     var w = 0; var h = 0; var depth = 0; var color = -1
     var palette: Array[Int] = null
     var numFrames = -1
@@ -62,16 +52,16 @@ object ApngCodec {
     var pendingFctl: Fctl = null // fcTL seen, awaiting IDAT/fdAT data
     var idatIsFrame = false
     val idat = ArrayBuffer[Byte]()
+    val c = Containers.pngChunks(b)
     var done = false
-    while (!done && pos + 8 <= b.length) {
-      val len = be32(b, pos)
-      val typ = new String(b, pos + 4, 4, "US-ASCII")
-      require(len >= 0 && pos + 12L + len <= b.length,
-        s"truncated APNG chunk $typ")
-      val p = pos + 8
-      typ match {
+    while (!done && c.next()) {
+      require(!c.overrun, s"truncated APNG chunk ${c.name}")
+      val p = c.start
+      val len = c.end - p
+      c.name match {
         case "IHDR" =>
-          w = be32(b, p); h = be32(b, p + 4)
+          require(len >= 13, "short APNG IHDR chunk")
+          w = be32(b, p).toInt; h = be32(b, p + 4).toInt
           depth = b(p + 8) & 0xFF; color = b(p + 9) & 0xFF
           require(depth == 8 && Set(0, 2, 3, 4, 6)(color),
             s"APNG frames decode at 8-bit depth (got depth=$depth color=$color)")
@@ -81,12 +71,14 @@ object ApngCodec {
         case "PLTE" =>
           palette = Array.tabulate(len)(i => b(p + i) & 0xFF)
         case "acTL" =>
-          numFrames = be32(b, p)
+          require(len >= 8, "short APNG acTL chunk")
+          numFrames = be32(b, p).toInt
           require(numFrames > 0 && numFrames <= 4096,
             s"APNG frame count $numFrames out of range")
         case "fcTL" =>
-          val f = Fctl(be32(b, p), be32(b, p + 4), be32(b, p + 8),
-            be32(b, p + 12), be32(b, p + 16),
+          require(len >= 26, "short APNG fcTL chunk")
+          val f = Fctl(be32(b, p).toInt, be32(b, p + 4).toInt,
+            be32(b, p + 8).toInt, be32(b, p + 12).toInt, be32(b, p + 16).toInt,
             b(p + 24) & 0xFF, b(p + 25) & 0xFF, ArrayBuffer[Byte]())
           require(f.w > 0 && f.h > 0 && f.x >= 0 && f.y >= 0 &&
             f.x + f.w <= w && f.y + f.h <= h,
@@ -106,7 +98,6 @@ object ApngCodec {
         case "IEND" => done = true
         case _ => // ancillary
       }
-      pos += 12 + len
     }
     require(numFrames == frames.size,
       s"acTL declares $numFrames frames, found ${frames.size}")

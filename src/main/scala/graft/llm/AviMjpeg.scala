@@ -1,10 +1,13 @@
 package graft.llm
 
+import graft.util.Containers
+import graft.util.Containers.tag
+
 /** Dependency-free MJPEG-in-AVI video frame decode — the first REAL
   * video codec path behind [[Multimodal.MediaDecoder]]: AVI 'MJPG'
   * streams carry one complete baseline/progressive JPEG per frame, so
-  * the RIFF container walk (this file) composes with [[JpegCodec]]
-  * into actual pixel planes with no codec library.
+  * the RIFF chunk walk ([[graft.util.Containers.riff]]) composes with
+  * [[JpegCodec]] into actual pixel planes with no codec library.
   * [[graft.plans.VideoMeta]] parses the container header; this walks
   * `LIST movi` and hands each `##dc`/`##db` video chunk (including
   * chunks nested in `LIST rec ` groups) to the JPEG decoder.
@@ -15,52 +18,35 @@ package graft.llm
   */
 object AviMjpeg {
 
-  private def u32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | ((b(o + 1) & 0xFFL) << 8) |
-      ((b(o + 2) & 0xFFL) << 16) | ((b(o + 3) & 0xFFL) << 24)
-
-  private def tag(b: Array[Byte], i: Int, s: String): Boolean =
-    i >= 0 && i + s.length <= b.length &&
-      s.indices.forall(j => b(i + j) == s(j).toByte)
-
   def isAvi(b: Array[Byte]): Boolean =
     b.length >= 12 && tag(b, 0, "RIFF") && tag(b, 8, "AVI ")
 
-  /** Depth-first in-order RIFF chunk walk over [start, end). The
-    * callback sees (fourcc, listType, payloadStart, chunkEnd) and
-    * returns true to descend into a LIST body. Truncated chunks end
-    * the current level (header inspection must never throw on a
-    * cut-off upload); depth is capped so a crafted LIST chain cannot
-    * blow the JVM stack. */
-  private def walkChunks(b: Array[Byte], start: Int, end: Int, depth: Int = 0)
-                        (f: (String, String, Int, Int) => Boolean): Unit = {
-    if (depth > 16) return
-    var pos = start
-    var ok = true
-    while (ok && pos + 8 <= end) {
-      val id = new String(b, pos, 4, "US-ASCII")
-      val size = u32(b, pos + 4)
-      val payload = pos + 8
-      if (payload + size > end) ok = false // truncated: stop this level
-      else {
-        val chunkEnd = (payload + size).toInt
+  /** Depth-first, in order, over the [[Containers.riff]] chunks of
+    * [start, end). The callback sees (fourcc, listType, payloadStart,
+    * chunkEnd) and returns true to descend into a LIST body. A chunk
+    * that runs past its parent ends the current level unseen (header
+    * inspection must never throw on a cut-off upload); depth is capped
+    * so a crafted LIST chain cannot blow the JVM stack. */
+  private def visit(b: Array[Byte], start: Int, end: Int, depth: Int = 0)
+                   (f: (String, String, Int, Int) => Boolean): Unit =
+    if (depth <= 16) {
+      val c = Containers.riff(b, start, end)
+      while (c.next() && !c.overrun) {
         val listType =
-          if (id == "LIST" && payload + 4 <= chunkEnd)
-            new String(b, payload, 4, "US-ASCII")
+          if (c.is("LIST") && c.end - c.start >= 4)
+            new String(b, c.start, 4, "US-ASCII")
           else ""
-        if (f(id, listType, payload, chunkEnd) && listType.nonEmpty)
-          walkChunks(b, payload + 4, chunkEnd, depth + 1)(f)
-        pos = chunkEnd + (size.toInt & 1) // chunks pad to even
+        if (f(c.name, listType, c.start, c.end) && listType.nonEmpty)
+          visit(b, c.start + 4, c.end, depth + 1)(f)
       }
     }
-  }
 
   /** Stream index (strl declaration order) of the first 'MJPG' video
     * stream, or -1 when the header declares none. */
   private def mjpegStreamIndex(b: Array[Byte]): Int = {
     var idx = -1
     var nStreams = 0
-    walkChunks(b, 12, b.length) { (id, listType, payload, end) =>
+    visit(b, 12, b.length) { (id, listType, payload, end) =>
       if (id == "strh") {
         if (idx < 0 && payload + 8 <= end &&
             tag(b, payload, "vids") && tag(b, payload + 4, "MJPG"))
@@ -87,7 +73,7 @@ object AviMjpeg {
     val si = mjpegStreamIndex(b)
     val prefix = if (si >= 0) f"$si%02d" else null
     val out = Seq.newBuilder[Array[Byte]]
-    walkChunks(b, 12, b.length) { (id, listType, payload, end) =>
+    visit(b, 12, b.length) { (id, listType, payload, end) =>
       if (id.length == 4 && id(0).isDigit && id(1).isDigit &&
           (id.endsWith("dc") || id.endsWith("db")) &&
           (prefix == null || id.startsWith(prefix)))

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.util.Containers
+
 /** EXIF orientation: the one EXIF field a training-data image
   * pipeline must honor — phones store rotated sensor data and mark
   * the display transform here, so hashes/embeddings computed on
@@ -7,8 +9,9 @@ package graft.llm
   * same photo.
   *
   * `orientation` reads the tag from a JPEG (APP1 "Exif\0\0" segment
-  * wrapping a little TIFF structure) or from a bare TIFF (tag 274 in
-  * IFD0), through [[TiffCodec.parseIfd]]'s defensive walk. Absent or
+  * wrapping a little TIFF structure, found through
+  * [[graft.util.Containers.jpegSegments]]) or from a bare TIFF (tag 274
+  * in IFD0), through [[TiffCodec.parseIfd]]'s defensive walk. Absent or
   * malformed metadata degrades to 1 (identity) — the browser
   * convention — never an exception: orientation is advisory.
   *
@@ -23,10 +26,15 @@ object Exif {
   /** Orientation 1-8; 1 when absent or unparseable. */
   def orientation(b: Array[Byte]): Int = {
     if (b == null || b.length < 4) return 1
-    val tiff: Array[Byte] =
-      if (TiffCodec.isTiff(b)) b
-      else if ((b(0) & 0xFF) == 0xFF && (b(1) & 0xFF) == 0xD8) exifBlock(b)
-      else null
+    var tiff: Array[Byte] = if (TiffCodec.isTiff(b)) b else null
+    if ((b(0) & 0xFF) == 0xFF && (b(1) & 0xFF) == 0xD8) {
+      // the embedded TIFF structure of the first APP1 Exif segment
+      val seg = Containers.jpegSegments(b)
+      while (tiff == null && seg.next() && !seg.overrun)
+        if (seg.id == 0xE1 && Containers.tag(b, seg.start, "Exif\u0000\u0000") &&
+            seg.start + 6 <= seg.end)
+          tiff = java.util.Arrays.copyOfRange(b, seg.start + 6, seg.end)
+    }
     if (tiff == null) return 1
     try {
       val (_, tags) = TiffCodec.parseIfd(tiff)
@@ -35,33 +43,6 @@ object Exif {
     } catch {
       case _: IllegalArgumentException => 1
     }
-  }
-
-  /** The embedded TIFF structure of the first APP1 Exif segment, or
-    * null. Walks JPEG markers the same defensive way ImageMeta does
-    * (standalone markers have no length field). */
-  private def exifBlock(b: Array[Byte]): Array[Byte] = {
-    var i = 2
-    while (i + 3 < b.length) {
-      if ((b(i) & 0xFF) != 0xFF) return null
-      var j = i
-      while (j + 1 < b.length && (b(j + 1) & 0xFF) == 0xFF) j += 1
-      if (j + 1 >= b.length) return null
-      val marker = b(j + 1) & 0xFF
-      if (marker == 0x01 || (marker >= 0xD0 && marker <= 0xD9)) i = j + 2
-      else {
-        if (j + 3 >= b.length) return null
-        val len = ((b(j + 2) & 0xFF) << 8) | (b(j + 3) & 0xFF)
-        if (len < 2 || j + 2 + len > b.length) return null
-        if (marker == 0xE1 && len >= 8 &&
-            b(j + 4) == 'E' && b(j + 5) == 'x' && b(j + 6) == 'i' &&
-            b(j + 7) == 'f' && b(j + 8) == 0 && b(j + 9) == 0)
-          return java.util.Arrays.copyOfRange(b, j + 10, j + 2 + len)
-        if (marker == 0xDA) return null // scan data: no more APP segments
-        i = j + 2 + len
-      }
-    }
-    null
   }
 
   /** Stored → displayed pixel remap for EXIF orientations 1-8 on an

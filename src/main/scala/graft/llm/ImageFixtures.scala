@@ -344,14 +344,14 @@ object ImageFixtures {
     * [[graft.plans.ImageMeta]] walks (a pitm box before iprp
     * exercises the sibling skip). */
   def avif(width: Int, height: Int): Array[Byte] = {
-    def box(tpe: String, payload: Array[Byte]): Array[Byte] =
+    def boxOf(tpe: String, payload: Array[Byte]): Array[Byte] =
       be32(8 + payload.length) ++ tpe.getBytes("US-ASCII") ++ payload
-    val ispe = box("ispe", Array[Byte](0, 0, 0, 0) ++ be32(width) ++ be32(height))
-    val ipco = box("ipco", ispe)
-    val iprp = box("iprp", ipco)
-    val pitm = box("pitm", Array[Byte](0, 0, 0, 0, 0, 1))
-    val meta = box("meta", Array[Byte](0, 0, 0, 0) ++ pitm ++ iprp)
-    box("ftyp", "avif".getBytes("US-ASCII") ++ be32(0) ++
+    val ispe = boxOf("ispe", Array[Byte](0, 0, 0, 0) ++ be32(width) ++ be32(height))
+    val ipco = boxOf("ipco", ispe)
+    val iprp = boxOf("iprp", ipco)
+    val pitm = boxOf("pitm", Array[Byte](0, 0, 0, 0, 0, 1))
+    val meta = boxOf("meta", Array[Byte](0, 0, 0, 0) ++ pitm ++ iprp)
+    boxOf("ftyp", "avif".getBytes("US-ASCII") ++ be32(0) ++
       "mif1".getBytes("US-ASCII")) ++ meta
   }
 

@@ -2,8 +2,9 @@ package graft.llm
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-import graft.util.ByteCodecs
+import graft.util.{ByteCodecs, Containers}
 import graft.util.ByteCodecs.isPng
+import graft.util.Containers.{be16, be32, le16, le32}
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, processed in partition-local batches.
@@ -90,14 +91,6 @@ object Multimodal {
     * match; q242 bounds the lossy JPEG path with invariant booleans
     * the oracle expects TRUE. */
   object BmpWavDecoder extends MediaDecoder {
-    private def u16(b: Array[Byte], off: Int): Int =
-      (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
-    private def i32(b: Array[Byte], off: Int): Int =
-      u16(b, off) | (u16(b, off + 2) << 16)
-    private def be32(b: Array[Byte], off: Int): Int =
-      ((b(off) & 0xFF) << 24) | ((b(off + 1) & 0xFF) << 16) |
-        ((b(off + 2) & 0xFF) << 8) | (b(off + 3) & 0xFF)
-
     /** The Adam7 pass grid (x0, y0, dx, dy) per RFC 2083 §2.6; a
       * non-interlaced image is the single identity pass. */
     private val Adam7: Seq[(Int, Int, Int, Int)] = Seq(
@@ -132,22 +125,22 @@ object Multimodal {
     private[graft] def decodePngWithDims(b: Array[Byte])
         : (Int, Int, Array[Float]) = {
       require(isPng(b), "not a PNG")
-      var pos = 8
       var w = 0; var h = 0; var color = -1; var depth = 0
       var interlaced = false
       var palette: Array[Int] = null // flat [r,g,b, …]
       val idat = new java.io.ByteArrayOutputStream()
+      val c = Containers.pngChunks(b)
       var done = false
-      while (!done && pos + 8 <= b.length) {
-        val len = be32(b, pos)
-        val typ = new String(b, pos + 4, 4, "US-ASCII")
-        require(len >= 0 && pos + 12L + len <= b.length,
-          s"truncated PNG chunk $typ")
-        typ match {
+      while (!done && c.next()) {
+        require(!c.overrun, s"truncated PNG chunk ${c.name}")
+        val p = c.start
+        val len = c.end - p
+        c.name match {
           case "IHDR" =>
-            w = be32(b, pos + 8); h = be32(b, pos + 12)
-            depth = b(pos + 16) & 0xFF
-            color = b(pos + 17) & 0xFF
+            require(len >= 13, "short PNG IHDR chunk")
+            w = be32(b, p).toInt; h = be32(b, p + 4).toInt
+            depth = b(p + 8) & 0xFF
+            color = b(p + 9) & 0xFF
             require(Set(0, 2, 3, 4, 6)(color),
               s"unknown PNG color type $color")
             // the spec's legal (color, depth) matrix (RFC 2083 §4.1.1)
@@ -158,20 +151,19 @@ object Multimodal {
             }
             require(okDepths(depth),
               s"illegal PNG depth $depth for color type $color")
-            require((b(pos + 18) & 0xFF) == 0 && (b(pos + 19) & 0xFF) == 0,
+            require((b(p + 10) & 0xFF) == 0 && (b(p + 11) & 0xFF) == 0,
               "nonstandard PNG compression/filter method")
-            val il = b(pos + 20) & 0xFF
+            val il = b(p + 12) & 0xFF
             require(il <= 1, s"unknown PNG interlace method $il")
             interlaced = il == 1
           case "PLTE" =>
             require(len > 0 && len % 3 == 0 && len <= 768,
               s"PLTE length $len not a multiple of 3 in (0, 768]")
-            palette = Array.tabulate(len)(i => b(pos + 8 + i) & 0xFF)
-          case "IDAT" => idat.write(b, pos + 8, len)
+            palette = Array.tabulate(len)(i => b(p + i) & 0xFF)
+          case "IDAT" => idat.write(b, p, len)
           case "IEND" => done = true
           case _      => // ancillary chunk (tRNS included) — skip
         }
-        pos += 12 + len
       }
       require(w > 0 && h > 0 && idat.size > 0, "PNG missing IHDR/IDAT")
       require(w.toLong * h <= MaxPixels,
@@ -257,18 +249,18 @@ object Multimodal {
       * the pixels). */
     private[graft] def decodeBmpWithDims(b: Array[Byte])
         : (Int, Int, Array[Float]) =
-      (i32(b, 18), math.abs(i32(b, 22)), decodeBmp(b))
+      (le32(b, 18).toInt, math.abs(le32(b, 22).toInt), decodeBmp(b))
 
     private[graft] def decodeBmp(b: Array[Byte]): Array[Float] = {
       require(b.length >= 54 && b(0) == 'B' && b(1) == 'M', "not a BMP")
-      val off = i32(b, 10)
-      val w = i32(b, 18)
-      val hRaw = i32(b, 22)
+      val off = le32(b, 10).toInt
+      val w = le32(b, 18).toInt
+      val hRaw = le32(b, 22).toInt
       val bottomUp = hRaw > 0 // negative height = top-down storage
       val h = math.abs(hRaw)
-      require(u16(b, 28) == 24,
-        s"only 24-bpp BMP decodes dependency-free (got ${u16(b, 28)} bpp)")
-      require(i32(b, 30) == 0, "only BI_RGB (uncompressed) BMP")
+      require(le16(b, 28) == 24,
+        s"only 24-bpp BMP decodes dependency-free (got ${le16(b, 28)} bpp)")
+      require(le32(b, 30) == 0, "only BI_RGB (uncompressed) BMP")
       val rowSize = ((3 * w + 3) / 4) * 4
       require(b.length >= off + rowSize * h, "truncated BMP pixel array")
       val out = new Array[Float](w * h * 3)
@@ -446,7 +438,7 @@ object Multimodal {
         s"MS ADPCM with $channels channels")
       require(blockAlign > 7 * channels,
         s"MS ADPCM block align $blockAlign")
-      def s16(o: Int): Int = ((b(o) & 0xFF) | (b(o + 1).toInt << 8)).toShort.toInt
+      def s16(o: Int): Int = le16(b, o).toShort
       val out = Array.newBuilder[Float]
       var blk = p0
       val end = p0 + size
@@ -501,37 +493,33 @@ object Multimodal {
       require(b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
         b(3) == 'F' && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' &&
         b(11) == 'E', "not a RIFF/WAVE")
-      var pos = 12
       var fmtCode = -1
       var bits = 0
       var align = 0
       var nChannels = 0
       var out: Array[Float] = null
-      while (out == null && pos + 8 <= b.length) {
-        val id = new String(b, pos, 4, "US-ASCII")
-        val size = i32(b, pos + 4)
-        require(size >= 0 && pos + 8L + size <= b.length, // Long: a crafted
-          s"truncated WAV chunk $id")                     // size must not wrap
-        if (id == "fmt ") {
+      val c = Containers.riff(b, 12, b.length)
+      while (out == null && c.next()) {
+        require(!c.overrun, s"truncated WAV chunk ${c.name}")
+        val p0 = c.start
+        val size = c.end - p0
+        if (c.is("fmt ")) {
           require(size >= 16, "short WAV fmt chunk")
-          fmtCode = u16(b, pos + 8)
-          nChannels = u16(b, pos + 10)
-          align = u16(b, pos + 20)
-          bits = u16(b, pos + 22)
+          fmtCode = le16(b, p0)
+          nChannels = le16(b, p0 + 2)
+          align = le16(b, p0 + 12)
+          bits = le16(b, p0 + 14)
           if (fmtCode == 0xFFFE) { // EXTENSIBLE: SubFormat's first word
             require(size >= 40, "short WAVE_FORMAT_EXTENSIBLE fmt chunk")
-            fmtCode = u16(b, pos + 8 + 24)
+            fmtCode = le16(b, p0 + 24)
           }
-        } else if (id == "data") {
+        } else if (c.is("data")) {
           require(fmtCode > 0, "WAV data chunk precedes fmt")
-          val p0 = pos + 8
           out = (fmtCode, bits) match {
             case (1, 8) => // offset-binary: 0x80 is zero
               Array.tabulate(size)(i => ((b(p0 + i) & 0xFF) - 128).toFloat)
             case (1, 16) =>
-              Array.tabulate(size / 2)(i =>
-                (((b(p0 + 2 * i) & 0xFF) |
-                  (b(p0 + 2 * i + 1).toInt << 8)).toShort).toFloat)
+              Array.tabulate(size / 2)(i => le16(b, p0 + 2 * i).toShort.toFloat)
             case (1, 24) =>
               Array.tabulate(size / 3) { i =>
                 val v = (b(p0 + 3 * i) & 0xFF) |
@@ -540,14 +528,14 @@ object Multimodal {
                 ((v << 8) >> 8).toFloat // sign-extend bit 23
               }
             case (1, 32) =>
-              Array.tabulate(size / 4)(i => i32(b, p0 + 4 * i).toFloat)
+              Array.tabulate(size / 4)(i => le32(b, p0 + 4 * i).toInt.toFloat)
             case (3, 32) =>
               Array.tabulate(size / 4)(i =>
-                java.lang.Float.intBitsToFloat(i32(b, p0 + 4 * i)))
+                java.lang.Float.intBitsToFloat(le32(b, p0 + 4 * i).toInt))
             case (3, 64) =>
               Array.tabulate(size / 8) { i =>
-                val lo = i32(b, p0 + 8 * i).toLong & 0xFFFFFFFFL
-                val hi = i32(b, p0 + 8 * i + 4).toLong
+                val lo = le32(b, p0 + 8 * i)
+                val hi = le32(b, p0 + 8 * i + 4)
                 java.lang.Double.longBitsToDouble((hi << 32) | lo).toFloat
               }
             case (7, 8) =>
@@ -562,7 +550,6 @@ object Multimodal {
               s"unsupported WAV encoding: format $f at $w bits")
           }
         }
-        pos += 8 + size + (size % 2) // odd chunks carry a pad byte
       }
       require(out != null, "no WAV data chunk")
       out
@@ -573,19 +560,13 @@ object Multimodal {
     private[graft] def decodeWavPcm16(b: Array[Byte]): Array[Float] =
       decodeWav(b)
 
-    private def be16s(b: Array[Byte], o: Int): Int =
-      ((b(o) << 8) | (b(o + 1) & 0xFF)).toShort.toInt
-    private def be32u(b: Array[Byte], o: Int): Long =
-      ((b(o) & 0xFFL) << 24) | ((b(o + 1) & 0xFFL) << 16) |
-        ((b(o + 2) & 0xFFL) << 8) | (b(o + 3) & 0xFFL)
-
     /** The 80-bit IEEE 754 extended float AIFF stores its sample rate
       * in: sign(1) + exponent(15, bias 16383) + mantissa(64 with an
       * EXPLICIT integer bit). Integer-exact for every real audio rate
       * (value = mantissa >>> (63 − unbiased exponent)); refuses
       * rates that are not positive integers in range. */
     private[graft] def extended80ToInt(b: Array[Byte], o: Int): Int = {
-      val se = ((b(o) & 0xFF) << 8) | (b(o + 1) & 0xFF)
+      val se = be16(b, o)
       require((se & 0x8000) == 0, "negative AIFF sample rate")
       val exp = se & 0x7FFF
       var mant = 0L
@@ -616,37 +597,36 @@ object Multimodal {
         b(3) == 'M', "not an AIFF FORM")
       val kind = new String(b, 8, 4, "US-ASCII")
       require(kind == "AIFF" || kind == "AIFC", s"FORM type $kind")
-      var pos = 12
       var bits = 0
       var comp = if (kind == "AIFC") "" else "NONE"
       var out: Array[Float] = null
       var sawComm = false
-      while (out == null && pos + 8 <= b.length) {
-        val id = new String(b, pos, 4, "US-ASCII")
-        val size = be32u(b, pos + 4)
-        require(size >= 0 && pos + 8L + size <= b.length,
-          s"truncated AIFF chunk $id")
-        if (id == "COMM") {
+      val c = Containers.riff(b, 12, b.length) // FORM: big-endian sizes
+      while (out == null && c.next()) {
+        require(!c.overrun, s"truncated AIFF chunk ${c.name}")
+        val p = c.start
+        val size = c.end - p
+        if (c.is("COMM")) {
           require(size >= 18, "short AIFF COMM chunk")
-          bits = ((b(pos + 14) & 0xFF) << 8) | (b(pos + 15) & 0xFF)
-          extended80ToInt(b, pos + 16) // validated; value used by AudioMeta
+          bits = be16(b, p + 6)
+          extended80ToInt(b, p + 8) // validated; value used by AudioMeta
           if (kind == "AIFC") {
             require(size >= 22, "AIFC COMM missing compression type")
-            comp = new String(b, pos + 26, 4, "US-ASCII")
+            comp = new String(b, p + 18, 4, "US-ASCII")
           }
           sawComm = true
-        } else if (id == "SSND") {
+        } else if (c.is("SSND")) {
           require(sawComm, "AIFF SSND precedes COMM")
           require(size >= 8, "short AIFF SSND chunk")
-          val dataOff = be32u(b, pos + 8)
-          require(dataOff >= 0 && 8 + dataOff <= size, "bad SSND offset")
-          val p0 = (pos + 16 + dataOff).toInt
+          val dataOff = be32(b, p)
+          require(8 + dataOff <= size, "bad SSND offset")
+          val p0 = (p + 8 + dataOff).toInt
           val n = (size - 8 - dataOff).toInt
           out = (comp, bits) match {
             case ("NONE", 8) =>
               Array.tabulate(n)(i => b(p0 + i).toFloat) // SIGNED 8-bit
             case ("NONE", 16) =>
-              Array.tabulate(n / 2)(i => be16s(b, p0 + 2 * i).toFloat)
+              Array.tabulate(n / 2)(i => be16(b, p0 + 2 * i).toShort.toFloat)
             case ("NONE", 24) =>
               Array.tabulate(n / 3) { i =>
                 val v = ((b(p0 + 3 * i) & 0xFF) << 16) |
@@ -655,17 +635,15 @@ object Multimodal {
                 ((v << 8) >> 8).toFloat
               }
             case ("NONE", 32) =>
-              Array.tabulate(n / 4)(i => be32u(b, p0 + 4 * i).toInt.toFloat)
+              Array.tabulate(n / 4)(i => be32(b, p0 + 4 * i).toInt.toFloat)
             case ("sowt", 16) =>
-              Array.tabulate(n / 2)(i =>
-                (((b(p0 + 2 * i) & 0xFF) |
-                  (b(p0 + 2 * i + 1).toInt << 8)).toShort).toFloat)
+              Array.tabulate(n / 2)(i => le16(b, p0 + 2 * i).toShort.toFloat)
             case ("fl32" | "FL32", 32) =>
               Array.tabulate(n / 4)(i =>
-                java.lang.Float.intBitsToFloat(be32u(b, p0 + 4 * i).toInt))
+                java.lang.Float.intBitsToFloat(be32(b, p0 + 4 * i).toInt))
             case ("fl64" | "FL64", 64) =>
               Array.tabulate(n / 8) { i =>
-                val hi = be32u(b, p0 + 8 * i); val lo = be32u(b, p0 + 8 * i + 4)
+                val hi = be32(b, p0 + 8 * i); val lo = be32(b, p0 + 8 * i + 4)
                 java.lang.Double.longBitsToDouble((hi << 32) | lo).toFloat
               }
             case ("ulaw" | "ULAW", _) =>
@@ -676,7 +654,6 @@ object Multimodal {
               s"unsupported AIFF compression '$c' at $w bits")
           }
         }
-        pos += 8 + size.toInt + (size.toInt & 1) // chunks word-align
       }
       require(out != null, "no AIFF SSND chunk")
       out
@@ -688,9 +665,9 @@ object Multimodal {
     private[graft] def decodeAu(b: Array[Byte]): Array[Float] = {
       require(b.length >= 24 && b(0) == '.' && b(1) == 's' && b(2) == 'n' &&
         b(3) == 'd', "not a .au stream")
-      val off = be32u(b, 4)
-      val dataSize = be32u(b, 8)
-      val enc = be32u(b, 12).toInt
+      val off = be32(b, 4)
+      val dataSize = be32(b, 8)
+      val enc = be32(b, 12).toInt
       require(off >= 24 && off <= b.length, s"bad .au data offset $off")
       val n = (if (dataSize == 0xFFFFFFFFL) b.length - off
                else math.min(dataSize, b.length - off)).toInt
@@ -699,17 +676,17 @@ object Multimodal {
         case 1 => Array.tabulate(n)(i => mulawToLinear(b(p0 + i) & 0xFF).toFloat)
         case 27 => Array.tabulate(n)(i => alawToLinear(b(p0 + i) & 0xFF).toFloat)
         case 2 => Array.tabulate(n)(i => b(p0 + i).toFloat)
-        case 3 => Array.tabulate(n / 2)(i => be16s(b, p0 + 2 * i).toFloat)
+        case 3 => Array.tabulate(n / 2)(i => be16(b, p0 + 2 * i).toShort.toFloat)
         case 4 => Array.tabulate(n / 3) { i =>
           val v = ((b(p0 + 3 * i) & 0xFF) << 16) |
             ((b(p0 + 3 * i + 1) & 0xFF) << 8) | (b(p0 + 3 * i + 2) & 0xFF)
           ((v << 8) >> 8).toFloat
         }
-        case 5 => Array.tabulate(n / 4)(i => be32u(b, p0 + 4 * i).toInt.toFloat)
+        case 5 => Array.tabulate(n / 4)(i => be32(b, p0 + 4 * i).toInt.toFloat)
         case 6 => Array.tabulate(n / 4)(i =>
-          java.lang.Float.intBitsToFloat(be32u(b, p0 + 4 * i).toInt))
+          java.lang.Float.intBitsToFloat(be32(b, p0 + 4 * i).toInt))
         case 7 => Array.tabulate(n / 8) { i =>
-          val hi = be32u(b, p0 + 8 * i); val lo = be32u(b, p0 + 8 * i + 4)
+          val hi = be32(b, p0 + 8 * i); val lo = be32(b, p0 + 8 * i + 4)
           java.lang.Double.longBitsToDouble((hi << 32) | lo).toFloat
         }
         case other => throw new IllegalArgumentException(

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.util.Containers
+
 /** Dependency-free VP8L (lossless WebP) codec: a full pixel DECODER
   * for the VP8L bitstream (RFC 9649 §3-5 / the WebP lossless spec)
   * plus a fixture ENCODER — the [[FlacCodec]]/[[GifCodec]] pattern:
@@ -286,26 +288,18 @@ object Vp8lCodec {
   private def subSample(size: Int, bits: Int): Int =
     (size + (1 << bits) - 1) >> bits
 
-  def isVp8l(bytes: Array[Byte]): Boolean = payloadRange(bytes).isDefined
+  def isVp8l(bytes: Array[Byte]): Boolean = vp8l(bytes).isDefined
 
-  /** Locates the VP8L payload: bare (0x2F signature) or inside a
+  /** The VP8L payload's bounds: bare (0x2F signature) or inside a
     * RIFF/WEBP container (direct VP8L chunk or VP8X-extended file);
     * a lossy VP8 chunk returns None (the caller refuses loudly). */
-  private def payloadRange(b: Array[Byte]): Option[(Int, Int)] = {
+  private def vp8l(b: Array[Byte]): Option[(Int, Int)] = {
     if (b == null || b.length < 5) return None
     if ((b(0) & 0xFF) == 0x2F) return Some((0, b.length))
-    def tag(i: Int, s: String) =
-      i + s.length <= b.length && s.indices.forall(j => b(i + j) == s(j).toByte)
-    if (!(tag(0, "RIFF") && tag(8, "WEBP"))) return None
-    var i = 12
-    while (i + 8 <= b.length) {
-      val size = (b(i + 4) & 0xFF) | ((b(i + 5) & 0xFF) << 8) |
-        ((b(i + 6) & 0xFF) << 16) | ((b(i + 7) & 0xFF) << 24)
-      if (size < 0 || i + 8L + size > b.length) return None
-      if (tag(i, "VP8L")) return Some((i + 8, i + 8 + size))
-      i += 8 + size + (size & 1)
-    }
-    None
+    if (!(Containers.tag(b, 0, "RIFF") && Containers.tag(b, 8, "WEBP")))
+      return None
+    val c = Containers.riff(b, 12, b.length)
+    if (c.find("VP8L") && !c.overrun) Some((c.start, c.end)) else None
   }
 
   // ---------------------------------------------------------------
@@ -325,7 +319,7 @@ object Vp8lCodec {
   }
 
   def decodeArgb(bytes: Array[Byte]): (Int, Int, Array[Int]) = {
-    val (from, until) = payloadRange(bytes).getOrElse {
+    val (from, until) = vp8l(bytes).getOrElse {
       throw new IllegalArgumentException(
         if (bytes != null && bytes.length > 15 &&
             new String(bytes, 12, 4, "US-ASCII").startsWith("VP8"))

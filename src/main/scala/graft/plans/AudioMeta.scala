@@ -9,11 +9,15 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.util.Containers
+import graft.util.Containers.{be16, be32, le16, le32, tag}
+
 /** Dependency-free audio metadata from raw bytes — the audio sibling
   * of [[ImageMeta]]: container format, sample rate, channel count,
   * bit depth, and total frame count parsed straight out of the header
   * with no codec library. WAV (RIFF chunk walk to "fmt " and "data",
-  * per the WAVE spec's little-endian layout), FLAC (the 34-byte
+  * per the WAVE spec's little-endian layout; chunks framed by
+  * [[graft.util.Containers.riff]] like AIFF's), FLAC (the 34-byte
   * STREAMINFO metadata block's packed bit fields, per the FLAC format
   * spec), AIFF/AIFF-C (FORM walk to COMM, the 80-bit extended-float
   * sample rate), Sun .au (fixed big-endian header), MP3 frame
@@ -64,16 +68,6 @@ object AudioMeta {
     new GenericInternalRow(
       Array[Any](UTF8String.fromString(fmt), rate, ch, bits, frames))
 
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-      ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
-
-  private def tag(b: Array[Byte], i: Int, s: String): Boolean =
-    i + s.length <= b.length && s.indices.forall(j => b(i + j) == s(j).toByte)
-
   /** Called from both the interpreted eval and the generated code. */
   def parse(b: Array[Byte]): InternalRow = {
     if (b == null) return null
@@ -85,19 +79,20 @@ object AudioMeta {
       var rate: Any = null; var ch: Any = null; var bits: Any = null
       var align = 0
       var dataSize = -1L
-      var i = 12
-      while (i + 8 <= b.length) {
-        val size = le32(b, i + 4)
-        if (tag(b, i, "fmt ") && i + 8 + 16 <= b.length) {
-          ch = le16(b, i + 10)
-          rate = le32(b, i + 12).toInt
-          align = le16(b, i + 20)
-          bits = le16(b, i + 22)
-        } else if (tag(b, i, "data")) {
-          dataSize = size
+      // The walk ends at a chunk that runs past the bytes given (a
+      // header prefix, a cut-off upload): fields read before it stand,
+      // and a data chunk's declared size still counts.
+      val c = Containers.riff(b, 12, b.length)
+      while (c.next()) {
+        val p = c.start
+        if (c.is("fmt ") && c.end - p >= 16) {
+          ch = le16(b, p + 2)
+          rate = le32(b, p + 4).toInt
+          align = le16(b, p + 12)
+          bits = le16(b, p + 14)
+        } else if (c.is("data")) {
+          dataSize = c.size
         }
-        // chunks are word-aligned: odd sizes carry a pad byte
-        i += 8 + size.toInt + (size.toInt & 1)
       }
       val frames: Any =
         if (dataSize >= 0 && align > 0) dataSize / align else null
@@ -126,25 +121,17 @@ object AudioMeta {
     // integer-exact by the same routine the decoder uses).
     if (tag(b, 0, "FORM") && b.length >= 12 &&
         (tag(b, 8, "AIFF") || tag(b, 8, "AIFC"))) {
-      var i = 12
-      while (i + 8 <= b.length) {
-        val size = ((b(i + 4) & 0xFFL) << 24) | ((b(i + 5) & 0xFFL) << 16) |
-          ((b(i + 6) & 0xFFL) << 8) | (b(i + 7) & 0xFFL)
-        if (size < 0 || i + 8L + size > b.length)
-          return row("aiff", null, null, null, null)
-        if (tag(b, i, "COMM") && size >= 18) {
-          val ch = ((b(i + 8) & 0xFF) << 8) | (b(i + 9) & 0xFF)
-          val frames = ((b(i + 10) & 0xFFL) << 24) |
-            ((b(i + 11) & 0xFFL) << 16) | ((b(i + 12) & 0xFFL) << 8) |
-            (b(i + 13) & 0xFFL)
-          val bits = ((b(i + 14) & 0xFF) << 8) | (b(i + 15) & 0xFF)
-          val rate =
-            try graft.llm.Multimodal.BmpWavDecoder.extended80ToInt(b, i + 16)
-            catch { case _: IllegalArgumentException =>
-              return row("aiff", null, ch, bits, frames) }
-          return row("aiff", rate, ch, bits, frames)
-        }
-        i += 8 + size.toInt + (size.toInt & 1)
+      val c = Containers.riff(b, 12, b.length) // FORM: big-endian sizes
+      if (c.find("COMM") && !c.overrun && c.end - c.start >= 18) {
+        val p = c.start
+        val ch = be16(b, p)
+        val frames = be32(b, p + 2)
+        val bits = be16(b, p + 6)
+        val rate =
+          try graft.llm.Multimodal.BmpWavDecoder.extended80ToInt(b, p + 8)
+          catch { case _: IllegalArgumentException =>
+            return row("aiff", null, ch, bits, frames) }
+        return row("aiff", rate, ch, bits, frames)
       }
       return row("aiff", null, null, null, null)
     }
@@ -152,13 +139,10 @@ object AudioMeta {
     // encoding code, frames from data size / frame bytes.
     if (tag(b, 0, ".snd")) {
       if (b.length < 24) return row("au", null, null, null, null)
-      def be32(o: Int): Long = ((b(o) & 0xFFL) << 24) |
-        ((b(o + 1) & 0xFFL) << 16) | ((b(o + 2) & 0xFFL) << 8) |
-        (b(o + 3) & 0xFFL)
-      val dataSize = be32(8)
-      val enc = be32(12).toInt
-      val rate = be32(16).toInt
-      val ch = be32(20).toInt
+      val dataSize = be32(b, 8)
+      val enc = be32(b, 12).toInt
+      val rate = be32(b, 16).toInt
+      val ch = be32(b, 20).toInt
       val width = enc match {
         case 1 | 2 | 27 => 1
         case 3 => 2

@@ -9,12 +9,16 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.util.Containers
+import graft.util.Containers.{be16, be32, le16, le32, tag}
+
 /** Dependency-free image metadata from raw bytes: container format and
   * pixel dimensions parsed straight out of the header — PNG (IHDR
   * chunk), JPEG (SOFn segment walk), GIF (logical screen descriptor),
   * WebP (RIFF chunk walk: VP8X canvas, VP8 lossy start-code fields,
   * VP8L lossless packed fields), AVIF (ISO-BMFF box walk to the first
-  * meta → iprp → ipco → ispe property) — with no codec library. This
+  * meta → iprp → ipco → ispe property) — with no codec library; the
+  * segment, chunk and box walks are [[graft.util.Containers]]'. This
   * makes the multimodal binary column's `width`/`height`/`format`
   * REAL metadata (the pixel-decode step stays behind
   * [[graft.llm.Multimodal.MediaDecoder]]; WebP/AVIF pixels genuinely
@@ -60,16 +64,6 @@ object ImageMeta {
   private def row(fmt: String, w: Any, h: Any): InternalRow =
     new GenericInternalRow(Array[Any](UTF8String.fromString(fmt), w, h))
 
-  private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 24) | ((b(i + 1) & 0xFF) << 16) |
-      ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
-
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-
   /** SOF0-SOF15 carry frame dimensions, except the non-frame markers
     * that share the 0xCx range: DHT (C4), JPG (C8), DAC (CC). */
   private def isSof(m: Int): Boolean =
@@ -86,7 +80,7 @@ object ImageMeta {
         b(6) == 0x1A && b(7) == 0x0A) {
       if (b.length >= 24 && b(12) == 'I' && b(13) == 'H' && b(14) == 'D' &&
           b(15) == 'R')
-        return row("png", be32(b, 16), be32(b, 20))
+        return row("png", be32(b, 16).toInt, be32(b, 20).toInt)
       return row("png", null, null)
     }
     // GIF: "GIF87a"/"GIF89a", then the logical screen descriptor's
@@ -96,26 +90,13 @@ object ImageMeta {
       if (b.length >= 10) return row("gif", le16(b, 6), le16(b, 8))
       return row("gif", null, null)
     }
-    // JPEG: SOI, then a marker-segment walk to the first SOFn frame
+    // JPEG: SOI, then the header segments up to the first SOFn frame
     // header (precision byte, then big-endian height and width).
     if (b.length >= 2 && (b(0) & 0xFF) == 0xFF && (b(1) & 0xFF) == 0xD8) {
-      var i = 2
-      while (i + 1 < b.length) {
-        if ((b(i) & 0xFF) != 0xFF) return row("jpeg", null, null)
-        var j = i
-        while (j + 1 < b.length && (b(j + 1) & 0xFF) == 0xFF) j += 1 // fill bytes
-        if (j + 1 >= b.length) return row("jpeg", null, null)
-        val marker = b(j + 1) & 0xFF
-        if (marker == 0x01 || (marker >= 0xD0 && marker <= 0xD9)) {
-          i = j + 2 // standalone marker: TEM, RSTn, SOI, EOI — no length
-        } else {
-          if (j + 3 >= b.length) return row("jpeg", null, null)
-          if (isSof(marker)) {
-            if (j + 8 >= b.length) return row("jpeg", null, null)
-            return row("jpeg", be16(b, j + 7), be16(b, j + 5))
-          }
-          i = j + 2 + be16(b, j + 2)
-        }
+      val seg = Containers.jpegSegments(b)
+      while (seg.next()) if (isSof(seg.id)) {
+        if (seg.end - seg.start < 5) return row("jpeg", null, null)
+        return row("jpeg", be16(b, seg.start + 3), be16(b, seg.start + 1))
       }
       return row("jpeg", null, null)
     }
@@ -124,82 +105,52 @@ object ImageMeta {
     // LE canvas minus-one fields), VP8 (lossy: 0x9D012A start code,
     // 14-bit LE fields), or VP8L (lossless: 0x2F signature, 14-bit
     // packed minus-one fields).
-    if (b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-        b(3) == 'F' && b(8) == 'W' && b(9) == 'E' && b(10) == 'B' &&
-        b(11) == 'P') {
-      var i = 12
-      while (i + 8 <= b.length) {
-        val size = le32(b, i + 4)
-        val p = i + 8
-        if (size < 0 || p + size > b.length) return row("webp", null, null)
-        if (b(i) == 'V' && b(i + 1) == 'P' && b(i + 2) == '8') {
-          (b(i + 3): @annotation.switch) match {
-            case 'X' => // extended header: canvas size at payload +4
-              if (size >= 10)
-                return row("webp",
-                  (le16(b, p + 4) | ((b(p + 6) & 0xFF) << 16)) + 1,
-                  (le16(b, p + 7) | ((b(p + 9) & 0xFF) << 16)) + 1)
-              return row("webp", null, null)
-            case ' ' => // lossy: frame tag (3), start code 9D 01 2A
-              if (size >= 10 && (b(p + 3) & 0xFF) == 0x9D &&
-                  (b(p + 4) & 0xFF) == 0x01 && (b(p + 5) & 0xFF) == 0x2A)
-                return row("webp", le16(b, p + 6) & 0x3FFF,
-                  le16(b, p + 8) & 0x3FFF)
-              return row("webp", null, null)
-            case 'L' => // lossless: 0x2F, then 2x 14-bit minus-one
-              if (size >= 5 && (b(p) & 0xFF) == 0x2F) {
-                val bits = le32(b, p + 1)
-                return row("webp", (bits & 0x3FFF).toInt + 1,
-                  ((bits >> 14) & 0x3FFF).toInt + 1)
-              }
-              return row("webp", null, null)
-            case _ => // fall through to the next chunk
-          }
+    if (tag(b, 0, "RIFF") && tag(b, 8, "WEBP")) {
+      val c = Containers.riff(b, 12, b.length)
+      while (c.next() && !c.overrun) {
+        val p = c.start
+        val size = c.end - c.start
+        if (c.is("VP8X")) { // extended header: canvas size at payload +4
+          if (size >= 10)
+            return row("webp",
+              (le16(b, p + 4) | ((b(p + 6) & 0xFF) << 16)) + 1,
+              (le16(b, p + 7) | ((b(p + 9) & 0xFF) << 16)) + 1)
+          return row("webp", null, null)
         }
-        i = p + size.toInt + (size.toInt & 1) // RIFF chunks pad to even
+        if (c.is("VP8 ")) { // lossy: frame tag (3), start code 9D 01 2A
+          if (size >= 10 && (b(p + 3) & 0xFF) == 0x9D &&
+              (b(p + 4) & 0xFF) == 0x01 && (b(p + 5) & 0xFF) == 0x2A)
+            return row("webp", le16(b, p + 6) & 0x3FFF, le16(b, p + 8) & 0x3FFF)
+          return row("webp", null, null)
+        }
+        if (c.is("VP8L")) { // lossless: 0x2F, then 2x 14-bit minus-one
+          if (size >= 5 && (b(p) & 0xFF) == 0x2F) {
+            val bits = le32(b, p + 1)
+            return row("webp", (bits & 0x3FFF).toInt + 1,
+              ((bits >> 14) & 0x3FFF).toInt + 1)
+          }
+          return row("webp", null, null)
+        }
       }
       return row("webp", null, null)
     }
     // AVIF: ISO-BMFF with an 'avif'/'avis' ftyp brand; dimensions are
     // the first 'ispe' (image spatial extents) property inside
     // meta → iprp → ipco. meta is a FULL box (4-byte version/flags).
-    if (b.length >= 12 && be32top(b, 4) == fourcc("ftyp") &&
-        (be32top(b, 8) == fourcc("avif") || be32top(b, 8) == fourcc("avis"))) {
-      var i = 0
-      while (i + 8 <= b.length) {
-        val sz = be32len(b, i)
-        if (sz < 8 || i + sz > b.length) return row("avif", null, null)
-        if (be32top(b, i + 4) == fourcc("meta")) {
-          var j = i + 12 // header + version/flags (full box)
-          val me = i + sz
-          while (j + 8 <= me) {
-            val s2 = be32len(b, j)
-            if (s2 < 8 || j + s2 > me) return row("avif", null, null)
-            if (be32top(b, j + 4) == fourcc("iprp")) {
-              var k = j + 8
-              val pe = j + s2
-              while (k + 8 <= pe) {
-                val s3 = be32len(b, k)
-                if (s3 < 8 || k + s3 > pe) return row("avif", null, null)
-                if (be32top(b, k + 4) == fourcc("ipco")) {
-                  var m = k + 8
-                  val ce = k + s3
-                  while (m + 8 <= ce) {
-                    val s4 = be32len(b, m)
-                    if (s4 < 8 || m + s4 > ce) return row("avif", null, null)
-                    if (be32top(b, m + 4) == fourcc("ispe") && s4 >= 20)
-                      return row("avif", be32(b, m + 12), be32(b, m + 16))
-                    m += s4
-                  }
-                }
-                k += s3
-              }
-            }
-            j += s2
+    if (tag(b, 4, "ftyp") && (tag(b, 8, "avif") || tag(b, 8, "avis"))) {
+      val meta = Containers.boxes(b, 0, b.length)
+      if (meta.find("meta") && !meta.overrun) {
+        val iprp = Containers.boxes(b, meta.start + 4, meta.end)
+        if (iprp.find("iprp") && !iprp.overrun) {
+          val ipco = Containers.boxes(b, iprp.start, iprp.end)
+          if (ipco.find("ipco") && !ipco.overrun) {
+            val ispe = Containers.boxes(b, ipco.start, ipco.end)
+            // full box: version/flags, then width and height
+            if (ispe.find("ispe") && !ispe.overrun && ispe.end - ispe.start >= 12)
+              return row("avif", be32(b, ispe.start + 4).toInt,
+                be32(b, ispe.start + 8).toInt)
           }
-          return row("avif", null, null)
         }
-        i += sz
       }
       return row("avif", null, null)
     }
@@ -250,29 +201,13 @@ object ImageMeta {
     }
     // QOI: "qoif" magic, big-endian dims at 4/8.
     if (graft.llm.QoiCodec.isQoi(b))
-      return row("qoi", be32(b, 4), be32(b, 8))
+      return row("qoi", be32(b, 4).toInt, be32(b, 8).toInt)
     // TGA last: the format has no magic, so the header-consistency
     // sniff only runs when nothing above matched.
     if (graft.llm.TgaCodec.isTga(b))
       return row("tga", le16(b, 12), le16(b, 14))
     row("unknown", null, null)
   }
-
-  private def fourcc(s: String): Int =
-    (s(0) << 24) | (s(1) << 16) | (s(2) << 8) | s(3)
-
-  private def be32top(b: Array[Byte], i: Int): Int =
-    if (i + 4 > b.length) 0
-    else ((b(i) & 0xFF) << 24) | ((b(i + 1) & 0xFF) << 16) |
-      ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
-
-  /** Box length as Int; 0/1 (to-end / largesize) unsupported here —
-    * header fixtures and real still-image AVIFs use plain sizes. */
-  private def be32len(b: Array[Byte], i: Int): Int = be32top(b, i)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-      ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
 }
 
 object ImageMetaNative {

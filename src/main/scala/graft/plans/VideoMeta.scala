@@ -9,14 +9,20 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.util.Containers
+import graft.util.Containers.{be32, be64, le32, tag}
+
 /** Dependency-free video metadata from raw bytes — the video sibling
   * of [[ImageMeta]]/[[AudioMeta]]: container format, brand, movie
   * timescale/duration, and first-track pixel dimensions parsed
   * straight out of the header with no codec library. MP4/ISO BMFF
   * (ISO 14496-12 box walk: ftyp → moov → mvhd/trak → tkhd, both mvhd
-  * versions, 64-bit largesize boxes) is parsed fully; RIFF AVI reads
-  * dimensions/frame count from the avih main header (duration in a
-  * fixed µs timescale); EBML (WebM/Matroska) is detected by magic.
+  * versions) is parsed fully; RIFF AVI reads dimensions/frame count
+  * from the avih main header (duration in a fixed µs timescale); both
+  * containers are framed by [[graft.util.Containers]] (largesize and
+  * to-the-end boxes, padded chunks), and a box or chunk that does not
+  * fit ends the parse with the fields read so far. EBML
+  * (WebM/Matroska) is detected by magic.
   * Frame DECODE stays behind [[graft.llm.Multimodal.MediaDecoder]]
   * exactly as for images and audio — REAL for MJPEG-in-AVI via
   * [[graft.llm.AviMjpeg]] + [[graft.llm.JpegCodec]].
@@ -66,37 +72,6 @@ object VideoMeta {
         case _ => null
       }, ts, dur, w, h))
 
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xFFL) << 24) | ((b(i + 1) & 0xFFL) << 16) |
-      ((b(i + 2) & 0xFFL) << 8) | (b(i + 3) & 0xFFL)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-      ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
-
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-
-  private def tag(b: Array[Byte], i: Int, s: String): Boolean =
-    i >= 0 && i + s.length <= b.length &&
-      s.indices.forall(j => b(i + j) == s(j).toByte)
-
-  /** Box header at i within [i, end): returns (payloadStart, boxEnd)
-    * or null when malformed/truncated. Handles largesize (size == 1)
-    * and to-end (size == 0) boxes. */
-  private def box(b: Array[Byte], i: Int, end: Int): (Int, Int) = {
-    if (i + 8 > end) return null
-    val size = be32(b, i)
-    if (size == 0) (i + 8, end)
-    else if (size == 1) {
-      if (i + 16 > end) return null
-      val large = be64(b, i + 8)
-      if (large < 16 || i + large > end) null else (i + 16, i + large.toInt)
-    }
-    else if (size < 8 || i + size > end) null
-    else (i + 8, i + size.toInt)
-  }
-
   /** Called from both the interpreted eval and the generated code. */
   def parse(b: Array[Byte]): InternalRow = {
     if (b == null) return null
@@ -110,29 +85,17 @@ object VideoMeta {
     // duration_ms composes the same way as for MP4. Header-less AVI
     // magic (or any truncation) degrades to the null-field row.
     if (tag(b, 0, "RIFF") && tag(b, 8, "AVI ")) {
-      var i = 12
-      while (i + 8 <= b.length) {
-        val size = le32(b, i + 4)
-        val payload = i + 8
-        if (payload + size > b.length)
-          return row("avi", null, null, null, null, null)
-        if (tag(b, i, "LIST") && tag(b, payload, "hdrl")) {
-          val e = (payload + size).toInt
-          var j = payload + 4
-          while (j + 8 <= e) {
-            val cs = le32(b, j + 4)
-            val cp = j + 8
-            if (cp + cs > e) return row("avi", null, null, null, null, null)
-            if (tag(b, j, "avih") && cs >= 40)
-              return row("avi", null, 1000000L,
-                le32(b, cp) * le32(b, cp + 16),
-                le32(b, cp + 32).toInt, le32(b, cp + 36).toInt)
-            j = (cp + cs + (cs & 1)).toInt
+      val top = Containers.riff(b, 12, b.length)
+      while (top.next() && !top.overrun)
+        if (top.is("LIST") && tag(b, top.start, "hdrl")) {
+          val c = Containers.riff(b, top.start + 4, top.end)
+          if (c.find("avih") && !c.overrun && c.end - c.start >= 40) {
+            val p = c.start
+            return row("avi", null, 1000000L, le32(b, p) * le32(b, p + 16),
+              le32(b, p + 32).toInt, le32(b, p + 36).toInt)
           }
           return row("avi", null, null, null, null, null)
         }
-        i = (payload + size + (size & 1)).toInt
-      }
       return row("avi", null, null, null, null, null)
     }
     // ISO BMFF: the first top-level box must carry a known type; an
@@ -145,48 +108,39 @@ object VideoMeta {
     var ts: Any = null; var dur: Any = null
     var w: Any = null; var h: Any = null
 
-    var i = 0
-    while (i + 8 <= b.length) {
-      val bx = box(b, i, b.length)
-      if (bx == null) return row("mp4", brand, ts, dur, w, h)
-      val (payload, boxEnd) = bx
-      if (tag(b, i + 4, "ftyp") && payload + 4 <= boxEnd) {
-        brand = new String(b, payload, 4, "US-ASCII")
-      } else if (tag(b, i + 4, "moov")) {
+    val top = Containers.boxes(b, 0, b.length)
+    while (top.next()) {
+      if (top.overrun) return row("mp4", brand, ts, dur, w, h)
+      if (top.is("ftyp") && top.start + 4 <= top.end) {
+        brand = new String(b, top.start, 4, "US-ASCII")
+      } else if (top.is("moov")) {
         // moov children: mvhd (movie header), trak → tkhd (first track)
-        var j = payload
-        while (j + 8 <= boxEnd) {
-          val cb = box(b, j, boxEnd)
-          if (cb == null) return row("mp4", brand, ts, dur, w, h)
-          val (cp, ce) = cb
-          if (tag(b, j + 4, "mvhd")) {
-            val v = b(cp) & 0xFF
-            if (v == 0 && cp + 20 <= ce) {
-              ts = be32(b, cp + 12); dur = be32(b, cp + 16)
-            } else if (v == 1 && cp + 32 <= ce) {
-              ts = be32(b, cp + 20); dur = be64(b, cp + 24)
+        val m = Containers.boxes(b, top.start, top.end)
+        while (m.next()) {
+          if (m.overrun) return row("mp4", brand, ts, dur, w, h)
+          val p = m.start
+          if (m.is("mvhd") && p < m.end) {
+            val v = b(p) & 0xFF
+            if (v == 0 && p + 20 <= m.end) {
+              ts = be32(b, p + 12); dur = be32(b, p + 16)
+            } else if (v == 1 && p + 32 <= m.end) {
+              ts = be32(b, p + 20); dur = be64(b, p + 24)
             }
-          } else if (tag(b, j + 4, "trak") && w == null) {
-            var t = cp
-            while (t + 8 <= ce) {
-              val tb = box(b, t, ce)
-              if (tb == null) return row("mp4", brand, ts, dur, w, h)
-              val (tp, te) = tb
-              if (tag(b, t + 4, "tkhd")) {
-                val tv = b(tp) & 0xFF
-                val wOff = if (tv == 1) tp + 88 else tp + 76
-                if (wOff + 8 <= te) {
+          } else if (m.is("trak") && w == null) {
+            val t = Containers.boxes(b, p, m.end)
+            while (t.next()) {
+              if (t.overrun) return row("mp4", brand, ts, dur, w, h)
+              if (t.is("tkhd") && t.start < t.end) {
+                val wOff = t.start + (if (b(t.start) == 1) 88 else 76)
+                if (wOff + 8 <= t.end) {
                   w = (be32(b, wOff) >>> 16).toInt
                   h = (be32(b, wOff + 4) >>> 16).toInt
                 }
               }
-              t = te
             }
           }
-          j = ce
         }
       }
-      i = boxEnd
     }
     row("mp4", brand, ts, dur, w, h)
   }

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
 
+import graft.util.Containers
+import graft.util.Containers.{be16, be32, be64}
+
 /** MP4 (ISO-BMFF) sample-table indexer: the frame index a video
   * pipeline needs to random-access samples WITHOUT a codec — per
   * sample: decode timestamp, duration, byte size, absolute file
@@ -15,9 +18,10 @@ import scala.collection.mutable.ArrayBuffer
   * payloads stay undecoded): at 100 TB an indexing pass over moov
   * boxes is a metadata-scale job (moov is ~0.1% of file bytes) that
   * lets downstream frame-sampling read EXACT byte ranges instead of
-  * scanning files. Parsing is defensive: box sizes are bounds-checked
-  * against their parent, largesize (size==1) boxes are followed,
-  * unknown boxes skip.
+  * scanning files. Parsing is defensive: boxes are framed by
+  * [[graft.util.Containers.boxes]] (sizes bounds-checked against their
+  * parent, largesize and to-the-end boxes followed), a box that does
+  * not fit refuses, unknown boxes skip.
   *
   * `index` is the Spark path: (id, bytes) rows flatMap narrowly into
   * per-sample rows — no shuffle; at scale feed it moov prefixes, not
@@ -30,52 +34,28 @@ object Mp4Index {
                     duration: Long, size: Long, offset: Long,
                     keyframe: Boolean)
 
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xFFL) << 24) | ((b(i + 1) & 0xFFL) << 16) |
-      ((b(i + 2) & 0xFFL) << 8) | (b(i + 3) & 0xFFL)
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-  private def fourcc(b: Array[Byte], i: Int): String =
-    new String(b, i, 4, "US-ASCII")
-
   /** Children (type, payloadStart, payloadEnd) of the box run in
-    * [from, to). */
-  private def boxes(b: Array[Byte], from: Int, to: Int)
+    * [from, to); a box that does not fit refuses. */
+  private def children(b: Array[Byte], from: Int, to: Int)
       : Seq[(String, Int, Int)] = {
     val out = ArrayBuffer[(String, Int, Int)]()
-    var i = from
-    while (i + 8 <= to) {
-      val sz0 = be32(b, i)
-      val typ = fourcc(b, i + 4)
-      val (payload, end) =
-        if (sz0 == 1) {
-          require(i + 16 <= to, s"truncated largesize box $typ")
-          val sz = be64(b, i + 8)
-          require(sz >= 16 && i + sz <= to, s"box $typ size $sz out of range")
-          (i + 16, i + sz.toInt)
-        } else if (sz0 == 0) (i + 8, to) // to end of enclosing box
-        else {
-          require(sz0 >= 8 && i + sz0 <= to,
-            s"box $typ size $sz0 out of range")
-          (i + 8, (i + sz0).toInt)
-        }
-      out += ((typ, payload, end))
-      i = end
+    val c = Containers.boxes(b, from, to)
+    while (c.next()) {
+      require(!c.overrun, s"box ${c.name} size ${c.size} out of range")
+      out += ((c.name, c.start, c.end))
     }
     out.toSeq
   }
 
   private def find(b: Array[Byte], from: Int, to: Int,
                    typ: String): Option[(Int, Int)] =
-    boxes(b, from, to).collectFirst { case (`typ`, s, e) => (s, e) }
+    children(b, from, to).collectFirst { case (`typ`, s, e) => (s, e) }
 
   /** Every sample of every track carrying a complete stbl. */
   def parse(b: Array[Byte]): Seq[Sample] = {
     val (moovS, moovE) = find(b, 0, b.length, "moov").getOrElse(
       throw new IllegalArgumentException("MP4 carries no moov box"))
-    boxes(b, moovS, moovE).filter(_._1 == "trak").zipWithIndex.flatMap {
+    children(b, moovS, moovE).filter(_._1 == "trak").zipWithIndex.flatMap {
       case ((_, trakS, trakE), trackNo) =>
         parseTrak(b, trakS, trakE, trackNo)
     }
@@ -100,7 +80,7 @@ object Mp4Index {
       if (n == 0 || s + 16 > e) ("", 0, 0)
       else {
         val entryAt = s + 8
-        val cc = fourcc(b, entryAt + 4)
+        val cc = new String(b, entryAt + 4, 4, "US-ASCII")
         // VisualSampleEntry: width/height at +32/+34 from entry start
         if (entryAt + 36 <= e)
           (cc, be16(b, entryAt + 32), be16(b, entryAt + 34))

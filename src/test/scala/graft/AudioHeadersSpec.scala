@@ -3,7 +3,7 @@ package graft
 import graft.llm.AudioFixtures
 import graft.plans.{AudioMeta, AudioMetaNative}
 
-class AudioHeadersSpec extends SparkSpec {
+class AudioHeadersSpec extends SparkSpec with Watchdog {
   import spark.implicits._
 
   private def parsed(bytes: Array[Byte])
@@ -90,6 +90,28 @@ class AudioHeadersSpec extends SparkSpec {
     // unknown encoding: rate/channels survive, width-derived fields null
     assert(parsed(AudioFixtures.au(8000, 1, 23, new Array[Byte](8))) ===
       (("au", Some(8000), Some(1), None, None)))
+  }
+
+  /** 28 bytes: RIFF/WAVE, then one JUNK chunk declaring `size` with
+    * 8 payload bytes present. */
+  private def wavWithChunkSize(size: Long): Array[Byte] = {
+    val b = new java.io.ByteArrayOutputStream()
+    def le32(v: Long): Unit = (0 until 4).foreach(k => b.write((v >>> (8 * k)).toInt))
+    b.write("RIFF".getBytes("US-ASCII")); le32(20)
+    b.write("WAVE".getBytes("US-ASCII"))
+    b.write("JUNK".getBytes("US-ASCII")); le32(size)
+    b.write(new Array[Byte](8))
+    b.toByteArray
+  }
+
+  test("WAV chunk size 0xFFFFFFF8 (-8 as an Int): the null-field row, not a hang") {
+    assert(within(10)(parsed(wavWithChunkSize(0xFFFFFFF8L))) ===
+      (("wav", None, None, None, None)))
+  }
+
+  test("WAV chunk size 0x80000001: the null-field row, not an out-of-bounds read") {
+    assert(within(10)(parsed(wavWithChunkSize(0x80000001L))) ===
+      (("wav", None, None, None, None)))
   }
 
   test("ogg: Vorbis/Opus id headers, last-page granule, truncation") {

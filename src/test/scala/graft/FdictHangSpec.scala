@@ -1,11 +1,6 @@
 package graft
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
-import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.{Seconds, Span}
 
 import graft.llm.{ApngCodec, TiffCodec}
 import graft.llm.ApngCodec.FrameSpec
@@ -14,15 +9,7 @@ import graft.llm.ApngCodec.FrameSpec
   * `needsDictionary()` forever, so an inflate loop that only checks
   * `needsInput()` spins: on a cluster, an executor task that never
   * finishes. Every container decoder must refuse such a stream. */
-class FdictHangSpec extends AnyFunSuite with TimeLimits {
-
-  /** `body` on a daemon thread, failed after 10 s: a decoder that
-    * spins fails its test instead of hanging the suite. */
-  private def within10s[T](body: => T): T = {
-    implicit val signaler: Signaler = ThreadSignaler
-    val f = Future(body)(ExecutionContext.global)
-    failAfter(Span(10, Seconds)) { Await.result(f, Duration.Inf) }
-  }
+class FdictHangSpec extends AnyFunSuite with Watchdog {
 
   /** zlib stream of `raw` compressed against a preset dictionary. */
   private def dictZlib(raw: Array[Byte]): Array[Byte] = {
@@ -55,7 +42,7 @@ class FdictHangSpec extends AnyFunSuite with TimeLimits {
       case _ =>
     }
     val ex = intercept[IllegalArgumentException] {
-      within10s(TiffCodec.decode(b))
+      within(10)(TiffCodec.decode(b))
     }
     assert(ex.getMessage.contains("FDICT"))
   }
@@ -89,7 +76,7 @@ class FdictHangSpec extends AnyFunSuite with TimeLimits {
       pos += 12 + len
     }
     val ex = intercept[IllegalArgumentException] {
-      within10s(ApngCodec.decodeFrames(out.toByteArray))
+      within(10)(ApngCodec.decodeFrames(out.toByteArray))
     }
     assert(ex.getMessage.contains("FDICT"))
   }

@@ -84,6 +84,24 @@ class ImageHeadersSpec extends SparkSpec {
     assert(parsed(ftypOnly) === (("avif", None, None)))
   }
 
+  test("avif: a 64-bit largesize box and a to-the-end meta box are followed") {
+    def be32(v: Long) = Array.tabulate[Byte](4)(k => (v >>> (24 - 8 * k)).toByte)
+    def box(tpe: String, payload: Array[Byte]) =
+      be32(8 + payload.length) ++ tpe.getBytes("US-ASCII") ++ payload
+    val ftyp = box("ftyp", "avif".getBytes("US-ASCII") ++ be32(0) ++
+      "avifmif1".getBytes("US-ASCII"))
+    // size 1: the 64-bit box size follows the type
+    val free = be32(1) ++ "free".getBytes("US-ASCII") ++ be32(0) ++ be32(24) ++
+      new Array[Byte](8)
+    val fullBox = new Array[Byte](4) // version + flags
+    val iprp = box("iprp", box("ipco", box("ispe", fullBox ++ be32(640) ++ be32(480))))
+    assert(parsed(ftyp ++ free ++ box("meta", fullBox ++ iprp)) ===
+      (("avif", Some(640), Some(480))))
+    // size 0: the meta box runs to the end of the file
+    val toEnd = be32(0) ++ "meta".getBytes("US-ASCII") ++ fullBox ++ iprp
+    assert(parsed(ftyp ++ free ++ toEnd) === (("avif", Some(640), Some(480))))
+  }
+
   test("large dimensions and format edges") {
     // PNG dimensions are 31-bit per spec; parser must not sign-extend.
     assert(parsed(ImageFixtures.png(0x7FFFFFFF, 2)) ===
