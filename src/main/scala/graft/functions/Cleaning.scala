@@ -5,8 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 /** Column-level cleaning/normalization functions (SURVEY §2.7).
-  * All are native Catalyst expressions — no UDFs — so they stay inside
-  * whole-stage codegen and push through the optimizer.
+  * All are native Catalyst expressions — no UDFs — so they push through
+  * the optimizer and are code-generated. Whole-stage codegen takes a
+  * projection only up to `spark.sql.codegen.maxFields` (100) output
+  * fields; a wider one compiles as its own UnsafeProjection, whose
+  * source grows with the column count. Inside a lambda (`transform`)
+  * they are evaluated interpreted, which keeps the generated code the
+  * same size for any number of columns.
   */
 object Cleaning {
 

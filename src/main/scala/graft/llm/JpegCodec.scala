@@ -347,6 +347,18 @@ object JpegCodec {
         else require(ns == 1, "progressive AC scan must be non-interleaved")
       }
       val dcScan = ss == 0
+      // the Huffman tables this scan will read must exist now: a DC
+      // first pass reads DC tables, an AC pass AC tables, a sequential
+      // scan both (a selector above 3 or one no DHT defined refuses)
+      val needDc = !progressive || (dcScan && ah == 0)
+      val needAc = !progressive || !dcScan
+      for (ci <- scanComps) {
+        val c = comps(ci)
+        require(!needDc || (c.dcTab <= 3 && dcTabs(c.dcTab) != null),
+          s"SOS selects undefined DC Huffman table ${c.dcTab}")
+        require(!needAc || (c.acTab <= 3 && acTabs(c.acTab) != null),
+          s"SOS selects undefined AC Huffman table ${c.acTab}")
+      }
 
       val br = new BitReader(b, segStart + segLen - 2) // start of entropy data
       val dcPred = new Array[Int](comps.length)
@@ -540,6 +552,7 @@ object JpegCodec {
               val c = Comp(b(o) & 0xFF, (hv >> 4) & 0xF, hv & 0xF, b(o + 2) & 0xFF)
               require(c.h >= 1 && c.h <= 2 && c.v >= 1 && c.v <= 2,
                 s"unsupported sampling ${c.h}x${c.v}")
+              require(c.tq <= 3, s"SOF selects quantization table ${c.tq} (0-3)")
               c
             }
             maxH = comps.map(_.h).max

@@ -53,7 +53,7 @@ object TiffCodec {
 
   /** One parsed IFD entry: TIFF type code and its values widened to
     * Long (BYTE/SHORT/LONG only — RATIONAL etc. aren't needed for
-    * baseline strips and refuse on access). */
+    * baseline strips and refuse on access). `vals` is never empty. */
   private[graft] final case class Entry(typ: Int, vals: IndexedSeq[Long])
 
   private def typeSize(t: Int): Int = t match {
@@ -84,7 +84,9 @@ object TiffCodec {
       val typ = rd.u16(e + 2)
       val cnt = rd.u32(e + 4)
       val sz = typeSize(typ)
-      if (sz > 0 && cnt <= 1000000 && (typ == 1 || typ == 3 || typ == 4)) {
+      // a count of 0 carries no value: the tag reads as absent, so a
+      // required one refuses and an optional one takes its default
+      if (sz > 0 && cnt >= 1 && cnt <= 1000000 && (typ == 1 || typ == 3 || typ == 4)) {
         val total = sz * cnt
         val base = if (total <= 4) e + 8 else {
           val off = rd.u32(e + 8)

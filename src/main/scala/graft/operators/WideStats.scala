@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * frame with 221 chained left-joins (team_rankings_scraper.py:229-235).
   * Chained joins are a plan-size hazard (superlinear analyzer cost,
   * 221 shuffle-or-broadcast stages). The scalable reformulation:
-  * stack the inputs long (`unionByName`, narrow) and pivot once —
-  * exactly ONE shuffle regardless of table count. The stat list is
-  * passed explicitly (known statically from the registry) so pivot
-  * skips its distinct-collect job.
+  * stack the inputs long (`unionByName`, narrow) and aggregate once by
+  * key — exactly ONE shuffle regardless of table count. The stat list
+  * is passed explicitly (known statically from the registry), so no
+  * job collects the distinct stats.
   *
   * J3: matchup features — join the wide stats to both sides of a game
   * (two broadcast joins: stats are small per date) and difference the
@@ -51,13 +51,32 @@ object WideStats {
 
   /** Full J1 over already-normalized per-spec tables (each keyed by
     * `key`, disjoint stat columns): melt each (narrow), union all
-    * (narrow), pivot ONCE against the statically-known stat list.
-    * Exactly one shuffle regardless of table count — vs the
-    * reference's 221 chained left-joins. */
+    * (narrow), then ONE aggregation by key — exactly one shuffle
+    * regardless of table count, vs the reference's 221 chained
+    * left-joins. A cell is the first non-null value of its (key, stat),
+    * null when there is none, as `pivot("stat", stats).agg(first("value"))`
+    * gives.
+    *
+    * Not `pivot` itself: its single-aggregate `PivotFirst` path only
+    * takes values a mutable buffer can hold, so for these strings it
+    * falls back to one `first(if (stat <=> s) value)` aggregate per stat,
+    * with generated projections that grow with the stat count. Here the
+    * aggregate collects the stats that carry a value and those values:
+    * two `collect_list`s over the same rows that both skip null values,
+    * so they stay aligned. One `transform` reads the static stat list
+    * out of them; a stat's first position holds its first non-null
+    * value. The plan holds two aggregate expressions for any number of
+    * stats. The lambda references only the aggregate's outputs: a map or
+    * struct field built from them inside it would be rebuilt per stat. */
   def wideFromTables(tables: Seq[DataFrame], key: String): DataFrame = {
     val stats = tables.flatMap(_.columns.filterNot(_ == key))
     val long = tables.map(melt(_, key)).reduce(_.unionByName(_))
-    long.groupBy(col(key)).pivot("stat", stats).agg(first(col("value")))
+    val row = long.groupBy(col(key))
+      .agg(collect_list(when(col("value").isNotNull, col("stat"))).as("keys"),
+           collect_list(col("value")).as("values"))
+      .select(col(key), transform(typedLit(stats), s =>
+        get(col("values"), array_position(col("keys"), s) - 1)).as("row"))
+    row.select(col(key) +: stats.indices.map(i => col("row")(i).as(stats(i))): _*)
   }
 
   /** J3: join `stats` (keyed by `teamCol`) onto both sides of `games`

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -118,28 +118,37 @@ object TeamRankingsNormalizer {
 
   /** The final wide-frame pass (F8 scrub, F9 percent, P6 empty→null)
     * over every string column; other columns pass through. Same result
-    * as `emptyToNull(percentParse(scrubSymbols(c)))` per column, but
-    * built in four projections — scrub; percent test and stripped cell;
-    * percent parse; empty→null — so each step runs once per column.
-    * Composed as one expression, every helper that references its
-    * input more than once would copy the chain below it: 20
-    * regexp_replace and 4 RLIKE calls per column (8 copies of the
-    * scrub). Each stage here references a non-cheap column of the stage
-    * below at least twice, which CollapseProject refuses to inline, so
-    * one column's optimized plan holds 3 regexp_replace and 2 RLIKE. */
+    * as `emptyToNull(percentParse(scrubSymbols(c)))` per column, run as
+    * four chained lambdas over one `array` of the string columns:
+    * scrub; the percent test and the stripped cell, kept in a struct;
+    * the percent parse; empty→null. Each lambda reads its element, not
+    * the expression that made it, so every step runs once per cell, and
+    * the optimized plan holds 3 regexp_replace and 2 RLIKE for any
+    * width. Higher-order functions are evaluated interpreted, so the
+    * generated code does not grow with the column count either.
+    * Per-column projections of the same chain would carry 3 fields per
+    * column, and past `spark.sql.codegen.maxFields` they leave
+    * whole-stage codegen and compile as one wide UnsafeProjection per
+    * stage. A second projection reads the array back into the columns;
+    * it references the array once per column, so CollapseProject keeps
+    * the lambdas below it, evaluated once per row. */
   def finalPass(wide: DataFrame): DataFrame = {
     val fields = wide.schema.fields.toIndexedSeq
-    def stage(df: DataFrame)(f: Int => Seq[Column]): DataFrame =
-      df.select(fields.indices.flatMap(i =>
-        if (fields(i).dataType == StringType) f(i) else Seq(col(fields(i).name))): _*)
-    def tmp(step: String, i: Int) = col(s"__fp_${step}_$i")
-    val scrubbed = stage(wide)(i =>
-      Seq(Cleaning.scrubSymbols(col(fields(i).name)).as(s"__fp_s_$i")))
-    val split = stage(scrubbed)(i => Seq(tmp("s", i),
-      Cleaning.isPercent(tmp("s", i)).as(s"__fp_pct_$i"),
-      Cleaning.stripPercent(tmp("s", i)).as(s"__fp_num_$i")))
-    val parsed = stage(split)(i => Seq(
-      Cleaning.percentFrom(tmp("pct", i), tmp("num", i), tmp("s", i)).as(s"__fp_p_$i")))
-    stage(parsed)(i => Seq(Cleaning.emptyToNull(tmp("p", i)).as(fields(i).name)))
+    val strings = fields.indices.filter(fields(_).dataType == StringType)
+    if (strings.isEmpty) return wide
+    val cleaned =
+      transform(
+        transform(
+          transform(
+            transform(array(strings.map(i => col(fields(i).name)): _*), Cleaning.scrubSymbols(_)),
+            c => struct(c.as("s"), Cleaning.isPercent(c).as("pct"),
+              Cleaning.stripPercent(c).as("num"))),
+          x => Cleaning.percentFrom(x("pct"), x("num"), x("s"))),
+        Cleaning.emptyToNull(_))
+    val slot = strings.zipWithIndex.toMap
+    wide.select(fields.filterNot(_.dataType == StringType).map(f => col(f.name)) :+
+        cleaned.as("__fp"): _*)
+      .select(fields.indices.map(i => slot.get(i).fold(col(fields(i).name))(j =>
+        col("__fp")(j).as(fields(i).name))): _*)
   }
 }

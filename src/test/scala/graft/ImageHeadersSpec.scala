@@ -144,4 +144,14 @@ class ImageHeadersSpec extends SparkSpec {
     }
     assert(got(99L) === null) // null bytes → null struct
   }
+
+  test("tiff: an IFD entry with a count of 0 gives the null-dims row, in the expression too") {
+    val b = graft.llm.TiffCodec.encodeRgb(8, 6, (x, y) => (x, y, 7))
+    b(13) = 0; b(14) = 0 // the ImageWidth entry's count
+    assert(parsed(b) === (("tiff", None, None)))
+    val r = Seq(Tuple1(b)).toDF("bytes")
+      .select(ImageMetaNative.imageMeta(spark, $"bytes").as("m"))
+      .select($"m.format", $"m.width", $"m.height").collect().head
+    assert(r.getString(0) === "tiff" && r.isNullAt(1) && r.isNullAt(2))
+  }
 }

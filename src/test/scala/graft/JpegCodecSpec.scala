@@ -164,6 +164,19 @@ class JpegCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("a table selector out of range or naming an undefined table refuses") {
+    val good = JpegCodec.encode(16, 16, smooth, 90)
+    // 154: the third SOF component's quantization-table selector (0x7F);
+    // 156: the first DHT's marker byte, so DC table 0 is never defined
+    // and the scan selects a Huffman table that does not exist
+    for ((off, v, msg) <- Seq((154, 0x7FFF, "quantization table"), (156, 0x0000, "Huffman table"))) {
+      val bad = good.clone()
+      bad(off) = (v >> 8).toByte; bad(off + 1) = v.toByte
+      val e = intercept[IllegalArgumentException] { JpegCodec.decode(bad) }
+      assert(e.getMessage.contains(msg), s"offset $off: ${e.getMessage}")
+    }
+  }
+
   test("standalone markers in the header walk: TEM and a stray RSTn are skipped") {
     val good = JpegCodec.encode(16, 16, smooth, 90)
     val base = JpegCodec.decode(good)._3

@@ -35,12 +35,11 @@ class RegistrySpec extends SparkSpec {
     val rows = (0 until 32).map { i =>
       Row.fromSeq(s"team_$i (3-2)" +: spec.colsToKeep.map(valueFor(spec, _, i)))
     }
-    // ONE partition per 32-row fixture: the pivot's partial aggregate
-    // pays a per-TASK setup cost (canonicalize + generate the
-    // 1,367-wide mutable projection, ~0.5 s) that dwarfs the data here
-    // — 4 partitions × 221 tables was ~900 near-empty tasks and ~4 min
-    // of pure projection setup. At scale the same cost amortizes over
-    // real 128 MB partitions; in the fixture it must not multiply.
+    // ONE partition per 32-row fixture: 4 partitions × 221 tables
+    // would be ~900 near-empty map tasks, each paying the wide build's
+    // per-task setup (with the former per-stat pivot aggregates, ~4 min
+    // of projection setup). At scale the setup amortizes over real
+    // 128 MB partitions; in the fixture it must not multiply.
     spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
       schema).coalesce(1)

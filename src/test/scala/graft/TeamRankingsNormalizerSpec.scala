@@ -101,11 +101,13 @@ class TeamRankingsNormalizerSpec extends SparkSpec {
       val exprs = plan.collect { case node => node.expressions }.flatten
       def count(p: PartialFunction[org.apache.spark.sql.catalyst.expressions.Expression, Unit]) =
         exprs.map(_.collect(p).size).sum
-      val strings = k + 1 // the stats and team
+      // scrub (2 regexp_replace), percent test (RLIKE), stripped cell
+      // (regexp_replace), numeric guard (RLIKE): once for all k + 1
+      // string columns
       val scrubs = count { case RegExpReplace(_, Literal(r, _), _, _) if String.valueOf(r) == "--" => }
-      assert(scrubs === strings, s"k=$k: $scrubs `--` scrubs for $strings string columns\n$plan")
-      assert(count { case _: RegExpReplace => } === 3 * strings, s"k=$k\n$plan")
-      assert(count { case _: RLike => } === 2 * strings, s"k=$k\n$plan")
+      assert(scrubs === 1, s"k=$k: $scrubs `--` scrubs\n$plan")
+      assert(count { case _: RegExpReplace => } === 3, s"k=$k\n$plan")
+      assert(count { case _: RLike => } === 2, s"k=$k\n$plan")
     }
   }
 }

@@ -214,6 +214,16 @@ class TiffCodecSpec extends AnyFunSuite {
     }
   }
 
+  test("an IFD entry with a count of 0 reads as an absent tag and refuses") {
+    val b = TiffCodec.encodeRgb(8, 6, rgbPix)
+    assert(TiffCodec.decode(b)._1 == 8)
+    // the first entry (ImageWidth, at 10) keeps its count at 14..17
+    b(13) = 0; b(14) = 0
+    assert(!TiffCodec.parseIfd(b)._2.contains(256))
+    val e = intercept[IllegalArgumentException] { TiffCodec.decode(b) }
+    assert(e.getMessage.contains("tag 256"))
+  }
+
   test("unsupported shapes refuse loudly") {
     intercept[IllegalArgumentException] {
       TiffCodec.decode(Array[Byte]('I', 'I', 42, 0, 8, 0, 0, 0))
