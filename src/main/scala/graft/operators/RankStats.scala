@@ -23,21 +23,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object RankStats {
 
-  /** Per-distinct-value tie-averaged (midrank) frame for `valueCol`
-    * (6-dp-quantized): (v, cnt, avg_rank) where avg_rank = #below +
-    * (cnt+1)/2 — a half-integer, exact in double. */
-  private[graft] def midranks(df: DataFrame, valueCol: String): DataFrame = {
-    val counts = df
-      .select(round(col(valueCol).cast("double"), 6).as("v"))
-      .filter(col("v").isNotNull)
-      .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-    OrderedStats.cumsumExclusive(counts, sortCol = "v", tieCols = Seq(),
-        valueCol = "cnt", outCol = "below")
-      .select(col("v"), col("cnt"),
-              (col("below") + (col("cnt") + lit(1L)) / lit(2.0))
-                .as("avg_rank"))
-  }
-
   /** Spearman rank correlation of two columns. Returns 1 row:
     * (n, rho) with ρ = Pearson over midranks, rounded to 6. Sums of
     * ranks and rank products are exact decimals (ranks are
@@ -50,7 +35,7 @@ object RankStats {
     // Midranks for BOTH columns in ONE cumsum pipeline: melt (vx, vy)
     // to a tagged value column and rank per tag via the partitioned
     // cumsumExclusiveAll — per-tag min/max, buckets, offsets and
-    // window are exactly what two independent midranks() calls
+    // window are exactly what two independent per-column rank passes
     // compute, at half the exchange chain and one corpus melt instead
     // of two count passes (r15: two full pipelines, ~50-scan plan).
     val melted = rows.select(explode(array(

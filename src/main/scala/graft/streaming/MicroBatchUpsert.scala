@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.PartitionedParquetStore
 
@@ -9,8 +9,8 @@ import graft.sources.PartitionedParquetStore
   *
   * The reference has no streaming engine — its "stream" is externally
   * scheduled micro-batches with an idempotent upsert. First-class
-  * Spark mapping: Structured Streaming with `Trigger.AvailableNow` +
-  * `foreachBatch` performing the store merge. Each trigger drains
+  * Spark mapping: Structured Streaming drained by [[MicroBatch.drain]],
+  * each micro-batch performing the store merge. Each run drains
   * what's available and stops — exactly the scheduled-Lambda model,
   * but with checkpointed exactly-once batch tracking.
   *
@@ -26,13 +26,8 @@ object MicroBatchUpsert {
     * the store (history-preserving distinct semantics). */
   def availableNowUpsert(stream: DataFrame, store: PartitionedParquetStore,
                          tsCol: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        store.upsertDistinct(batch, tsCol)
-      }
-      .start()
+    MicroBatch.drain(stream, checkpoint)((batch, _) =>
+      store.upsertDistinct(batch, tsCol))
 
   /** Streaming dedup: watermark + stateful dropDuplicates on keys. */
   def dedupedStream(stream: DataFrame, tsCol: String, watermark: String,

@@ -2,10 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Profiler
-import graft.sources.ParquetTable
 
 /** Streaming Benford monitor — the continuously-running twin of
   * [[Profiler.benfordAudit]]: every micro-batch's first-digit counts
@@ -20,9 +19,11 @@ import graft.sources.ParquetTable
   * cumulative readout is BIT-IDENTICAL to a batch
   * [[Profiler.benfordAudit]] over all data ever seen (the q128/
   * StreamingStats contract, asserted by StreamingBenfordSpec across a
-  * checkpoint restart). foreachBatch + read-merge-overwrite of the
-  * tiny state table (≤ 9 rows), one map-side-combined aggregation per
-  * batch regardless of batch size. */
+  * checkpoint restart and a replayed batch). The state table (≤ 9
+  * rows) is folded by [[MicroBatch.foldState]], so a replayed batchId
+  * is skipped whole. The audit row is appended before the state
+  * overwrite: a crash between the two replays the batch, which leaves
+  * a duplicate audit row for that batch_id but never loses one. */
 object StreamingBenford {
 
   private def devExpr = abs(
@@ -42,31 +43,24 @@ object StreamingBenford {
     * (batch_id, n_batch, dev_batch, n_total, dev_cum) to `auditPath`. */
   def monitor(stream: DataFrame, valueCol: String, statePath: String,
               auditPath: String, checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val batchCounts = Profiler.firstDigitCounts(batch, valueCol)
-          .localCheckpoint() // read twice (batch dev + state merge)
-        val merged = ParquetTable.readIfPresent(spark, statePath)
-          .fold(batchCounts)(_.unionByName(batchCounts))
-          .groupBy(col("digit")).agg(sum(col("n")).as("n"))
-          .localCheckpoint() // sever lineage from the file being overwritten
-        merged.coalesce(1).write.mode("overwrite").parquet(statePath)
-        maxDev(batchCounts).select(
+    MicroBatch.drain(stream, checkpoint) { (batch, batchId) =>
+      lazy val batchCounts = Profiler.firstDigitCounts(batch, valueCol)
+        .localCheckpoint() // read twice (batch dev + state merge)
+      MicroBatch.foldState(batch.sparkSession, batchId, statePath)(
+        batchCounts,
+        (p, b) => p.unionByName(b).groupBy(col("digit")).agg(sum(col("n")).as("n")),
+        merged => maxDev(batchCounts).select(
             lit(batchId).as("batch_id"),
             col("n_rows").as("n_batch"),
             col("max_abs_dev").as("dev_batch"))
           .crossJoin(maxDev(merged).select(
             col("n_rows").as("n_total"),
             col("max_abs_dev").as("dev_cum")))
-          .write.mode("append").parquet(auditPath)
-      }
-      .start()
+          .write.mode("append").parquet(auditPath))
+    }
 
   /** The cumulative audit as a batch frame — for asserting streamed ==
     * monolithic ([[Profiler.benfordAudit]] over everything seen). */
   def currentState(spark: SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(statePath)
+    spark.read.parquet(statePath).drop(MicroBatch.Stamp)
 }

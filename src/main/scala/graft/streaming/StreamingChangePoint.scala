@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming CUSUM maintenance — the continuously-running twin of
   * `ChangePoint.cusum` (q150): per-key chart state (running statistic,
@@ -61,14 +61,9 @@ object StreamingChangePoint {
   def maintain(points: Dataset[Point], target: Double, slack: Double,
                threshold: Double, path: String,
                checkpoint: String): StreamingQuery =
-    charts(points, target, slack, threshold).writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[ChartRow], _: Long) =>
-        batch.write.mode("append").parquet(path)
-      }
-      .start()
+    MicroBatch.drain(charts(points, target, slack, threshold), checkpoint,
+                     OutputMode.Update())((batch, _) =>
+      batch.write.mode("append").parquet(path))
 
   /** Latest chart per key from the log (n_points only grows, so
     * keep-latest = keep-max per key). */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.ParquetTable
 
@@ -15,17 +15,10 @@ import graft.sources.ParquetTable
   * scheduled run — the checkpoint skips committed batches) dedups
   * against them.
   *
-  * Delivery contract: foreachBatch is AT-LEAST-ONCE. A batch replayed
-  * after a crash between `accept` and the store append re-forwards
-  * the same fresh set, so `accept` must be idempotent (a keyed upsert
-  * like [[graft.sources.PartitionedParquetStore]], not a blind
-  * append); a replay after the store append forwards an empty set
-  * (the batch's own hashes now hit the store). Doc ids must be
-  * integral (they are cast to long for component labels — string ids
-  * need a stable id-assignment step upstream). A missing store, or a
-  * bare directory, is empty history by the [[ParquetTable]] rule; a
-  * non-empty store Spark cannot read fails the batch instead of
-  * letting duplicates through.
+  * Delivery contract: the [[MicroBatch]] intake step (`accept` must be
+  * an idempotent keyed upsert). Doc ids must be integral (they are
+  * cast to long for component labels — string ids need a stable
+  * id-assignment step upstream).
   *
   * This complements the in-stream variants in [[MicroBatchUpsert]]:
   * `dedupedWithinWatermark` bounds its state by the watermark, so it
@@ -72,46 +65,34 @@ object StreamingCorpusDedup {
                  shingleSize: Int = 3, numBands: Int = 16,
                  rowsPerBand: Int = 4, maxBucket: Int = 1000)
                 (accept: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        import graft.llm.{Components, NearDup}
+    MicroBatch.drain(docs, checkpoint) { (batch, _) =>
+      import graft.llm.{Components, NearDup}
+      MicroBatch.intake(accept) { pin =>
         val hashed = batch.withColumn("__hs",
           NearDup.hashedShingles(NearDup.shingles(col(textCol), shingleSize)))
-        val banded = NearDup
-          .bandedBuckets(hashed, idCol, col("__hs"), numBands, rowsPerBand)
-          .persist()
-        try {
-          // (2) history hits for EVERY batch doc (not just survivors):
-          // any shared (band, band_hash) bucket is a hit, and a hit on
-          // a non-representative member must still poison its whole
-          // component below.
-          val hitIds = ParquetTable.readIfPresent(spark, storeDir)
-            .fold(banded.filter(lit(false))) { stored =>
-              banded.join(stored.select(col("band"), col("band_hash")),
-                          Seq("band", "band_hash"), "left_semi")
-            }
-            .select(col("doc")).distinct().persist()
-          // (3) in-batch components, poisoned by history hits
-          val dropped = Components.historyDrops(
-            NearDup.pairsFromBanded(banded, maxBucket), "id_a", "id_b", hitIds)
-          val fresh = batch.join(dropped.withColumnRenamed("node", "__did"),
-            col(idCol).cast("long") === col("__did"), "left_anti")
-          fresh.persist()
-          try {
-            accept(fresh)
-            banded.join(fresh.select(col(idCol).as("__fid")),
-                        col("doc") === col("__fid"), "left_semi")
-              .select(col("doc"), col("band"), col("band_hash"))
-              .write.mode("append").parquet(storeDir)
-          } finally {
-            fresh.unpersist(); hitIds.unpersist()
+        val banded = pin(NearDup
+          .bandedBuckets(hashed, idCol, col("__hs"), numBands, rowsPerBand))
+        // (2) history hits for EVERY batch doc (not just survivors):
+        // any shared (band, band_hash) bucket is a hit, and a hit on
+        // a non-representative member must still poison its whole
+        // component below.
+        val hitIds = pin(ParquetTable.readIfPresent(batch.sparkSession, storeDir)
+          .fold(banded.filter(lit(false))) { stored =>
+            banded.join(stored.select(col("band"), col("band_hash")),
+                        Seq("band", "band_hash"), "left_semi")
           }
-        } finally banded.unpersist()
+          .select(col("doc")).distinct())
+        // (3) in-batch components, poisoned by history hits
+        val dropped = Components.historyDrops(
+          NearDup.pairsFromBanded(banded, maxBucket), "id_a", "id_b", hitIds)
+        (batch.join(dropped.withColumnRenamed("node", "__did"),
+           col(idCol).cast("long") === col("__did"), "left_anti"),
+         fresh => banded.join(fresh.select(col(idCol).as("__fid")),
+                              col("doc") === col("__fid"), "left_semi")
+           .select(col("doc"), col("band"), col("band_hash"))
+           .write.mode("append").parquet(storeDir))
       }
-      .start()
+    }
 
   /** EMBEDDING near-dup variant: incremental SEMANTIC dedup of an
     * embedding stream against all accepted history via SRP signature
@@ -135,41 +116,31 @@ object StreamingCorpusDedup {
                           storeDir: String, checkpoint: String, dim: Int,
                           bits: Int = 8, threshold: Double = 0.9)
                          (accept: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        import graft.llm.Similarity
-        val sig = batch.withColumn("__bucket",
-          concat_ws("", Similarity.srpSignature(col(vecCol), dim, bits)))
-          .persist()
-        try {
-          val inBatchDrop = sig.as("x").join(sig.as("y"),
-              col("x.__bucket") === col("y.__bucket") &&
-              col(s"x.$idCol") < col(s"y.$idCol"))
-            .filter(graft.plans.NativeFunctions
-              .cosineNative(spark, col(s"x.$vecCol"), col(s"y.$vecCol"))
-              >= lit(threshold))
-            .select(col(s"y.$idCol").as(idCol))
-          val drops = ParquetTable.readIfPresent(spark, storeDir)
-            .fold(inBatchDrop) { stored =>
-              inBatchDrop.union(sig
-                .join(stored.select(col("bucket").as("__bucket")),
-                      Seq("__bucket"), "left_semi")
-                .select(col(idCol)))
-            }
-          val fresh = sig.join(drops.distinct(), Seq(idCol), "left_anti")
-          fresh.persist()
-          try {
-            accept(fresh.drop("__bucket"))
-            fresh.select(col(idCol).as("doc"),
-                         col("__bucket").as("bucket"))
-              .write.mode("append").parquet(storeDir)
-          } finally fresh.unpersist()
-        } finally sig.unpersist()
+    MicroBatch.drain(docs, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      import graft.llm.Similarity
+      MicroBatch.intake(fresh => accept(fresh.drop("__bucket"))) { pin =>
+        val sig = pin(batch.withColumn("__bucket",
+          concat_ws("", Similarity.srpSignature(col(vecCol), dim, bits))))
+        val inBatchDrop = sig.as("x").join(sig.as("y"),
+            col("x.__bucket") === col("y.__bucket") &&
+            col(s"x.$idCol") < col(s"y.$idCol"))
+          .filter(graft.plans.NativeFunctions
+            .cosineNative(spark, col(s"x.$vecCol"), col(s"y.$vecCol"))
+            >= lit(threshold))
+          .select(col(s"y.$idCol").as(idCol))
+        val drops = ParquetTable.readIfPresent(spark, storeDir)
+          .fold(inBatchDrop) { stored =>
+            inBatchDrop.union(sig
+              .join(stored.select(col("bucket").as("__bucket")),
+                    Seq("__bucket"), "left_semi")
+              .select(col(idCol)))
+          }
+        (sig.join(drops.distinct(), Seq(idCol), "left_anti"),
+         _.select(col(idCol).as("doc"), col("__bucket").as("bucket"))
+           .write.mode("append").parquet(storeDir))
       }
-      .start()
+    }
 
   /** The per-batch history anti-join against the BUCKETED store —
     * exposed (not private) so the plan contract can be asserted: with
@@ -203,49 +174,34 @@ object StreamingCorpusDedup {
   def runBucketed(docs: DataFrame, textCol: String, storeTable: String,
                   nBuckets: Int, checkpoint: String)
                  (accept: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val hashed = batch.withColumn("content_hash", md5(col(textCol)))
-        val inBatch = hashed.dropDuplicates("content_hash")
-        val fresh = freshVsBucketedStore(inBatch, storeTable)
-        fresh.persist()
-        try {
-          accept(fresh)
-          fresh.select(col("content_hash"))
-            .write.mode("append").format("parquet")
-            .bucketBy(nBuckets, "content_hash").sortBy("content_hash")
-            .saveAsTable(storeTable)
-        } finally fresh.unpersist()
+    MicroBatch.drain(docs, checkpoint) { (batch, _) =>
+      MicroBatch.intake(accept) { _ =>
+        val inBatch = batch.withColumn("content_hash", md5(col(textCol)))
+          .dropDuplicates("content_hash")
+        (freshVsBucketedStore(inBatch, storeTable),
+         _.select(col("content_hash"))
+           .write.mode("append").format("parquet")
+           .bucketBy(nBuckets, "content_hash").sortBy("content_hash")
+           .saveAsTable(storeTable))
       }
-      .start()
+    }
 
   /** One available-now pass: dedup each micro-batch against the store,
     * hand the survivors to `accept` (write to the corpus, forward
     * downstream, ...), then append their hashes to the store. */
   def run(docs: DataFrame, textCol: String, storeDir: String,
           checkpoint: String)(accept: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val hashed = batch.withColumn("content_hash", md5(col(textCol)))
+    MicroBatch.drain(docs, checkpoint) { (batch, _) =>
+      MicroBatch.intake(accept) { _ =>
         // (a) unique within the batch: first arrival wins — an
         // arbitrary-but-deterministic pick via min over the batch's
         // own hash group would need an ordering column; batches are
         // unordered sets here, so full-row distinct then one-per-hash.
-        val inBatch = hashed.dropDuplicates("content_hash")
+        val inBatch = batch.withColumn("content_hash", md5(col(textCol)))
+          .dropDuplicates("content_hash")
         // (b) absent from the persisted corpus
-        val fresh = freshVsStore(inBatch, storeDir)
-        // materialize ONCE: accept() and the store append must see the
-        // same row set even though `fresh` is lazily planned twice
-        fresh.persist()
-        try {
-          accept(fresh)
-          fresh.select(col("content_hash"))
-            .write.mode("append").parquet(storeDir)
-        } finally fresh.unpersist()
+        (freshVsStore(inBatch, storeDir),
+         _.select(col("content_hash")).write.mode("append").parquet(storeDir))
       }
-      .start()
+    }
 }

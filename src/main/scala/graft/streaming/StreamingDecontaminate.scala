@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.llm.Decontaminate
 
@@ -17,20 +17,15 @@ import graft.llm.Decontaminate
   * idempotence caveat exist — a replayed batch re-emits the same
   * flags.
   *
-  * Each micro-batch runs the EXACT batch operator (foreachBatch over
-  * [[Decontaminate.overlapAudit]]) — stream/batch parity by
+  * Each micro-batch runs the EXACT batch operator ([[MicroBatch.drain]]
+  * over [[Decontaminate.overlapAudit]]) — stream/batch parity by
   * construction, the engine-wide streaming contract. */
 object StreamingDecontaminate {
 
   def run(docs: DataFrame, idCol: String, textCol: String,
           bench: DataFrame, n: Int, minHits: Int,
           checkpointDir: String)(sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(Decontaminate.overlapAudit(batch, bench, idCol, textCol,
-                                        n, minHits))
-      }
-      .start()
+    MicroBatch.drain(docs, checkpointDir)((batch, _) =>
+      sink(Decontaminate.overlapAudit(batch, bench, idCol, textCol,
+                                      n, minHits)))
 }

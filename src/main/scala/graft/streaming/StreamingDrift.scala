@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Drift
 
@@ -12,7 +12,7 @@ import graft.operators.Drift
   * batch — the continuously-running twin of [[Drift.psi]] and the
   * alarm a serving pipeline watches between retrains.
   *
-  * foreachBatch, not a stateful aggregation: PSI is a whole-batch
+  * A per-batch sink, not a stateful aggregation: PSI is a whole-batch
   * statistic against an external frame, not an incremental per-key
   * state — and the reference's bucket counts are computed once per
   * batch from a (tiny, cacheable) static DataFrame while the batch
@@ -26,15 +26,11 @@ object StreamingDrift {
   def psiMonitor(stream: DataFrame, reference: DataFrame, valueCol: String,
                  lo: Double, hi: Double, nBuckets: Int, path: String,
                  checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Drift.psi(reference, batch, valueCol, lo, hi, nBuckets)
-          .agg(sum(col("n_live")).cast("long").as("n_live"),
-               min(col("psi_total")).as("psi"))
-          .select(lit(batchId).as("batch_id"), col("n_live"), col("psi"))
-          .write.mode("append").parquet(path)
-      }
-      .start()
+    MicroBatch.drain(stream, checkpoint) { (batch, batchId) =>
+      Drift.psi(reference, batch, valueCol, lo, hi, nBuckets)
+        .agg(sum(col("n_live")).cast("long").as("n_live"),
+             min(col("psi_total")).as("psi"))
+        .select(lit(batchId).as("batch_id"), col("n_live"), col("psi"))
+        .write.mode("append").parquet(path)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming heavy-hitter tracking — the continuously-running twin of
   * `Skew.keyProfile`'s top-k: per-key running counts maintained in
@@ -42,19 +42,13 @@ object StreamingHeavyHitters {
   }
 
   /** Drain available batches, appending each batch's touched-key
-    * running counts to the parquet log at `path` (foreachBatch — the
+    * running counts to the parquet log at `path` (a per-batch sink — the
     * memory sink cannot recover from a checkpoint, a parquet log
     * can); [[currentTopK]] derives latest-count-per-key from the log. */
   def track(keys: Dataset[Long], path: String,
             checkpoint: String): StreamingQuery =
-    runningCounts(keys).writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[KeyCount], _: Long) =>
-        batch.write.mode("append").parquet(path)
-      }
-      .start()
+    MicroBatch.drain(runningCounts(keys), checkpoint, OutputMode.Update())(
+      (batch, _) => batch.write.mode("append").parquet(path))
 
   /** Top-k keys by their LATEST emitted running count (the log
     * appends a row per touch; running counts only grow, so

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.ParquetTable
 
@@ -19,13 +19,8 @@ import graft.sources.ParquetTable
   * against — every candidate is VERIFIED against the stored full
   * 64-bit hash, so a band collision alone never drops an image.
   *
-  * Delivery contract: foreachBatch is AT-LEAST-ONCE; `accept` must be
-  * an idempotent keyed upsert. A replay after the store append
-  * forwards an empty fresh set (the batch's own hashes now verify
-  * against the store) — the [[StreamingCorpusDedup]] idempotence
-  * shape, spec-proven. The store's presence follows the same
-  * [[ParquetTable]] rule: a missing or bare directory is empty
-  * history, an unreadable non-empty one fails the batch.
+  * Delivery contract: the [[MicroBatch]] intake step (`accept` must be
+  * an idempotent keyed upsert; spec-proven under replay).
   *
   * Scale shape: decode/hash is narrow (per-row, in-task); the store
   * holds 8 band rows × (8-byte hash + key) per accepted image —
@@ -50,63 +45,50 @@ object StreamingImageDedup {
          (accept: DataFrame => Unit): StreamingQuery = {
     require(maxBits >= 0 && maxBits < NumBands,
       s"maxBits must stay below $NumBands for the pigeonhole guarantee")
-    images.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        import graft.llm.{Components, Multimodal, NearDup}
+    MicroBatch.drain(images, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      import graft.llm.{Components, Multimodal, NearDup}
+      MicroBatch.intake(accept) { pin =>
         val rows = batch
           .select(col(idCol).cast("long"), col(mediaCol))
           .as[(Long, Array[Byte])]
           .map { case (id, m) => Multimodal.MediaRow(id, m, "image") }
-        val hashed = Multimodal.perceptualHash64(
-            Multimodal.extractResizedBmp(rows, 8, 8).toDF(),
-            "id", "features")
-          .persist() // (image_id, bits)
-        val banded = bandsOf(hashed, "image_id").persist()
-        try {
-          // history hits for EVERY batch image (a hit on a
-          // non-representative member must poison its whole component),
-          // each band collision verified against the stored full hash
-          val hitIds = ParquetTable.readIfPresent(spark, storeDir)
-            .fold(banded.filter(lit(false))) { stored =>
-              banded.join(stored.select(col("band"), col("band_key"),
-                                        col("bits").as("__st_bits")),
-                          Seq("band", "band_key"))
-                .filter(NearDup.hammingBits(col("bits"), col("__st_bits"))
-                  <= maxBits)
-            }
-            .select(col("image_id")).distinct().persist()
-          // in-batch near-dup components: band-collision candidates,
-          // Hamming-verified, min-id representative survives (q60)
-          val pairs = banded.as("a").join(banded.as("b"),
-              col("a.band") === col("b.band") &&
-                col("a.band_key") === col("b.band_key") &&
-                col("a.image_id") < col("b.image_id"))
-            .filter(NearDup.hammingBits(col("a.bits"), col("b.bits"))
-              <= maxBits)
-            .select(col("a.image_id").as("id_a"),
-                    col("b.image_id").as("id_b"))
-            .distinct()
-          val dropped = Components.historyDrops(pairs, "id_a", "id_b", hitIds)
-          val fresh = batch.join(dropped.withColumnRenamed("node", "__did"),
-            col(idCol).cast("long") === col("__did"), "left_anti")
-          fresh.persist()
-          try {
-            accept(fresh)
-            banded.join(
-                fresh.select(col(idCol).cast("long").as("__fid")),
-                col("image_id") === col("__fid"), "left_semi")
-              .select(col("image_id"), col("band"), col("band_key"),
-                      col("bits"))
-              .write.mode("append").parquet(storeDir)
-          } finally {
-            fresh.unpersist(); hitIds.unpersist()
+        val hashed = pin(Multimodal.perceptualHash64( // (image_id, bits)
+          Multimodal.extractResizedBmp(rows, 8, 8).toDF(), "id", "features"))
+        val banded = pin(bandsOf(hashed, "image_id"))
+        // history hits for EVERY batch image (a hit on a
+        // non-representative member must poison its whole component),
+        // each band collision verified against the stored full hash
+        val hitIds = pin(ParquetTable.readIfPresent(spark, storeDir)
+          .fold(banded.filter(lit(false))) { stored =>
+            banded.join(stored.select(col("band"), col("band_key"),
+                                      col("bits").as("__st_bits")),
+                        Seq("band", "band_key"))
+              .filter(NearDup.hammingBits(col("bits"), col("__st_bits"))
+                <= maxBits)
           }
-        } finally { banded.unpersist(); hashed.unpersist() }
+          .select(col("image_id")).distinct())
+        // in-batch near-dup components: band-collision candidates,
+        // Hamming-verified, min-id representative survives (q60)
+        val pairs = banded.as("a").join(banded.as("b"),
+            col("a.band") === col("b.band") &&
+              col("a.band_key") === col("b.band_key") &&
+              col("a.image_id") < col("b.image_id"))
+          .filter(NearDup.hammingBits(col("a.bits"), col("b.bits"))
+            <= maxBits)
+          .select(col("a.image_id").as("id_a"),
+                  col("b.image_id").as("id_b"))
+          .distinct()
+        val dropped = Components.historyDrops(pairs, "id_a", "id_b", hitIds)
+        (batch.join(dropped.withColumnRenamed("node", "__did"),
+           col(idCol).cast("long") === col("__did"), "left_anti"),
+         fresh => banded.join(
+             fresh.select(col(idCol).cast("long").as("__fid")),
+             col("image_id") === col("__fid"), "left_semi")
+           .select(col("image_id"), col("band"), col("band_key"), col("bits"))
+           .write.mode("append").parquet(storeDir))
       }
-      .start()
+    }
   }
 }

@@ -1,12 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.BucketedStateStore
 
 /** Streaming face of the bucketed keyed MERGE: each micro-batch folds
-  * into a [[BucketedStateStore]] via foreachBatch — the scheduled
+  * into a [[BucketedStateStore]] via [[MicroBatch.drain]] — the scheduled
   * keyed-upsert loop (the reference's collection cadence) as a
   * first-class streaming sink, keyed by arbitrary columns instead of
   * time.
@@ -28,12 +28,7 @@ object StreamingKeyedMerge {
   def availableNowMerge(stream: DataFrame, root: String, checkpoint: String,
                         keys: Seq[String], order: Seq[Column],
                         nBuckets: Int): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        new BucketedStateStore(batch.sparkSession, root, keys, nBuckets)
-          .merge(batch, order)
-      }
-      .start()
+    MicroBatch.drain(stream, checkpoint)((batch, _) =>
+      new BucketedStateStore(batch.sparkSession, root, keys, nBuckets)
+        .merge(batch, order))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Scd
 import graft.sources.ParquetTable
@@ -12,11 +12,11 @@ import graft.sources.ParquetTable
   * streaming face of the warehouse history build (CDC feed in, versioned
   * `[valid_from, valid_to)` table out).
   *
-  * foreachBatch is the right Spark surface: the merge is a batch
-  * dataflow (anti-join + windows over the touched keys' change
-  * points), and the sink is an idempotent parquet overwrite, so the
-  * checkpoint's exactly-once batch tracking gives end-to-end
-  * exactly-once table maintenance. Because [[Scd.merge]] is proven
+  * A per-batch sink ([[MicroBatch.drain]]) is the right Spark
+  * surface: the merge is a batch dataflow (anti-join + windows over
+  * the touched keys' change points), and the sink is an idempotent
+  * parquet overwrite, so the checkpoint's exactly-once batch tracking
+  * gives end-to-end exactly-once table maintenance. Because [[Scd.merge]] is proven
   * hash-identical to a full rebuild (q108's gate), the streamed table
   * after N batches equals the batch build over the concatenated log —
   * the invariant `StreamingScdSpec` asserts.
@@ -37,24 +37,18 @@ object StreamingScd {
   def availableNowScd2(stream: DataFrame, path: String, checkpoint: String,
                        keys: Seq[String], seqCol: String, tiebreakCol: String,
                        stateCols: Seq[String]): StreamingQuery =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // a bare pre-created directory (or one holding just a _SUCCESS
-        // marker) is "no table yet" — the ParquetTable presence rule
-        val merged = ParquetTable.readIfPresent(spark, path) match {
-          case Some(table) =>
-            Scd.merge(table, batch, keys, col(seqCol), col(tiebreakCol),
-                      stateCols)
-          case None =>
-            Scd.scd2(batch, keys, col(seqCol), Seq(col(tiebreakCol)),
-                     stateCols)
-        }
-        // materialize before overwriting the table being read
-        val rows = merged.localCheckpoint(true)
-        rows.write.mode("overwrite").parquet(path)
+    MicroBatch.drain(stream, checkpoint) { (batch, _) =>
+      // a bare pre-created directory (or one holding just a _SUCCESS
+      // marker) is "no table yet" — the ParquetTable presence rule
+      val merged = ParquetTable.readIfPresent(batch.sparkSession, path) match {
+        case Some(table) =>
+          Scd.merge(table, batch, keys, col(seqCol), col(tiebreakCol),
+                    stateCols)
+        case None =>
+          Scd.scd2(batch, keys, col(seqCol), Seq(col(tiebreakCol)),
+                   stateCols)
       }
-      .start()
+      // materialize before overwriting the table being read
+      merged.localCheckpoint(true).write.mode("overwrite").parquet(path)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.Warc
 import graft.llm.HtmlText
@@ -27,11 +27,8 @@ import graft.llm.HtmlText
   * standard first-pass crawl filters; deeper scoring (Gopher rules,
   * lang-ID, NLL) composes downstream on the accepted frame.
   *
-  * Delivery: foreachBatch is AT-LEAST-ONCE — `accept` must be a
-  * keyed idempotent upsert (the [[StreamingCorpusDedup]] contract:
-  * replay before the store append re-forwards the same fresh set;
-  * replay after it forwards an empty set because the batch's hashes
-  * now hit the store).
+  * Delivery contract: the [[MicroBatch]] intake step (`accept` must be
+  * an idempotent keyed upsert).
   *
   * Scale: the history store holds one md5 + uri per accepted page
   * (~50 bytes vs the page's tens of KB); the anti-join is the only
@@ -116,15 +113,13 @@ object StreamingWarcIntake {
   def run(spark: SparkSession, warcGlob: String, storeDir: String,
           checkpoint: String, minChars: Int = 1, maxChars: Int = 1000000,
           maxLinkDensity: Double = 0.9)
-         (accept: DataFrame => Unit): StreamingQuery =
-    spark.readStream.format("binaryFile")
+         (accept: DataFrame => Unit): StreamingQuery = {
+    val files = spark.readStream.format("binaryFile")
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, " +
         "content BINARY")
       .load(warcGlob)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    MicroBatch.drain(files, checkpoint) { (batch, _) =>
+      MicroBatch.intake(accept) { _ =>
         val extracted =
           extractBatch(batch, minChars, maxChars, maxLinkDensity)
             .withColumn("content_hash", md5(col("text")))
@@ -138,13 +133,9 @@ object StreamingWarcIntake {
           .select(col("r.uri").as("uri"), col("r.warc_date").as("warc_date"),
             col("r.text").as("text"),
             col("r.link_density").as("link_density"), col("content_hash"))
-        val fresh = StreamingCorpusDedup.freshVsStore(inBatch, storeDir)
-        fresh.persist()
-        try {
-          accept(fresh)
-          fresh.select(col("content_hash"))
-            .write.mode("append").parquet(storeDir)
-        } finally fresh.unpersist()
+        (StreamingCorpusDedup.freshVsStore(inBatch, storeDir),
+         _.select(col("content_hash")).write.mode("append").parquet(storeDir))
       }
-      .start()
+    }
+  }
 }

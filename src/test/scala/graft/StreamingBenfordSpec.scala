@@ -38,6 +38,43 @@ class StreamingBenfordSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
+  test("a batch replayed after its side effects folds in once and audits once") {
+    implicit val sq = spark.sqlContext
+    val statePath = tmpDir("benford-replay-state") + "/state"
+    val auditPath = tmpDir("benford-replay-audit") + "/audit"
+    val ckpt = tmpDir("benford-replay-ckpt")
+    val healthy = (1 to 300).map(i => math.pow(1.04, i) % 9000 + 1.0)
+    val drifted = (1 to 200).map(i => 7000.0 + i)
+
+    val mem = MemoryStream[Double]
+    def drain(): Unit = StreamingBenford.monitor(mem.toDF().toDF("v"), "v",
+      statePath, auditPath, ckpt).awaitTermination(60000)
+    mem.addData(healthy: _*)
+    drain()
+    mem.addData(drifted: _*)
+    drain()
+
+    // a crash after the last batch's writes but before its commit:
+    // the restart re-runs that batch under the same batchId
+    val commits = new java.io.File(ckpt, "commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(new java.io.File(commits, last.toString).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    drain()
+    assert(commits.list().contains(last.toString), "replayed batch never re-ran")
+
+    val streamed = StreamingBenford.currentState(spark, statePath)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val monolithic = Profiler
+      .firstDigitCounts((healthy ++ drifted).toDF("v"), "v")
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(streamed == monolithic, "replayed batch must fold into state once")
+    val perBatch = spark.read.parquet(auditPath).groupBy("batch_id").count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(perBatch == Map(0L -> 1L, last -> 1L),
+      s"one audit row per batch_id, got $perBatch")
+  }
+
   private def scenario(statePath: String): Unit = {
     implicit val sq = spark.sqlContext
     val auditPath = tmpDir("benford-audit") + "/audit"
