@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One-call engine setup for an EXISTING session: registers the native
-  * expressions (cosine_native, minhash_native, simhash64_native) as
-  * temp SQL functions, so notebooks and spark-shell users get the full
-  * surface without rebuilding the session. The production path is
+/** One-call engine setup for an EXISTING session: registers every
+  * native expression of [[plans.NativeFunctions]] as a temp SQL
+  * function, so notebooks and spark-shell users get the full surface
+  * without rebuilding the session. The production path is
   * `spark.sql.extensions=graft.plans.GraftExtensions` at session build
   * (which also installs the FuseCosineRule optimizer rule — optimizer
   * rules cannot be injected post-hoc, so `init` adds the rule via
@@ -13,11 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
   def init(spark: SparkSession): SparkSession = {
-    plans.NativeFunctions.register(spark)
-    plans.MinHashNative.register(spark)
-    plans.SimHashNative.register(spark)
-    plans.AffineMinHashNative.register(spark)
-    plans.PqNative.register(spark)
+    plans.NativeFunctions.all.foreach(plans.NativeFunctions.register(spark, _))
     if (!spark.experimental.extraOptimizations.contains(plans.FuseCosineRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ plans.FuseCosineRule

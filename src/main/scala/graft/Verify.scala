@@ -1,6 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -30,21 +33,7 @@ object Verify {
       if (selected(name)) runOne(spark, name, fn, sfDir, outDir) else None
     }
     writeErrors(spark, outDir, errors)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(outDir, SparkEntry.oracleSql.filter(kv => selected(kv._1)))
     spark.stop()
   }
 
@@ -77,19 +66,26 @@ object Verify {
     * signal that Verify aborted before finishing). */
   private[graft] def writeErrors(spark: SparkSession, outDir: String,
                                  errors: Seq[(String, String)]): Unit = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = errors
-      .map { case (k, m) => s"${q(k)}: {${q("err")}: ${q(m)}}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/verify_errors.json"), json)
+    writeJson(s"$outDir/verify_errors.json",
+      errors.map { case (k, m) => k -> java.util.Map.of("err", m) })
     if (errors.nonEmpty)
       System.err.println(
         s"[verify] ${errors.size} quer${if (errors.size == 1) "y" else "ies"} FAILED: " +
           errors.map(_._1).mkString(", "))
+  }
+
+  /** Persists `{name: oracle SQL}` as oracle_sql.json, the DuckDB
+    * compare's input. */
+  private[graft] def writeOracleSql(outDir: String,
+                                    sql: Iterable[(String, String)]): Unit =
+    writeJson(s"$outDir/oracle_sql.json", sql)
+
+  /** `entries` as one JSON object. Jackson escapes every key and value
+    * (quotes, backslashes and all control characters), so SQL or an
+    * error message carrying a tab or CR still parses downstream. */
+  private def writeJson(path: String, entries: Iterable[(String, AnyRef)]): Unit = {
+    val obj = new java.util.LinkedHashMap[String, AnyRef]()
+    entries.foreach { case (k, v) => obj.put(k, v) }
+    Files.writeString(Paths.get(path), new ObjectMapper().writeValueAsString(obj))
   }
 }

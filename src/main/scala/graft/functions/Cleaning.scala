@@ -85,31 +85,36 @@ object Cleaning {
     when(c.isin("None", "nan", "<NA>", "NaN"), lit(null).cast("string")).otherwise(c)
 
   /** F4: lowercase all column names (schema transform). */
-  def lowercaseCols(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(_.toLowerCase).toIndexedSeq: _*)
+  def lowercaseCols(df: DataFrame): DataFrame = renamed(df)(lowercaseNames)
+  def lowercaseNames(names: Seq[String]): Seq[String] = names.map(_.toLowerCase)
 
   /** F6: strip spaces from column names. */
-  def despaceCols(df: DataFrame): DataFrame =
-    df.toDF(df.columns.map(_.replace(" ", "")).toIndexedSeq: _*)
+  def despaceCols(df: DataFrame): DataFrame = renamed(df)(despaceNames)
+  def despaceNames(names: Seq[String]): Seq[String] = names.map(_.replace(" ", ""))
 
   /** F5: prefix every column except `except` — namespaces the wide stats
     * table ({category}_{table}_{stat}, team_rankings_scraper.py:96-113). */
   def prefixCols(df: DataFrame, prefix: String, except: Set[String]): DataFrame =
-    df.toDF(df.columns.map(c => if (except(c)) c else s"$prefix$c").toIndexedSeq: _*)
+    renamed(df)(prefixNames(_, prefix, except))
+  def prefixNames(names: Seq[String], prefix: String, except: Set[String]): Seq[String] =
+    names.map(c => if (except(c)) c else s"$prefix$c")
 
   /** F7: rename year-named columns positionally — first "2000".."2100"
     * column → this_yr, second → last_yr (team_rankings_scraper.py:143-150). */
-  def renameYearCols(df: DataFrame): DataFrame = {
+  def renameYearCols(df: DataFrame): DataFrame = renamed(df)(renameYearNames)
+  def renameYearNames(names: Seq[String]): Seq[String] = {
     val yearRe = "^2[01]\\d\\d$".r
     var seen = 0
-    val renamed = df.columns.map { c =>
+    names.map { c =>
       if (yearRe.matches(c)) {
         seen += 1
         if (seen == 1) "this_yr" else if (seen == 2) "last_yr" else c
       } else c
     }
-    df.toDF(renamed.toIndexedSeq: _*)
   }
+
+  private def renamed(df: DataFrame)(f: Seq[String] => Seq[String]): DataFrame =
+    df.toDF(f(df.columns.toIndexedSeq): _*)
 
   /** Apply f to every string-typed column, keeping names/positions. */
   def mapStringCols(df: DataFrame, f: Column => Column): DataFrame = {

@@ -1,22 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** F12 + S6/S7 time machinery.
   *
-  * Timezone policy (SURVEY §1.2): session TZ stays UTC; conversion to
-  * the reference's US/Central happens at the edges via
-  * from_utc_timestamp/to_utc_timestamp — matching main.py:31-35.
+  * Timezone policy (SURVEY §1.2): session TZ stays UTC; the reference's
+  * US/Central ([[CentralTz]]) applies only at the edges, where
+  * `Main.resolveTimestamp` reads an explicit collection date as Central
+  * wall-clock — matching main.py:31-35.
   */
 object TimeFns {
   val CentralTz = "America/Chicago"
-
-  /** UTC instant → wall-clock in the reference's collection timezone. */
-  def toCentral(c: Column): Column = from_utc_timestamp(c, CentralTz)
-
-  /** Wall-clock Central → UTC instant. */
-  def fromCentral(c: Column): Column = to_utc_timestamp(c, CentralTz)
 
   /** S6/S7: hourly time index between two timestamps inclusive —
     * the weather frame's datetime index (weather_client.py:132-150),

@@ -3,17 +3,11 @@ package graft.llm
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Embedding post-processing: L2 normalization and symmetric int8
-  * quantization (x → round(x·127/max|x|)) — per-row array transforms,
+/** Embedding post-processing: symmetric int8 quantization
+  * (x → round(x·127/max|x|)) — per-row array transforms,
   * codegen-friendly, no shuffle. Quantization is the storage-shrink
   * path for 100 TB embedding corpora (4 bytes/dim → 1). */
 object Quantize {
-
-  def l2Normalize(vec: Column): Column = {
-    val v = vec.cast("array<double>")
-    val n = sqrt(aggregate(transform(v, x => x * x), lit(0.0), (a, x) => a + x))
-    transform(v, x => x / n)
-  }
 
   /** Symmetric int8 quantization against the vector's own max-abs. */
   def quantizeInt8(vec: Column, maxAbs: Column): Column =

@@ -21,8 +21,6 @@ object TextStats {
   def bpeishTokens(c: Column): Column =
     size(regexp_extract_all(c, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
 
-  def charCount(c: Column): Column = length(c)
-
   /** Ratio of characters that are punctuation/symbols. */
   def punctRatio(c: Column): Column =
     size(regexp_extract_all(c, lit("[^A-Za-z0-9\\s]"), lit(0)))
@@ -33,7 +31,7 @@ object TextStats {
     size(filter(tokens(c), t => t.isInCollection(stopwords)))
       .cast("double") / greatest(size(tokens(c)), lit(1)).cast("double")
 
-  /** Mean token length — with char and token counts, the core of a
+  /** Mean token length — with `length` and token counts, the core of a
     * length/punct/stopword quality score. */
   def avgTokenLen(c: Column): Column = {
     val t = tokens(c)

@@ -24,35 +24,6 @@ import org.apache.spark.sql.types.DoubleType
   * the q150 contract. */
 object Forecast {
 
-  /** Adds (level, trend) to each row. `orderCols` must be a TOTAL
-    * order within a key. */
-  def holt(df: DataFrame, keyCol: String, orderCols: Seq[Column],
-           valueCol: String, alpha: Double, beta: Double): DataFrame = {
-    val valIdx = df.schema.fieldIndex(valueCol)
-    val keyIdx = df.schema.fieldIndex(keyCol)
-    val ca = 1.0 - alpha
-    val cb = 1.0 - beta
-    val outEnc = Encoders.row(
-      df.schema.add("level", DoubleType, nullable = false)
-        .add("trend", DoubleType, nullable = false))
-    df.groupByKey(_.get(keyIdx).toString)(Encoders.STRING)
-      .flatMapSortedGroups(orderCols: _*) { (_, rows) =>
-        var first = true
-        var l = 0.0
-        var b = 0.0
-        rows.map { r =>
-          val y = r.getDouble(valIdx)
-          if (first) { l = y; b = 0.0; first = false }
-          else {
-            val lPrev = l
-            l = alpha * y + ca * (l + b)
-            b = beta * (l - lPrev) + cb * b
-          }
-          Row.fromSeq(r.toSeq ++ Seq(l, b))
-        }
-      }(outEnc)
-  }
-
   /** Per-key summary: points, final level/trend, and the one-step
     * forecast — emitted directly from the sequential fold (ONE row
     * per key out of flatMapSortedGroups; a groupBy + last() would

@@ -177,23 +177,6 @@ object Graph {
       when(uFirst, col("__dv")).otherwise(col("__du")).as("dhi"))
   }
 
-  /** k-core decomposition (the densest-community primitive): the
-    * maximal node set in which every member keeps ≥ k neighbors
-    * WITHIN the set, computed by simultaneous peeling — each round
-    * drops every node whose degree among survivors is < k, until a
-    * fixpoint. Returns (node, deg_in_core) over the final core.
-    *
-    * Scale shape: each round is one double semi-join of the edge list
-    * against the survivor set plus one node-keyed count — exchanges
-    * carry the EDGE list, never more; the survivor frame shrinks
-    * monotonically and is localCheckpoint'ed per round so the plan
-    * does not deepen with rounds. Round count is bounded by the
-    * graph's degeneracy ordering (tens, not thousands, on real
-    * graphs); `maxRounds` is a runaway guard, not a tuning knob.
-    * Deterministic: simultaneous (not sequential) removal makes the
-    * result independent of any node ordering, so a fixed-step replay
-    * of the same peel (the q164 oracle runs 30 rounds) lands on the
-    * identical set once both have converged. */
   /** Synchronous label propagation for community detection: every
     * node starts as its own label; each round it adopts the most
     * frequent label among its NEIGHBORS, ties to the smallest label.
@@ -345,6 +328,23 @@ object Graph {
     visited
   }
 
+  /** k-core decomposition (the densest-community primitive): the
+    * maximal node set in which every member keeps ≥ k neighbors
+    * WITHIN the set, computed by simultaneous peeling — each round
+    * drops every node whose degree among survivors is < k, until a
+    * fixpoint. Returns (node, deg_in_core) over the final core.
+    *
+    * Scale shape: each round is one double semi-join of the edge list
+    * against the survivor set plus one node-keyed count — exchanges
+    * carry the EDGE list, never more; the survivor frame shrinks
+    * monotonically and is localCheckpoint'ed per round so the plan
+    * does not deepen with rounds. Round count is bounded by the
+    * graph's degeneracy ordering (tens, not thousands, on real
+    * graphs); `maxRounds` is a runaway guard, not a tuning knob.
+    * Deterministic: simultaneous (not sequential) removal makes the
+    * result independent of any node ordering, so a fixed-step replay
+    * of the same peel (the q164 oracle runs 30 rounds) lands on the
+    * identical set once both have converged. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             maxRounds: Int = 100): DataFrame = {
     val sym = edges

@@ -46,10 +46,4 @@ object TableDiff {
              changedList).as("changed_cols"): _*)
       .filter(col("status").isNotNull)
   }
-
-  /** The one-row reconciliation summary a monitor alerts on. */
-  def diffSummary(a: DataFrame, b: DataFrame, keys: Seq[String]): DataFrame =
-    rowDiff(a, b, keys)
-      .groupBy(col("status"))
-      .agg(count(lit(1)).as("n"))
 }

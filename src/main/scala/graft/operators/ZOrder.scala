@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) layout: interleave the bits of two dimension
@@ -31,18 +31,5 @@ object ZOrder {
       shiftleft(shiftright(x, b).bitwiseAND(lit(1L)), 2 * b)
         .bitwiseOR(shiftleft(shiftright(y, b).bitwiseAND(lit(1L)), 2 * b + 1))
     }.reduce(_ bitwiseOR _)
-  }
-
-  /** Physically lay `df` out in z-order across `numFiles` range
-    * partitions (each written file then covers one narrow z-range —
-    * i.e. one small (x, y) rectangle). Range partitioning samples the
-    * z distribution, so file BOUNDARIES are not bit-reproducible
-    * across runs — irrelevant for a storage layout, which is why the
-    * oracle-checked query (q64) verifies fixed-width z-bucket stats
-    * instead. */
-  def layoutByZ(df: DataFrame, x: Column, y: Column, bits: Int,
-                numFiles: Int): DataFrame = {
-    val z = zValue(x, y, bits)
-    df.repartitionByRange(numFiles, z).sortWithinPartitions(z)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native codegen'd PORTABLE-arithmetic MinHash signature: element j of
@@ -81,20 +81,9 @@ case class AffineMinHash(child: Expression, numPerm: Int)
 }
 
 object AffineMinHashNative {
-  val Name = "affine_minhash"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name,
-      exprs => AffineMinHash(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
 
   /** Signature column: array<long> of `numPerm` affine-permutation
     * minima mod 2^31-1. */
-  def affineMinhash(spark: SparkSession, hashed: Column, numPerm: Int): Column = {
-    register(spark)
-    call_function(Name, hashed.cast("array<bigint>"),
-      org.apache.spark.sql.functions.lit(numPerm))
-  }
+  def affineMinhash(spark: SparkSession, hashed: Column, numPerm: Int): Column =
+    NativeFunctions.AffineMin(spark, hashed.cast("array<bigint>"), lit(numPerm))
 }

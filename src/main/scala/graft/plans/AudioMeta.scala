@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -266,16 +265,9 @@ object AudioMeta {
 }
 
 object AudioMetaNative {
-  val Name = "audio_meta"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => AudioMeta(exprs(0)), "built-in")
 
   /** struct(format, sample_rate, channels, bits_per_sample, n_frames)
     * parsed from a binary column. */
-  def audioMeta(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function(Name, bytes)
-  }
+  def audioMeta(spark: SparkSession, bytes: Column): Column =
+    NativeFunctions.Audio(spark, bytes)
 }

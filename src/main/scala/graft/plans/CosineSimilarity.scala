@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native codegen'd cosine similarity over two array<float> columns.
@@ -78,19 +76,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object NativeFunctions {
-  val CosineName = "cosine_native"
-
-  /** Register the expression in the session's function registry; call
-    * once per session, then use `cosineNative` (or SQL). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CosineName, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-
-  def cosineNative(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(CosineName, a.cast("array<float>"), b.cast("array<float>"))
-  }
 }

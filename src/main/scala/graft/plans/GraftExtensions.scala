@@ -1,60 +1,30 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-/** Optional optimizer extensions for the engine, registered with
+/** Optional session extensions for the engine, registered with
   * `spark.sql.extensions=graft.plans.GraftExtensions` (or per-session
   * via `spark.experimental.extraOptimizations`).
   *
-  * One rule today: [[FuseCosineRule]] rewrites the composable
-  * higher-order-function cosine pattern (Similarity.cosine — an
-  * `aggregate(zip_with(a, b, *), 0.0, +)` dot product divided by the
+  * Every [[NativeFunctions]] entry is injected as a SQL function, and
+  * one optimizer rule is installed: [[FuseCosineRule]] rewrites the
+  * composable higher-order-function cosine pattern (Similarity.cosine —
+  * an `aggregate(zip_with(a, b, *), 0.0, +)` dot product divided by the
   * product of two self-dot square roots) into the fused native
   * [[CosineSimilarity]] expression, so code written against the
   * portable HOF API gets the codegen'd single-pass loop for free.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => FuseCosineRule)
     // The native expressions as first-class SQL functions: a session
     // built with these extensions can call cosine_native(a, b) etc.
     // from SQL text, not just the Column API.
-    ext.injectFunction((FunctionIdentifier(NativeFunctions.CosineName),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, NativeFunctions.CosineName),
-      exprs => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier(MinHashNative.Name),
-      new ExpressionInfo(classOf[MinHashSignature].getName, MinHashNative.Name),
-      exprs => MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    ext.injectFunction((FunctionIdentifier(SimHashNative.Name),
-      new ExpressionInfo(classOf[SimHash64].getName, SimHashNative.Name),
-      exprs => SimHash64(exprs(0))))
-    ext.injectFunction((FunctionIdentifier(AffineMinHashNative.Name),
-      new ExpressionInfo(classOf[AffineMinHash].getName, AffineMinHashNative.Name),
-      exprs => AffineMinHash(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-    ext.injectFunction((FunctionIdentifier(PqNative.CodesName),
-      new ExpressionInfo(classOf[PqCodes].getName, PqNative.CodesName),
-      exprs => PqCodes(exprs(0), exprs(1), intArg(exprs(2)), intArg(exprs(3)))))
-    ext.injectFunction((FunctionIdentifier(PqNative.DistTableName),
-      new ExpressionInfo(classOf[PqDistTable].getName, PqNative.DistTableName),
-      exprs => PqDistTable(exprs(0), exprs(1), intArg(exprs(2)), intArg(exprs(3)))))
-    ext.injectFunction((FunctionIdentifier(PqNative.AdcName),
-      new ExpressionInfo(classOf[PqAdc].getName, PqNative.AdcName),
-      exprs => PqAdc(exprs(0), exprs(1), intArg(exprs(2)))))
-    // route through StringSetNative's builders so this registration
-    // path fails as loudly (non-foldable vocabulary -> clear require
-    // message) and coerces exactly like the registry path
-    ext.injectFunction((FunctionIdentifier(StringSetNative.Name),
-      new ExpressionInfo(classOf[StringSetContains].getName, StringSetNative.Name),
-      exprs => StringSetContains(StringSetNative.asString(exprs(0)),
-        StringSetNative.arrayArg(exprs(1)))))
+    NativeFunctions.inject(ext)
+    ext.injectOptimizerRule(_ => FuseCosineRule)
   }
 }
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -211,15 +210,8 @@ object ImageMeta {
 }
 
 object ImageMetaNative {
-  val Name = "image_meta"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => ImageMeta(exprs(0)), "built-in")
 
   /** struct(format, width, height) parsed from a binary column. */
-  def imageMeta(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function(Name, bytes)
-  }
+  def imageMeta(spark: SparkSession, bytes: Column): Column =
+    NativeFunctions.Image(spark, bytes)
 }

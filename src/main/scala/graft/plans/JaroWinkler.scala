@@ -1,10 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Jaro-Winkler similarity — the graded string-match score
@@ -95,24 +94,7 @@ object JaroWinklerImpl {
 }
 
 object JaroWinklerNative {
-  val Name = "jaro_winkler_native"
 
-  // ExpectsInputTypes' AbstractDataType is private[sql] (the
-  // CosineSimilarity note), so the STRING input contract is enforced
-  // here: every construction path wraps its arguments in an explicit
-  // Cast(_, StringType), which Catalyst type-checks at analysis time —
-  // an uncastable argument (e.g. array) fails analysis cleanly instead
-  // of ClassCastException-ing inside generated code.
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => JaroWinklerSim(asString(exprs(0)), asString(exprs(1))),
-      "built-in")
-
-  private def asString(e: Expression): Expression =
-    if (e.dataType == StringType) e else Cast(e, StringType)
-
-  def jaroWinkler(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(Name, a, b)
-  }
+  def jaroWinkler(spark: SparkSession, a: Column, b: Column): Column =
+    NativeFunctions.JaroWinkler(spark, a, b)
 }

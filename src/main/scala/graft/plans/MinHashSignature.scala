@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native codegen'd MinHash signature over an array<long> of hashed
@@ -79,19 +79,8 @@ case class MinHashSignature(child: Expression, numPerm: Int)
 }
 
 object MinHashNative {
-  val Name = "minhash_native"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name,
-      exprs => MinHashSignature(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
 
   /** Signature column: array<long> of `numPerm` permutation minima. */
-  def minhashNative(spark: SparkSession, hashed: Column, numPerm: Int): Column = {
-    register(spark)
-    call_function(Name, hashed.cast("array<bigint>"),
-      org.apache.spark.sql.functions.lit(numPerm))
-  }
+  def minhashNative(spark: SparkSession, hashed: Column, numPerm: Int): Column =
+    NativeFunctions.MinHash(spark, hashed.cast("array<bigint>"), lit(numPerm))
 }

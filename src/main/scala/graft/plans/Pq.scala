@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit, typedLit}
+import org.apache.spark.sql.functions.{lit, typedLit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Native codegen'd product-quantization kernels (encode, query
@@ -222,40 +222,18 @@ case class PqAdc(left: Expression, right: Expression, nCodes: Int)
 }
 
 object PqNative {
-  val CodesName = "pq_codes"
-  val DistTableName = "pq_dist_table"
-  val AdcName = "pq_adc"
-
-  private def intArg(e: Expression): Int =
-    e.eval().asInstanceOf[Number].intValue()
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(CodesName,
-      es => PqCodes(es(0), es(1), intArg(es(2)), intArg(es(3))), "built-in")
-    reg.createOrReplaceTempFunction(DistTableName,
-      es => PqDistTable(es(0), es(1), intArg(es(2)), intArg(es(3))), "built-in")
-    reg.createOrReplaceTempFunction(AdcName,
-      es => PqAdc(es(0), es(1), intArg(es(2))), "built-in")
-  }
 
   def pqCodes(spark: SparkSession, vec: Column, cbFlat: Seq[Double],
-              nSub: Int, nCodes: Int): Column = {
-    register(spark)
-    call_function(CodesName, vec.cast("array<double>"), typedLit(cbFlat),
-                  lit(nSub), lit(nCodes))
-  }
+              nSub: Int, nCodes: Int): Column =
+    NativeFunctions.Codes(spark, vec.cast("array<double>"), typedLit(cbFlat),
+                          lit(nSub), lit(nCodes))
 
   def pqDistTable(spark: SparkSession, vec: Column, cbFlat: Seq[Double],
-                  nSub: Int, nCodes: Int): Column = {
-    register(spark)
-    call_function(DistTableName, vec.cast("array<double>"), typedLit(cbFlat),
-                  lit(nSub), lit(nCodes))
-  }
+                  nSub: Int, nCodes: Int): Column =
+    NativeFunctions.DistTable(spark, vec.cast("array<double>"), typedLit(cbFlat),
+                              lit(nSub), lit(nCodes))
 
   def pqAdc(spark: SparkSession, codes: Column, dt: Column,
-            nCodes: Int): Column = {
-    register(spark)
-    call_function(AdcName, codes, dt, lit(nCodes))
-  }
+            nCodes: Int): Column =
+    NativeFunctions.Adc(spark, codes, dt, lit(nCodes))
 }

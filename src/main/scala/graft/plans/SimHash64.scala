@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Native codegen'd 64-bit SimHash over an array<long> of hashed
@@ -83,15 +82,8 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 }
 
 object SimHashNative {
-  val Name = "simhash64_native"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => SimHash64(exprs(0)), "built-in")
 
   /** 64-bit signature column over an array<long> of hashed tokens. */
-  def simhashNative(spark: SparkSession, hashed: Column): Column = {
-    register(spark)
-    call_function(Name, hashed.cast("array<bigint>"))
-  }
+  def simhashNative(spark: SparkSession, hashed: Column): Column =
+    NativeFunctions.SimHash(spark, hashed.cast("array<bigint>"))
 }

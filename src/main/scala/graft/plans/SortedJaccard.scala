@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 
 /** Native codegen'd set-Jaccard over two SORTED, DISTINCT arrays.
@@ -125,16 +124,9 @@ case class SortedJaccard(left: Expression, right: Expression)
 }
 
 object SortedJaccardNative {
-  val Name = "sorted_jaccard"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => SortedJaccard(exprs(0), exprs(1)), "built-in")
 
   /** Jaccard over two sorted distinct arrays (array<bigint> or
     * array<string>, both sides the same type). */
-  def sortedJaccard(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function(Name, a, b)
-  }
+  def sortedJaccard(spark: SparkSession, a: Column, b: Column): Column =
+    NativeFunctions.Jaccard(spark, a, b)
 }

@@ -1,11 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedLit}
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.sql.functions.typedLit
+import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native hash-set membership test against a FIXED string vocabulary —
@@ -58,33 +57,9 @@ case class StringSetContains(child: Expression, values: Seq[String])
 }
 
 object StringSetNative {
-  val Name = "in_string_set_native"
-
-  /** Registry form takes the vocabulary as a foldable array<string>
-    * second argument and freezes it into the expression at resolution
-    * time (the PqCodes int-argument precedent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => StringSetContains(asString(exprs(0)),
-        arrayArg(exprs(1))), "built-in")
-
-  private[plans] def asString(e: Expression): Expression =
-    if (e.dataType == StringType) e else Cast(e, StringType)
-
-  private[plans] def arrayArg(e: Expression): Seq[String] = {
-    require(e.foldable,
-      s"$Name: the vocabulary argument must be a literal array")
-    val arr = e.eval().asInstanceOf[ArrayData]
-    (0 until arr.numElements()).map { i =>
-      val v = arr.getUTF8String(i)
-      if (v == null) null else v.toString
-    }
-  }
 
   /** O(1) membership of `c` in the fixed `values` vocabulary. */
   def inStringSet(spark: SparkSession, c: Column,
-                  values: Seq[String]): Column = {
-    register(spark)
-    call_function(Name, c, typedLit(values))
-  }
+                  values: Seq[String]): Column =
+    NativeFunctions.StringSet(spark, c, typedLit(values))
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -147,16 +146,9 @@ object VideoMeta {
 }
 
 object VideoMetaNative {
-  val Name = "video_meta"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      Name, exprs => VideoMeta(exprs(0)), "built-in")
 
   /** struct(format, brand, timescale, duration, width, height) parsed
     * from a binary column. */
-  def videoMeta(spark: SparkSession, bytes: Column): Column = {
-    register(spark)
-    call_function(Name, bytes)
-  }
+  def videoMeta(spark: SparkSession, bytes: Column): Column =
+    NativeFunctions.Video(spark, bytes)
 }

@@ -65,17 +65,11 @@ object TeamRankingsNormalizer {
       .filterNot(_.equalsIgnoreCase("team"))
     val split = plain ++ spec.recordCols.flatMap(c =>
       Seq(s"${c}_wins", s"${c}_losses", s"${c}_ties", s"${c}_games_played"))
-    val yearRe = "^2[01]\\d\\d$".r
-    var seen = 0
-    split
-      .map(_.toLowerCase.replace(" ", ""))
-      .map { c =>
-        if (yearRe.matches(c)) {
-          seen += 1
-          if (seen == 1) "this_yr" else if (seen == 2) "last_yr" else c
-        } else c
-      }
-      .map(c => s"${spec.category}_${spec.tableName}_$c")
+    Cleaning.prefixNames(
+      Cleaning.renameYearNames(
+        Cleaning.despaceNames(
+          Cleaning.lowercaseNames(split))),
+      s"${spec.category}_${spec.tableName}_", except = Set.empty)
   }
 
   /** Offline stand-in for the HTML fetch (the HTTP boundary is a

@@ -28,12 +28,21 @@ import graft.sources.ParquetTable
   *    letting duplicates through.
   *  - [[foldState]] (a small mergeable state table): the last applied
   *    batchId rides on every state row, and a batch at or below it is
-  *    a no-op, so a replay never folds in twice.
+  *    a no-op, so a replay never folds in twice. The streaming query's
+  *    id rides next to it, so a state table is never folded by a query
+  *    whose batchIds it does not count.
   */
 private[graft] object MicroBatch {
 
   /** Stamp column of a [[foldState]] table: the last applied batchId. */
   val Stamp = "__last_batch"
+
+  /** Owner column of a [[foldState]] table: the id of the streaming
+    * query that wrote it. Spark keeps that id in the checkpoint's
+    * `metadata` file, so it names the checkpoint the stamps count in,
+    * and hands it to the batch thread as this local property. */
+  val Owner = "__query_id"
+  private val QueryIdProperty = "sql.streaming.queryId"
 
   /** Drain what `stream` has available now through `body`, one
     * micro-batch at a time, tracking committed batches in
@@ -75,21 +84,34 @@ private[graft] object MicroBatch {
     * merged rows are collected first, so the cost is O(state), not
     * O(data), and the overwrite never reads the files it replaces.
     * A state table belongs to one checkpoint: a new checkpoint restarts
-    * batchIds at 0, so over an existing table it skips every batch up
-    * to the old stamp. */
+    * batchIds at 0 and would skip every batch up to the old stamp, so a
+    * table stamped by another streaming query is refused with an
+    * `IllegalStateException`. The query's id is stamped next to the
+    * batchId; a table without it is adopted on its next write, and a
+    * fold outside a streaming query keeps the table's owner. */
   def foldState(spark: SparkSession, batchId: Long, statePath: String)(
       batchState: => DataFrame, merge: (DataFrame, DataFrame) => DataFrame,
       beforeWrite: DataFrame => Unit = _ => ()): Unit = {
     val prior = ParquetTable.readIfPresent(spark, statePath)
-    val lastApplied = prior.map(_.agg(max(col(Stamp))).head())
-      .filterNot(_.isNullAt(0)).map(_.getLong(0)).getOrElse(-1L)
+    val stamps = prior.map { p =>
+      val owner = if (p.columns.contains(Owner)) max(col(Owner)) else lit(null)
+      p.agg(max(col(Stamp)), owner).head()
+    }
+    val lastApplied = stamps.filterNot(_.isNullAt(0)).map(_.getLong(0)).getOrElse(-1L)
+    val priorOwner = stamps.flatMap(r => Option(r.getString(1)))
+    val queryId = Option(spark.sparkContext.getLocalProperty(QueryIdProperty))
+    for (q <- queryId; o <- priorOwner if q != o)
+      throw new IllegalStateException(s"state table $statePath belongs to " +
+        s"streaming query $o, not $q: a state table folds under one checkpoint")
     if (batchId > lastApplied) {
-      val merged = prior.fold(batchState)(p => merge(p.drop(Stamp), batchState))
+      val merged = prior.fold(batchState)(p =>
+        merge(p.drop(Stamp, Owner), batchState))
       val state = spark.createDataFrame(
         spark.sparkContext.parallelize(merged.collect().toIndexedSeq, 1),
         merged.schema)
       beforeWrite(state)
       state.withColumn(Stamp, lit(batchId))
+        .withColumn(Owner, lit(queryId.orElse(priorOwner).orNull).cast("string"))
         .write.mode("overwrite").parquet(statePath)
     }
   }

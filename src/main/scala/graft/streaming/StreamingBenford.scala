@@ -62,5 +62,5 @@ object StreamingBenford {
   /** The cumulative audit as a batch frame — for asserting streamed ==
     * monolithic ([[Profiler.benfordAudit]] over everything seen). */
   def currentState(spark: SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(statePath).drop(MicroBatch.Stamp)
+    spark.read.parquet(statePath).drop(MicroBatch.Stamp, MicroBatch.Owner)
 }

@@ -44,7 +44,7 @@ object StreamingStats {
   def currentCorr(spark: SparkSession, statePath: String,
                   cols: Seq[String]): DataFrame =
     Profiler.corrFromStats(
-      spark.read.parquet(statePath).drop(MicroBatch.Stamp), cols)
+      spark.read.parquet(statePath).drop(MicroBatch.Stamp, MicroBatch.Owner), cols)
 
   /** Streaming maintenance of OLS sufficient statistics — the
     * continuously-running twin of
@@ -74,5 +74,5 @@ object StreamingStats {
   /** The current (n, b0, b1, b2, r2) fit from the maintained state. */
   def currentOls(spark: SparkSession, statePath: String): DataFrame =
     graft.operators.Regression.olsFromStats(
-      spark.read.parquet(statePath).drop(MicroBatch.Stamp))
+      spark.read.parquet(statePath).drop(MicroBatch.Stamp, MicroBatch.Owner))
 }

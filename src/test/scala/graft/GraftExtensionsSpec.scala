@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.llm.Similarity
-import graft.plans.FuseCosineRule
+import graft.plans.{FuseCosineRule, GraftExtensions, NativeFunctions}
 
 /** The optional optimizer rule: the composable HOF cosine fuses into
   * the native expression with unchanged results. Installed here via
@@ -147,6 +148,43 @@ class GraftExtensionsSpec extends SparkSpec {
     } finally {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == FuseCosineRule)
+    }
+  }
+
+  /** One SQL call per native function: (name, select expression, value). */
+  private val nativeCalls: Seq[(String, String, Any)] = Seq(
+    ("cosine_native", "cosine_native(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
+      "array(CAST(2.0 AS FLOAT), CAST(0.0 AS FLOAT)))", 1.0),
+    ("minhash_native", "size(minhash_native(array(7L), 4))", 4),
+    ("simhash64_native", "simhash64_native(array(5L))", 5L),
+    ("affine_minhash", "size(affine_minhash(array(7L), 4))", 4),
+    ("pq_codes", "pq_codes(array(3.0D, 4.0D), array(0.0D, 0.0D, 3.0D, 3.0D), 1, 2)[0]", 1),
+    ("pq_dist_table",
+      "pq_dist_table(array(3.0D, 4.0D), array(0.0D, 0.0D, 3.0D, 3.0D), 1, 2)[1]", 1.0),
+    ("pq_adc", "pq_adc(array(1), array(25.0D, 1.0D), 2)", 1.0),
+    ("in_string_set_native", "in_string_set_native('ab', array('ab', 'cd'))", true),
+    ("sorted_jaccard", "sorted_jaccard(array(1L, 2L, 3L), array(2L, 3L, 4L))", 0.5),
+    ("jaro_winkler_native", "round(jaro_winkler_native('MARTHA', 'MARHTA'), 4)", 0.9611),
+    ("image_meta", "image_meta(X'4749463839610200030000').width", 2),
+    ("audio_meta", "audio_meta(CAST('.snd' AS BINARY)).format", "au"),
+    ("video_meta", "video_meta(X'1A45DFA3').format", "webm"))
+
+  test("every native function resolves from SQL after Graft.init and under GraftExtensions") {
+    assert(nativeCalls.map(_._1).toSet === NativeFunctions.all.map(_.name).toSet)
+    def check(session: SparkSession, how: String): Unit =
+      for ((name, call, want) <- nativeCalls) {
+        val got = session.sql(s"SELECT $call").collect().head.get(0)
+        assert(got == want, s"$name after $how")
+      }
+    check(graft.Graft.init(spark.newSession()), "Graft.init")
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      check(SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate(),
+        "GraftExtensions")
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
     }
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.operators.Profiler
 import graft.streaming.StreamingBenford
@@ -73,6 +74,26 @@ class StreamingBenfordSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(perBatch == Map(0L -> 1L, last -> 1L),
       s"one audit row per batch_id, got $perBatch")
+  }
+
+  test("a state table refuses a fold under another checkpoint") {
+    implicit val sq = spark.sqlContext
+    val statePath = tmpDir("benford-foreign-state") + "/state"
+    val auditPath = tmpDir("benford-foreign-audit") + "/audit"
+    val mem = MemoryStream[Double]
+    def drain(ckpt: String): Unit = StreamingBenford.monitor(mem.toDF().toDF("v"), "v",
+      statePath, auditPath, ckpt).awaitTermination(60000)
+    mem.addData((1 to 300).map(i => math.pow(1.04, i) % 9000 + 1.0): _*)
+    drain(tmpDir("benford-ckpt-a"))
+    val folded = StreamingBenford.currentState(spark, statePath).collect().toSet
+
+    // a fresh checkpoint restarts batchIds at 0, at or below the stamp
+    // checkpoint A left on the state table
+    mem.addData((1 to 200).map(i => 7000.0 + i): _*)
+    val err = intercept[StreamingQueryException](drain(tmpDir("benford-ckpt-b")))
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[IllegalStateException]), err)
+    assert(StreamingBenford.currentState(spark, statePath).collect().toSet == folded)
   }
 
   private def scenario(statePath: String): Unit = {

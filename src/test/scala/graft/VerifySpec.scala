@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The correctness gate must fail LOUD: a broken query has to turn
@@ -35,5 +37,17 @@ class VerifySpec extends SparkSpec {
     val out = tmpDir("verify-clean")
     Verify.writeErrors(spark, out, Nil)
     assert(Files.readString(Paths.get(s"$out/verify_errors.json")) === "{}")
+  }
+
+  test("both JSON files carry quotes, backslashes and control characters intact") {
+    val out = tmpDir("verify-escape")
+    val key = "q1\"\\\t\r\n\u0001k"
+    val sql = "SELECT '\"', '\\', '\t', '\r', '\n', '\u0001'"
+    Verify.writeOracleSql(out, Seq(key -> sql))
+    Verify.writeErrors(spark, out, Seq(key -> sql))
+    def read(file: String) = new ObjectMapper().readValue(
+      Files.readString(Paths.get(s"$out/$file")), classOf[java.util.Map[_, _]])
+    assert(read("oracle_sql.json") == java.util.Map.of(key, sql))
+    assert(read("verify_errors.json") == java.util.Map.of(key, java.util.Map.of("err", sql)))
   }
 }
