@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.util.Pin._
+
 /** BPE tokenizer TRAINING (Sennrich et al. 2016) — the iterative
   * merge-learning loop, not just one pair-count pass (q82): each
   * round finds the most frequent adjacent token pair across the
@@ -44,7 +46,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * an explode→count over the vocabulary frame (map-side combined,
   * pair-vocabulary-sized partials), a 1-row TakeOrdered collect
   * (bounded driver state — the centroid precedent), and a narrow
-  * replace projection, localCheckpoint'ed so lineage stays flat. */
+  * replace projection, pinned so lineage stays flat. */
 object BpeTrain {
 
   /** Token-level left-to-right greedy fuse of pair (a, b) in a
@@ -78,7 +80,7 @@ object BpeTrain {
       .select(explode(TextStats.tokens(col(textCol))).as("__w"))
       .groupBy(col("__w")).agg(count(lit(1)).as("cnt"))
       .select(wrap(TextStats.chars(col("__w"))).as("sp"), col("cnt"))
-      .localCheckpoint()
+      .pin
 
     val merges = ArrayBuffer.empty[(Long, String, Long)]
     for (r <- 1 to nMerges) {
@@ -92,7 +94,7 @@ object BpeTrain {
       val pair = top.getString(0)
       val Array(a, b) = pair.split(" ", 2)
       merges += ((r.toLong, pair, top.getLong(1)))
-      // A merge is a PURE projection over the checkpointed word frame:
+      // A merge is a PURE projection over the pinned word frame:
       // chain it lazily — re-evaluating r narrow replaces per round is
       // cheaper than materializing the vocabulary every round (r15
       // paid one checkpoint job per merge; idle A/B r16: q174/q175/
@@ -100,7 +102,7 @@ object BpeTrain {
       // and the replace-chain CPU under the TakeOrdered — stays
       // bounded when nMerges is vocabulary-scale (10³–10⁵).
       vocab = vocab.withColumn("sp", fuse(col("sp"), a, b))
-      if (r % 8 == 0 && r < nMerges) vocab = vocab.localCheckpoint()
+      if (r % 8 == 0 && r < nMerges) vocab = vocab.pin
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin._
+
 /** Connected components over a pair graph — the step that turns
   * near-duplicate PAIRS (NearDup.lshCandidatePairs et al.) into dedup
   * GROUPS so a pipeline can keep one canonical document per group.
@@ -29,9 +31,9 @@ import org.apache.spark.sql.functions._
   * two-phase large-star/small-star formulation (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14) is the
   * same joins with a different grouping and the same O(log) bound.
-  * The edge list is cached across rounds; each round's labels are
-  * localCheckpoint'ed to truncate lineage (iterative plans otherwise
-  * grow a round's plan depth per iteration and re-execute history).
+  * The edge list is pinned once; each round's labels are pinned to
+  * truncate lineage (iterative plans otherwise grow a round's plan
+  * depth per iteration and re-execute history).
   */
 object Components {
 
@@ -95,36 +97,23 @@ object Components {
                             struct(b.as("node"), a.as("nbr")))).as("e"))
       .select(col("e.node").as("node"), col("e.nbr").as("nbr"))
       .repartition(col("nbr"))
-      .localCheckpoint()
+      .pin
 
     // Labels only ever DECREASE, so the exact label sum is a monotone
-    // convergence witness: an unchanged sum means no label moved.
-    // The sum rides the checkpoint materialization itself as an
-    // `observe()` metric (CollectMetrics folds into the same job that
-    // persists the round's labels), so each round runs exactly ONE
-    // action — not checkpoint + a separate aggregation job.
+    // convergence witness: an unchanged sum means no label moved. The
+    // sum rides each round's label pin (Pin.pinObserving), so a round
+    // runs exactly ONE action — not pin + a separate aggregation job.
     // DECIMAL(38,0) keeps the sum exact at any node count (a long sum
-    // would overflow under ANSI at ~10^10 snowflake-scale ids).
-    def checkpointWithSum(df: DataFrame)
-        : (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = df
-        .observe(obs, sum(col("label").cast("decimal(38,0)")).as("__ls"))
-        .localCheckpoint()
-      val s = obs.get.get("__ls")
-        .collect {
-          case d: java.math.BigDecimal => d
-          case d: scala.math.BigDecimal => d.bigDecimal
-        }
-        .getOrElse(java.math.BigDecimal.ZERO) // empty edge set
-      (out, s)
-    }
+    // would overflow under ANSI at ~10^10 snowflake-scale ids); an
+    // empty edge set sums to null.
+    val labelSum = sum(col("label").cast("decimal(38,0)")).as("__ls")
 
     // Round 0: label(x) = min(x, min neighbor).
-    var (labels, prevSum) = checkpointWithSum(
-      sym.groupBy(col("node"))
-        .agg(min(col("nbr")).as("__mn"))
-        .select(col("node"), least(col("node"), col("__mn")).as("label")))
+    var (labels, observed) = sym.groupBy(col("node"))
+      .agg(min(col("nbr")).as("__mn"))
+      .select(col("node"), least(col("node"), col("__mn")).as("label"))
+      .pinObserving(labelSum)
+    var prevSum = observed("__ls")
 
     var converged = false
     var round = 0
@@ -133,8 +122,8 @@ object Components {
       // the node's OWN label riding the same aggregation as a unioned
       // self-row: min(own ∪ neighbor labels) ≡ least(own, min nbrs),
       // one exchange instead of groupBy + join-back (r15 shape), and
-      // no `stepped` localCheckpoint — the r15 pin doubled checkpoint
-      // actions per round and regressed q180 in both driver runs; the
+      // no `stepped` pin — the r15 pin doubled the pin actions per
+      // round and regressed q180 in both driver runs; the
       // pointer-jump self-join's two references below share the
       // aggregation exchange via AQE reuse instead.
       val stepped = sym
@@ -149,15 +138,14 @@ object Components {
       // AQE exchange reuse shares one execution across both sides.
       val jump = stepped.select(col("node").as("__jn"),
                                 col("label").as("__jl"))
-      val (next, curSum) = checkpointWithSum(
-        stepped.join(jump, col("label") === col("__jn"), "left")
-          .select(col("node"),
-                  least(col("label"),
-                        coalesce(col("__jl"), col("label")))
-                    .as("label")))
+      val (next, m) = stepped.join(jump, col("label") === col("__jn"), "left")
+        .select(col("node"),
+                least(col("label"), coalesce(col("__jl"), col("label")))
+                  .as("label"))
+        .pinObserving(labelSum)
       labels = next
-      converged = curSum.compareTo(prevSum) == 0
-      prevSum = curSum
+      converged = m("__ls") == prevSum
+      prevSum = m("__ls")
       round += 1
     }
     (labels, round)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.util.{ByteCodecs, Containers}
 import graft.util.ByteCodecs.isPng
 import graft.util.Containers.{be16, be32, le16, le32}
+import graft.util.Exact.exactSum9
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, processed in partition-local batches.
@@ -978,7 +979,6 @@ object Multimodal {
   def perceptualHash64(df: org.apache.spark.sql.DataFrame, idCol: String,
                        featuresCol: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DecimalType
     val cells = df
       .select(col(idCol).as("image_id"),
         posexplode(col(featuresCol)).as(Seq("pos", "v")))
@@ -993,8 +993,8 @@ object Multimodal {
         round(lit(0.299) * col("r") + lit(0.587) * col("g") +
           lit(0.114) * col("b"), 9).as("luma"))
     val mn = cells.groupBy(col("image_id"))
-      .agg(round(sum(round(col("luma"), 9).cast(DecimalType(38, 9)))
-        .cast("double") / count(lit(1)).cast("double"), 9).as("mean"))
+      .agg(round(exactSum9(col("luma")) / count(lit(1)).cast("double"), 9)
+        .as("mean"))
     cells.join(mn, Seq("image_id"))
       .select(col("image_id"), col("cell"),
         when(col("luma") > col("mean"), lit("1")).otherwise(lit("0"))
@@ -1022,10 +1022,7 @@ object Multimodal {
                        featuresCol: String,
                        freqs: Seq[Int]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types.DecimalType
     require(freqs.nonEmpty && freqs.forall(_ >= 0), "need DFT bins ≥ 0")
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(round(c, 9).cast(DecimalType(38, 9))).cast("double")
     df.select(col(idCol).as("clip_id"),
         size(col(featuresCol)).as("n"),
         posexplode(col(featuresCol)).as(Seq("t", "s")))
@@ -1033,9 +1030,9 @@ object Multimodal {
         explode(array(freqs.map(lit): _*)).as("k"))
       .withColumn("arg", expr("2 * pi() * k * t / n"))
       .groupBy(col("clip_id"), col("n"), col("k"))
-      .agg(dsum(col("s").cast("double") * round(cos(col("arg")), 9))
+      .agg(exactSum9(col("s").cast("double") * round(cos(col("arg")), 9))
              .as("re"),
-           dsum(col("s").cast("double") * (-round(sin(col("arg")), 9)))
+           exactSum9(col("s").cast("double") * (-round(sin(col("arg")), 9)))
              .as("im"))
       .select(col("clip_id"), col("n"), col("k"),
         round(col("re"), 4).as("sp_re"), round(col("im"), 4).as("sp_im"),

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin._
+
 /** Deduplication operators for training-data pipelines.
   *
   * Exact: hash-groupBy (one shuffle on the content hash — at 100 TB the
@@ -144,7 +146,7 @@ object NearDup {
     // allocation-free sorted-merge Jaccard per PAIR (the hot loop —
     // candidates outnumber documents by orders) instead of a hash-set
     // build + intersect/union materialization per pair.
-    // localCheckpoint: `hs` feeds THREE consumers through NARROW
+    // pinned: `hs` feeds THREE consumers through NARROW
     // pipelines (the LSH banding and both verify join-backs), and
     // narrow subtrees re-evaluate per consumer (no exchange for
     // ReusedExchange to dedup — the q93/tfidfWeightsNorms lesson), so
@@ -161,7 +163,7 @@ object NearDup {
     val hs = df.select(col(idCol).as("id"),
       array_sort(array_distinct(
         hashedShingles(shingles(col(textCol), shingleSize)))).as("hs"))
-      .localCheckpoint()
+      .pin
     val cands = lshCandidatePairs(hs, "id", col("hs"), numBands, rowsPerBand, maxBucket)
     cands
       .join(hs.select(col("id").as("id_a"), col("hs").as("hs_a")), "id_a")
@@ -196,13 +198,13 @@ object NearDup {
                                threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // sorted once per doc for the native merge-Jaccard verify below.
-    // localCheckpoint: `toks` feeds FOUR consumers through narrow
+    // pinned: `toks` feeds FOUR consumers through narrow
     // pipelines (df-rank build, the ranked prefix frame, and both
     // verify join-backs) — see the nearDupPairs note.
     val toks = df.select(col(idCol).as("id"),
         array_sort(tokenSet(col(textCol))).as("toks"))
       .filter(size(col("toks")) > 0)
-      .localCheckpoint()
+      .pin
     val ranks = toks.select(explode(col("toks")).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
       .withColumn("rank", row_number().over(
@@ -252,7 +254,7 @@ object NearDup {
     // toks sorted ONCE per document: the affine-permutation minima are
     // order-invariant, and the verify below then uses the native
     // sorted-merge Jaccard per pair (see nearDupPairs).
-    // localCheckpoint: `base` feeds the signature pipeline AND both
+    // pinned: `base` feeds the signature pipeline AND both
     // verify join-backs through narrow pipelines — unpinned, the
     // tokenize + per-token md5 (the dominant CPU of this operator) ran
     // 3× per query (see the nearDupPairs note for the economics and
@@ -263,7 +265,7 @@ object NearDup {
       .select(col("id"), col("toks"),
         transform(col("toks"),
           t => conv(substring(md5(t), 1, 14), 16, 10).cast("long") % P).as("hs"))
-      .localCheckpoint()
+      .pin
     val nPerm = numBands * rowsPerBand
     // ONE fused native pass for all permutation minima (AffineMinHash
     // — same modular arithmetic the oracle recomputes, vs nPerm
@@ -382,7 +384,7 @@ object NearDup {
     * ([[hammingBandedBuckets]] — never all-pairs) + exact Hamming
     * verify at ≤ r on candidates only. The hash frame is consumed
     * three times (banding + both sides of the bits join-back), so it
-    * is localCheckpoint'ed once — the hash pipeline upstream
+    * is pinned once — the hash pipeline upstream
     * (decode → resize → luma) runs exactly once however many stages
     * read it. Returns (id_a, id_b, hamming, bits_a, bits_b),
     * id_a < id_b.
@@ -398,7 +400,7 @@ object NearDup {
                           r: Int, nBits: Int = 64,
                           maxBucket: Int = 100000): DataFrame = {
     val h = hashes.select(col(idCol).as("doc"), col(bitsCol).as("__bits"))
-      .localCheckpoint()
+      .pin
     val cands = pairsFromBanded(
       hammingBandedBuckets(h, "doc", col("__bits"), r, nBits), maxBucket)
     cands

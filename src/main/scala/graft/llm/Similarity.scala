@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin._
+
 /** Similarity search over an embedding column (array<float>).
   *
   * Baseline: brute-force cosine top-k — a crossJoin with the (small,
@@ -481,7 +483,7 @@ object Similarity {
     *
     * Shuffle inventory: the Lloyd fit as [[kmeansFit]] (narrow
     * assignment, k·dim aggregate per round); final assignment is the
-    * same narrow plan-literal argmax, localCheckpoint'ed once for its
+    * same narrow plan-literal argmax, pinned once for its
     * three consumers (both pair-join sides + the member summary), so
     * the corpus is scanned and argmax'd exactly once; the pair stage is ONE
     * hash-partition of the (id, cell, vec) projection by cell on each
@@ -500,7 +502,7 @@ object Similarity {
     val (cents, _, _) =
       lloydLoop(corpus, idCol, vecCol, nCentroids, maxIter, tol = 0.0)
     val centSeq = cents.toIndexedSeq.sortBy(_._1)
-    // Materialized ONCE (the q60/q70 localCheckpoint pattern): the
+    // Materialized ONCE (the q60/q70 pin pattern): the
     // assignment feeds three consumers (both pair-join sides and the
     // member summary) — without this the corpus would be rescanned
     // and the k-cosine argmax recomputed per branch.
@@ -510,7 +512,7 @@ object Similarity {
       .withColumn("cell",
         element_at(nearestCellsOf(spark, centSeq, col("v"), 1), 1)
           .getField("cell"))
-      .localCheckpoint()
+      .pin
     val dropped = assigned
       .select(col("cell"), col("id").as("id_a"), col("v").as("va"))
       .join(assigned.select(col("cell"), col("id").as("id_b"),

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin._
+
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, fingerprinting.
   * All pure Catalyst expressions (split / higher-order functions /
@@ -228,7 +230,7 @@ object TextStats {
   private def tfidfWeightsNorms(df: org.apache.spark.sql.DataFrame,
                                 idCol: String, textCol: String, dfCap: Long)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    // localCheckpoint: tf is the single tokenize pass of the operator —
+    // pinned: tf is the single tokenize pass of the operator —
     // doc_freq now derives FROM it (tf has exactly one row per
     // (doc, token) pair, so the per-token row count IS document
     // frequency), where the r15 shape re-tokenized the corpus in a
@@ -238,12 +240,12 @@ object TextStats {
     val tf = df.repartition(col(idCol))
       .select(col(idCol).as("id"), explode(tokens(col(textCol))).as("token"))
       .groupBy(col("id"), col("token")).agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .pin
     val docFreq = tf
       .groupBy(col("token")).agg(count(lit(1)).as("doc_freq"))
       .filter(col("doc_freq") <= dfCap)
     val nDocs = df.select(count(lit(1)).as("n_docs"))
-    // localCheckpoint: the weight frame IS the inverted index — it
+    // pinned: the weight frame IS the inverted index — it
     // feeds both sides of the pair self-join AND the norm fold, and
     // each consumer would otherwise re-run tokenize + tf + the idf
     // joins (the q93 narrow-pipeline lesson: exchanges dedup via
@@ -255,7 +257,7 @@ object TextStats {
       .select(col("id"), col("token"),
         round(col("tf") * log(col("n_docs").cast("double") / col("doc_freq")),
               6).as("w"))
-      .localCheckpoint()
+      .pin
     val norms = weights.groupBy(col("id"))
       .agg(sqrt(sum(quant9(col("w") * col("w"))).cast("double") / lit(1e9))
              .as("nrm"))

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin._
+
 /** Unigram-LM subword vocabulary selection (Kudo 2018, the
   * SentencePiece trainer) — the LIKELIHOOD-based counterpart to
   * [[WordPiece.trainVocab]]'s frequency stand-in: candidate units are
@@ -173,7 +175,7 @@ object UnigramLm {
   /** Full selection pipeline over a text column, `emRounds` ≥ 1
     * Viterbi-EM rounds (each round re-fits costs from the previous
     * round's usage counts with the single-char smoothing floor, then
-    * re-segments; every iterate rides the localCheckpointed
+    * re-segments; every iterate rides the pinned
     * vocabulary-bounded frame, so round count never touches the
     * corpus). Output one row per candidate unit that survives round 1
     * (or is single-char): (unit, is_single, seed_c, n_em1,
@@ -190,16 +192,16 @@ object UnigramLm {
     // its own aggregation exchange; the extra exchange only adds latency.
     val words = WordPiece.wordTypes(docs, textCol)
       .filter(length(col("w")) <= MaxWordLen)
-      .localCheckpoint()
+      .pin
     // NOTE r16: pre-partitioning this pin by `w` (so each EM round's
     // viterbiCounts groupBy(w) reuses the partitioning — the Components
     // precedent) was A/B'd at 0.83-0.96x on q240/q243/q248 and
     // REVERTED: the up-front exchange of the full candidate frame costs
     // more than the per-round aggregation exchanges it elides at this
     // round count (2-3), mirroring the q171 labelPropagation result.
-    val cands = candidates(words).localCheckpoint()
+    val cands = candidates(words).pin
     val seed = cands.groupBy(col("tok")).agg(sum(col("f")).as("c"))
-      .localCheckpoint()
+      .pin
     val isSingle = (length(col("tok")) === 1) ||
       (col("tok").startsWith("##") && length(col("tok")) === 3)
 
@@ -211,11 +213,11 @@ object UnigramLm {
           when(isSingle, greatest(coalesce(col("__n"), lit(0L)), lit(1L)))
             .otherwise(coalesce(col("__n"), lit(0L))).as("c"))
         .filter(col("c") > 0)
-    val n1 = viterbiCounts(words, cands, microCosts(seed)).localCheckpoint()
+    val n1 = viterbiCounts(words, cands, microCosts(seed)).pin
     var nLast = n1
     for (_ <- 2 to emRounds)
       nLast = viterbiCounts(words, cands, microCosts(refit(nLast)))
-        .localCheckpoint()
+        .pin
 
     val out = seed
       .join(n1.withColumnRenamed("n", "n1"), Seq("tok"), "left")

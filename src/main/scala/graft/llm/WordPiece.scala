@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin._
+
 /** WordPiece tokenizer — the longest-match-first segmenter of the
   * BERT lineage (Wu et al. 2016), the greedy-APPLY sibling of the
   * merge-LEARNING BPE pair (q174/q175): a vocabulary of word-initial
@@ -16,7 +18,7 @@ import org.apache.spark.sql.functions._
   * feed its kept units into this object's greedy apply.
   *
   * Scale shape: the corpus folds ONCE to the word-TYPE frame
-  * (localCheckpointed — substring counting, the single-char alphabet
+  * (pinned — substring counting, the single-char alphabet
   * and the greedy apply all ride the vocabulary-bounded frame, never
   * the corpus). The learned vocabulary is a driver-side literal via a
   * loud [[graft.util.Bounded]] collect (topK + alphabet rows), and
@@ -75,7 +77,7 @@ object WordPiece {
     * pieces space-joined in order. */
   def segmentCorpus(docs: DataFrame, textCol: String,
                     topK: Int): DataFrame = {
-    val words = wordTypes(docs, textCol).localCheckpoint()
+    val words = wordTypes(docs, textCol).pin
     segmentWords(docs.sparkSession, words, trainVocab(words, topK).toSeq)
   }
 

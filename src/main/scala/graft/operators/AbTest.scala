@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.exactSum9
+import graft.util.Pin._
+
 /** Experiment analysis: two-sample comparison with CUPED variance
   * reduction (Deng et al. 2013) — the controlled-experiment readout a
   * data platform serves after every launch. CUPED subtracts the part
@@ -212,8 +215,6 @@ object AbTest {
       .agg(count(lit(1)).as("nj"),
         round(sum(col("xq")).cast("double") / 1e6 /
           count(lit(1)).cast("double"), 9).as("mj"))
-    def dsum(c: Column) =
-      sum(round(c, 9).cast(DecimalType(38, 9))).cast("double")
     val z = col("xq").cast("double") / 1e6 - col("mj")
     // Pin the k-row per-group frame: it feeds the totals broadcast AND
     // the closing aggregation — unpinned, each consumer replayed the
@@ -221,19 +222,19 @@ object AbTest {
     // three. k rows — free to materialize.
     val grp = rows.join(broadcast(means), Seq("g"))
       .groupBy(col("g"), col("nj"))
-      .agg(dsum(abs(z)).as("szj"), dsum(abs(z) * abs(z)).as("szzj"))
+      .agg(exactSum9(abs(z)).as("szj"), exactSum9(abs(z) * abs(z)).as("szzj"))
       .withColumn("zbarj",
         round(col("szj") / col("nj").cast("double"), 9))
-      .localCheckpoint()
+      .pin
     val tot = grp.agg(sum(col("nj")).as("nn"), count(lit(1)).as("k"),
-      dsum(col("szj")).as("sz"))
+      exactSum9(col("szj")).as("sz"))
     grp.crossJoin(broadcast(tot))
       .withColumn("zbar", round(col("sz") / col("nn").cast("double"), 9))
       .agg(first(col("nn")).as("n"), first(col("k")).as("k"),
-        dsum(col("nj").cast("double") *
+        exactSum9(col("nj").cast("double") *
           ((col("zbarj") - col("zbar")) * (col("zbarj") - col("zbar"))))
           .as("__between"),
-        dsum(col("szzj") - col("nj").cast("double") *
+        exactSum9(col("szzj") - col("nj").cast("double") *
           (col("zbarj") * col("zbarj"))).as("__within"),
         first((col("nn") - col("k")).cast("double")).as("__dfw"),
         first((col("k") - lit(1L)).cast("double")).as("__dfb"))
@@ -274,7 +275,7 @@ object AbTest {
       // broadcasts, the totals broadcast, and the closing aggregation)
       // would otherwise each replay the corpus fold. Bounded by
       // |cat_a|×|cat_b| — free to materialize.
-      .localCheckpoint()
+      .pin
     val rowm = cells.groupBy(col("__a")).agg(sum(col("__nij")).as("__ri"))
     val colm = cells.groupBy(col("__b")).agg(sum(col("__nij")).as("__cj"))
     val tot = cells.agg(sum(col("__nij")).as("__n"),
@@ -322,8 +323,6 @@ object AbTest {
       .select(col(groupCol).cast("string").as("g"),
         round(col(valueCol).cast("double") * 1e6, 0)
           .cast(DecimalType(19, 0)).as("xq"))
-    def dsum(c: Column) =
-      sum(round(c, 9).cast(DecimalType(38, 9))).cast("double")
     val grp = rows.groupBy(col("g"))
       .agg(count(lit(1)).as("nj"),
         sum(col("xq")).cast(DecimalType(38, 0)).as("sj"),
@@ -336,10 +335,10 @@ object AbTest {
       .withColumn("m", round(col("s").cast("double") / 1e6 /
         col("nn").cast("double"), 9))
       .agg(first(col("nn")).as("n"), first(col("k")).as("k"),
-        dsum(col("nj").cast("double") *
+        exactSum9(col("nj").cast("double") *
           ((col("mj") - col("m")) * (col("mj") - col("m"))))
           .as("__ssb"),
-        dsum(col("sjj").cast("double") / 1e12 -
+        exactSum9(col("sjj").cast("double") / 1e12 -
           col("nj").cast("double") * (col("mj") * col("mj")))
           .as("__ssw"),
         first((col("nn") - col("k")).cast("double")).as("__dfw"),

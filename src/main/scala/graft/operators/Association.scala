@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin._
+
 /** Market-basket association mining — pairwise support / confidence /
   * lift over (basket, item) presence: the co-occurrence layer behind
   * "users who touched X also touched Y", feature co-activation
@@ -29,7 +31,7 @@ object Association {
       .select(col(basketCol).as("__bk"), col(itemCol).as("__it"))
       .filter(col("__bk").isNotNull && col("__it").isNotNull)
       .distinct()
-      .localCheckpoint() // presence frame: built once, read 3×
+      .pin // presence frame: built once, read 3×
     val nBaskets = items.agg(countDistinct(col("__bk")).as("__nb"))
     val marg = items.groupBy(col("__it")).agg(count(lit(1)).as("__n"))
     val pairs = items.select(col("__bk"), col("__it").as("item_a"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.Components
+import graft.util.Pin._
 
 /** Exact 2-D DBSCAN with grid bucketing — density clustering for the
   * noise-vs-structure split a curation pipeline wants over projected
@@ -29,7 +30,7 @@ import graft.llm.Components
   * Lineage discipline: the candidate-pair pipeline (explode + cell
   * join + distance filter) feeds FOUR consumers (neighbor counts,
   * core-core edges, border labeling, noise anti-join). `pairs`,
-  * `roles` and the label frames are localCheckpoint'ed ONCE before
+  * `roles` and the label frames are pinned ONCE before
   * the fan-out — the [[Components]] discipline — so the physical plan
   * of the result contains at most one Generate and the explode+join
   * runs exactly once, not once per consumer (`PlanShapeSpec` asserts
@@ -100,15 +101,15 @@ object Dbscan {
   def gridDbscan(points: DataFrame, idCol: String, xCol: String,
                  yCol: String, eps: Double, minPts: Int,
                  maxCellPoints: Int = Int.MaxValue): DataFrame = {
-    val pts = gridded(points, idCol, xCol, yCol, eps).localCheckpoint()
+    val pts = gridded(points, idCol, xCol, yCol, eps).pin
     // Build ONCE, consume four times: checkpoint before the fan-out.
-    val pairs = candidatePairs(pts, eps, maxCellPoints).localCheckpoint()
+    val pairs = candidatePairs(pts, eps, maxCellPoints).pin
     val nbrCount = pairs.groupBy(col("ida")).agg(count(lit(1)).as("__nb"))
     val roles = pts.select(col("id"))
       .join(nbrCount.select(col("ida").as("id"), col("__nb")), Seq("id"), "left")
       .select(col("id"),
               (coalesce(col("__nb"), lit(0L)) + 1 >= minPts).as("isCore"))
-      .localCheckpoint()
+      .pin
     val coreIds = roles.filter(col("isCore")).select(col("id"))
     val coreEdges = pairs
       .join(coreIds.select(col("id").as("ida")), Seq("ida"), "left_semi")
@@ -118,7 +119,7 @@ object Dbscan {
       .join(comp.select(col("node").as("id"), col("label")), Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("cluster"),
               lit("core").as("role"))
-      .localCheckpoint()
+      .pin
     // (the r15 shape also semi-joined pairs against core idb first —
     // redundant: the inner join on coreLabeled.idb is that restriction)
     val borderLabeled = pairs

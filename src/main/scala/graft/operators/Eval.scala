@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.exactSum9
+import graft.util.Pin._
+
 /** Model-evaluation operators — the scoring layer a training pipeline
   * runs on holdout predictions. Both are formulated over DISTINCT
   * SCORE VALUES rather than rows, so the expensive ordered pass is
@@ -310,9 +313,6 @@ object Eval {
                          nBins: Int = 10): DataFrame = {
     require(nBins >= 2 && nBins <= 1000,
       s"Eval.brierDecomposition: nBins in [2, 1000], got $nBins")
-    import org.apache.spark.sql.types.DecimalType
-    def dsum(c: Column) =
-      sum(round(c, 9).cast(DecimalType(38, 9))).cast("double")
     val p = round(probCol.cast("double"), 9)
     val y = when(labelCol, 1L).otherwise(0L)
     val rows = df.filter(probCol.isNotNull)
@@ -320,11 +320,11 @@ object Eval {
         least(floor(p * nBins).cast("int"), lit(nBins - 1)).as("__b"))
     val bins = rows.groupBy(col("__b"))
       .agg(count(lit(1)).as("__nk"), sum(col("__y")).as("__syk"),
-        dsum(col("__p")).as("__spk"),
-        dsum((col("__p") - col("__y").cast("double")) *
+        exactSum9(col("__p")).as("__spk"),
+        exactSum9((col("__p") - col("__y").cast("double")) *
              (col("__p") - col("__y").cast("double"))).as("__sbk"))
     val glob = bins.agg(sum(col("__nk")).as("__n"),
-      sum(col("__syk")).as("__sy"), dsum(col("__sbk")).as("__bs"))
+      sum(col("__syk")).as("__sy"), exactSum9(col("__sbk")).as("__bs"))
     bins.crossJoin(broadcast(glob))
       .withColumn("__pbar", round(col("__spk") /
         col("__nk").cast("double"), 9))
@@ -334,11 +334,11 @@ object Eval {
         col("__n").cast("double"), 9))
       .agg(first(col("__n")).as("n"),
         first(round(col("__bs") / col("__n").cast("double"), 6)).as("brier"),
-        round(dsum(col("__nk").cast("double") *
+        round(exactSum9(col("__nk").cast("double") *
           ((col("__pbar") - col("__ybark")) *
            (col("__pbar") - col("__ybark")))) /
           first(col("__n")).cast("double"), 6).as("reliability"),
-        round(dsum(col("__nk").cast("double") *
+        round(exactSum9(col("__nk").cast("double") *
           ((col("__ybark") - col("__ybar")) *
            (col("__ybark") - col("__ybar")))) /
           first(col("__n")).cast("double"), 6).as("resolution"),
@@ -367,8 +367,6 @@ object Eval {
     * (n_pos, n_neg, auc, se, ci_lo, ci_hi), rounded to 6. */
   def aucDeLong(df: DataFrame, scoreCol: String, labelCol: Column): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    def dsum(c: Column) =
-      sum(round(c, 9).cast(DecimalType(38, 9))).cast("double")
     val g = df
       .select(col(scoreCol).as("__s"),
               when(labelCol, 1L).otherwise(0L).as("__y"))
@@ -386,7 +384,7 @@ object Eval {
     val c2 = OrderedStats.cumsumExclusiveAll(g, sortCol = "__s",
         tieCols = Nil,
         valueCols = Seq("neg_s" -> "neg_below", "pos_s" -> "pos_below"))
-      .localCheckpoint()
+      .pin
     val tot = c2.agg(
         sum(col("pos_s")).as("__p"), sum(col("neg_s")).as("__n"),
         sum(col("neg_below").cast(DecimalType(19, 0)) *
@@ -410,9 +408,9 @@ object Eval {
     c2.crossJoin(broadcast(tot))
       .agg(first(col("__p")).as("n_pos"), first(col("__n")).as("n_neg"),
         first(col("__auc")).as("__auc"),
-        dsum(col("pos_s").cast("double") *
+        exactSum9(col("pos_s").cast("double") *
           ((v10 - col("__auc")) * (v10 - col("__auc")))).as("__s10n"),
-        dsum(col("neg_s").cast("double") *
+        exactSum9(col("neg_s").cast("double") *
           ((v01 - col("__auc")) * (v01 - col("__auc")))).as("__s01n"))
       .select(col("n_pos"), col("n_neg"), col("__auc"),
         when(col("n_pos") > 1 && col("n_neg") > 1,

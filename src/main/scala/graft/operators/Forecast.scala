@@ -5,6 +5,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.util.Exact.exactSum9
+import graft.util.Pin._
+
 /** Holt's linear-trend exponential smoothing per key — the sequential
   * forecasting fold (level + trend state, the metric-forecast sibling
   * of [[ChangePoint]]'s drift fold):
@@ -84,7 +87,7 @@ object Forecast {
       s"Forecast.dailyAcf: maxLag must be in [1, 366], got $maxLag")
     val days = df.groupBy(col(dateCol).cast("date").as("d"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // bounded frame, consumed per lag
+      .pin // bounded frame, consumed per lag
     val tot = days.agg(sum(col("c")).as("s"),
                        count(lit(1)).cast("long").as("nd"))
     // (18,0) factors keep e·e inside width 37 — portable to DuckDB,
@@ -124,18 +127,15 @@ object Forecast {
     * engines).
     *
     * Scale shape: the corpus folds ONCE to the calendar-bounded day
-    * frame (localCheckpointed); the centered window is a ±3-day
+    * frame (pinned); the centered window is a ±3-day
     * delta-explode equi-join on that frame — NO time-ordered window,
     * so nothing ever sorts in one partition; the seasonal index is a
     * 7-row broadcast. Returns one row per day:
     * (d, cnt, wd, trend, seasonal, residual), rounded to 6. */
   def seasonalDecompose(df: DataFrame, dateCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    def dsum(c: Column) =
-      sum(round(c, 9).cast(DecimalType(38, 9))).cast("double")
     val days = df.groupBy(col(dateCol).cast("date").as("d"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint() // calendar-bounded; consumed by 3 stages
+      .pin // calendar-bounded; consumed by 3 stages
     val deltas = df.sparkSession.range(-3, 4)
       .select(col("id").cast("int").as("dl"))
     val trend = days.crossJoin(broadcast(deltas))
@@ -154,7 +154,7 @@ object Forecast {
         col("__trend"))
     val seasonal = detrended.filter(col("__detr").isNotNull)
       .groupBy(col("wd"))
-      .agg(round(dsum(col("__detr")) / count(lit(1)).cast("double"), 9)
+      .agg(round(exactSum9(col("__detr")) / count(lit(1)).cast("double"), 9)
         .as("__seas"))
     detrended.join(broadcast(seasonal), Seq("wd"))
       .select(col("d"), col("c").as("cnt"), col("wd").cast("long").as("wd"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin._
+
 /** Graph centrality over an edge list — the link-graph quality signal
   * a web-crawl curation pipeline feeds into document scoring (rank of
   * the page a document came from), computed here directly over the
@@ -24,9 +26,9 @@ import org.apache.spark.sql.functions._
   * edge list (both keyed on node — the exchange carries the EDGE
   * list, never a corpus) + one destination-keyed aggregation of the
   * quantized contributions. Degrees are computed once. The edge list
-  * should be localCheckpoint'ed by the caller if it is itself an
-  * expensive pipeline (the q70 pattern); iterations deepen the plan
-  * linearly, which a handful of fixed rounds keeps cheap.
+  * should be pinned by the caller if it is itself an expensive
+  * pipeline (the q70 pattern); iterations deepen the plan linearly,
+  * which a handful of fixed rounds keeps cheap.
   */
 object Graph {
 
@@ -44,24 +46,16 @@ object Graph {
     // edge pipeline (corpus scan + distinct) once per iteration per
     // consumer. Both frames are the operator's own bounded units
     // (edges / nodes), the same discipline labelPropagation/bfsLayers
-    // already apply. CLUSTER NOTE: these pins are executor-local with
-    // NO lineage — on a multi-node deployment an executor loss kills
-    // the query instead of recomputing; swap for
-    // persist(MEMORY_AND_DISK) (keeps lineage) or a reliable
-    // checkpoint there. Measured r16 (idle, sf0.1, local[32]): the
-    // persist form costs q105 0.94×/q187 0.71×/q204 0.73× —
-    // InMemoryRelation's columnar build + per-round cache-substitution
-    // planning — so the single-node default stays localCheckpoint.
-    // (No pre-partitioned pin here, unlike Components: the per-round
+    // already apply. (No pre-partitioned pin here, unlike Components: the per-round
     // rank join builds the node frame as a broadcast, so the edge side
     // never re-shuffles anyway — measured r16, a repartition-by-src
     // pin cost q105 0.91x for zero saved exchanges.)
     val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .localCheckpoint()
+      .pin
     val deg = sym.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("degree"))
-      .localCheckpoint()
+      .pin
     val n = deg.agg(count(lit(1)).as("__n"))
 
     // pr0 = 1/N for every node
@@ -87,7 +81,7 @@ object Graph {
                 (lit((1.0 - damping)) / col("__n").cast("double") +
                   lit(damping) * (col("__inflow").cast("double") / quantum))
                   .as("pr"))
-        .localCheckpoint()
+        .pin
     }
     ranks.select(col("node"), col("degree"), round(col("pr"), 6).as("pagerank"))
   }
@@ -135,7 +129,7 @@ object Graph {
     * row-identical to [[triangles]] on the same edge set — the
     * canonical form doubles as this operator's correctness oracle. */
   def trianglesOriented(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val oriented = orientByDegree(edges, srcCol, dstCol).localCheckpoint()
+    val oriented = orientByDegree(edges, srcCol, dstCol).pin
     val o1 = oriented.select(col("lo"), col("hi").as("y"), col("dhi").as("dy"))
     val o2 = oriented.select(col("lo"), col("hi").as("z"), col("dhi").as("dz"))
     val wedges = o1.join(o2,
@@ -193,7 +187,7 @@ object Graph {
     * Scale shape: per round, ONE join of the label frame against the
     * edge list + one (node, label)-keyed count + one node-keyed max —
     * exchanges carry the EDGE list (the [[pageRank]] contract);
-    * labels localCheckpoint per round so lineage stays flat. */
+    * labels are pinned per round so lineage stays flat. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int): DataFrame = {
     // Pre-partitioning the pinned edge list by the aggregation key (the
@@ -206,10 +200,10 @@ object Graph {
     val sym = edges
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
       .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .localCheckpoint()
+      .pin
     val pack = 1L << 21
     var labels = sym.select(col("u").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
+      .withColumn("label", col("node")).pin
     for (_ <- 1 to rounds) {
       labels = sym
         .join(labels.select(col("node").as("v"), col("label")), Seq("v"))
@@ -220,7 +214,7 @@ object Graph {
                .as("__k"))
         .select(col("u").as("node"),
                 (lit(pack - 1) - col("__k") % pack).as("label"))
-        .localCheckpoint()
+        .pin
     }
     labels.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_members"))
@@ -241,12 +235,11 @@ object Graph {
     require(iterations >= 1, "needs at least one iteration")
     // Same loop-frame pinning as [[pageRank]]: sym is joined every
     // iteration, tele both seeds init and closes every round — both
-    // are the operator's bounded units (edges / nodes). Cluster
-    // fault-tolerance and pre-partition trade-offs: see the pageRank
-    // notes.
+    // are the operator's bounded units (edges / nodes). Pre-partition
+    // trade-off: see the pageRank note.
     val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .localCheckpoint()
+      .pin
     val deg = sym.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("degree"))
     val seedSet = seeds.select(col(seedCol).as("node")).distinct()
@@ -262,7 +255,7 @@ object Graph {
               when(col("__isSeed"),
                    lit(1.0) / col("__ns").cast("double"))
                 .otherwise(lit(0.0)).as("tele"))
-      .localCheckpoint()
+      .pin
     val init = tele.withColumn("pr", col("tele"))
     val quantum = 1e15
     val ranks = (1 to iterations).foldLeft(init) { case (prev, _) =>
@@ -279,7 +272,7 @@ object Graph {
                   lit(damping) *
                   (coalesce(col("__inflow"), lit(0L).cast("decimal(38,0)"))
                      .cast("double") / quantum)).as("pr"))
-        .localCheckpoint() // flatten lineage per round (pageRank note)
+        .pin // flatten lineage per round (pageRank note)
     }
     ranks.select(col("node"), col("degree"), round(col("pr"), 6).as("ppr"))
   }
@@ -292,8 +285,8 @@ object Graph {
     * Scale shape: per round, ONE join of the frontier against the
     * edge list + an anti-join against the visited set — exchanges
     * carry the EDGE list; the frontier shrinks as the graph
-    * saturates; visited/frontier are localCheckpoint'ed so lineage
-    * stays flat. Round count = graph eccentricity from the seeds,
+    * saturates; visited/frontier are pinned so lineage stays flat, and
+    * each pin counts its own rows (no separate count job). Round count = graph eccentricity from the seeds,
     * `maxDepth` the guard. Deterministic: a node's dist is its FIRST
     * reach round — simultaneous expansion makes that partitioning-
     * independent, so a fixed-depth SQL replay lands on the identical
@@ -304,24 +297,25 @@ object Graph {
     val sym = edges
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
       .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .localCheckpoint()
-    var visited = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
+      .pin
+    val rows = count(lit(1)).as("n")
+    var (visited, seeded) = seeds.select(col(seedCol).as("node")).distinct()
+      .withColumn("dist", lit(0L)).pinObserving(rows)
     var frontier = visited.select(col("node"))
     var depth = 0L
-    var frontierSize = frontier.count()
+    var frontierSize = seeded("n").asInstanceOf[Long]
     while (frontierSize > 0 && depth < maxDepth) {
       depth += 1
-      val next = sym
+      val (next, m) = sym
         .join(frontier.select(col("node").as("u")), Seq("u"), "left_semi")
         .select(col("v").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .localCheckpoint()
-      frontierSize = next.count()
+        .pinObserving(rows)
+      frontierSize = m("n").asInstanceOf[Long]
       if (frontierSize > 0) {
         visited = visited
           .unionByName(next.withColumn("dist", lit(depth)))
-          .localCheckpoint()
+          .pin
         frontier = next
       }
     }
@@ -337,8 +331,8 @@ object Graph {
     * Scale shape: each round is one double semi-join of the edge list
     * against the survivor set plus one node-keyed count — exchanges
     * carry the EDGE list, never more; the survivor frame shrinks
-    * monotonically and is localCheckpoint'ed per round so the plan
-    * does not deepen with rounds. Round count is bounded by the
+    * monotonically and is pinned per round (the pin counting its own
+    * rows) so the plan does not deepen with rounds. Round count is bounded by the
     * graph's degeneracy ordering (tens, not thousands, on real
     * graphs); `maxRounds` is a runaway guard, not a tuning knob.
     * Deterministic: simultaneous (not sequential) removal makes the
@@ -350,23 +344,25 @@ object Graph {
     val sym = edges
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
       .unionByName(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .localCheckpoint()
-    var alive = sym.select(col("u").as("node")).distinct().localCheckpoint()
-    var n = alive.count()
+      .pin
+    val rows = count(lit(1)).as("n")
+    var (alive, all) = sym.select(col("u").as("node")).distinct()
+      .pinObserving(rows)
+    var n = all("n").asInstanceOf[Long]
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val next = sym
+      val (next, m) = sym
         .join(alive.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(alive.select(col("node").as("v")), Seq("v"), "left_semi")
         .groupBy(col("u")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k)
         .select(col("u").as("node"))
-        .localCheckpoint()
-      val m = next.count()
-      converged = m == n
+        .pinObserving(rows)
+      val survivors = m("n").asInstanceOf[Long]
+      converged = survivors == n
       alive = next
-      n = m
+      n = survivors
       rounds += 1
     }
     sym
@@ -387,7 +383,7 @@ object Graph {
     * edge-bounded exchanges; contributions quantize to 1e-15 decimals
     * (order-independent sums), normalized scores to 9 decimals, so a
     * SQL unrolled replay lands on identical values; score frames are
-    * localCheckpoint'ed per half-step. Nodes with no in-edges hold
+    * pinned per half-step. Nodes with no in-edges hold
     * authority 0, no out-edges hub 0. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iterations: Int): DataFrame = {
@@ -397,24 +393,23 @@ object Graph {
     // Pin the edge list: it is joined twice per iteration, and the
     // caller's upstream (a corpus scan + distinct) would otherwise
     // replay per half-step. Edge frame = the operator's bounded unit.
-    // Cluster fault-tolerance trade-off: see the pageRank note.
     val e = edges.select(col(srcCol).cast("long").as("src"),
                          col(dstCol).cast("long").as("dst"))
-      .localCheckpoint()
+      .pin
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
+      .pin
     def q15(c: Column) = round(c * lit(1e15), 0).cast(DecimalType(38, 0))
     def normalized(rawIn: DataFrame, vCol: String): DataFrame = {
       // raw is consumed twice (max aggregate + the join back); pin the
       // ≤|nodes|-row half-step frame so the edge join runs once.
-      val raw = rawIn.localCheckpoint()
+      val raw = rawIn.pin
       val mx = raw.agg(max(col(vCol)).as("__mx"))
       nodes.join(raw, Seq("node"), "left").crossJoin(broadcast(mx))
         .select(col("node"),
           round(coalesce(col(vCol).cast("double"), lit(0.0)) /
             col("__mx").cast("double"), 9).as("score"))
-        .localCheckpoint()
+        .pin
     }
     var hub = nodes.select(col("node"), lit(1.0).as("score"))
     var auth = nodes.select(col("node"), lit(0.0).as("score"))

@@ -83,7 +83,7 @@ object OrderedStats {
     // broadcast, bucket totals, final join). Those subtrees stay
     // byte-identical, so AQE exchange reuse already shares the
     // caller's aggregation exchange across them — measured r15: a
-    // localCheckpoint here ADDED a full materialization of the
+    // a pin here ADDED a full materialization of the
     // distinct-value frame without removing any work (q193 2.5 s →
     // 3.4 s) and was reverted.
     val d0 = df
@@ -113,7 +113,7 @@ object OrderedStats {
     // Phase 1/2: per-bucket totals → exclusive offsets, windows-free.
     // (totals is self-joined below, but both sides are byte-identical
     // subtrees: AQE exchange reuse shares the aggregation; a
-    // localCheckpoint here splits executions and forces the input
+    // a pin here splits executions and forces the input
     // aggregation to run twice — measured r15, reverted.)
     val vIdx = valueCols.zipWithIndex
     val totalAggs = vIdx.map { case ((v, _), i) => sum(col(v)).as(s"__bv$i") }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.util.Pin._
+
 /** Rank-based (distribution-free) statistics at corpus scale: the
   * robust cousins of Pearson/t-test/parametric drift checks a
   * curation pipeline reaches for when values are heavy-tailed
@@ -138,12 +140,13 @@ object RankStats {
       .select(round(col(xCol).cast("double"), 6).as("x"),
               round(col(yCol).cast("double"), 6).as("y"))
       .filter(col("x").isNotNull && col("y").isNotNull)
-    val cells = vals.groupBy(col("x"), col("y"))
+    // built once, read 4× (pairs ×2 + marginals); the pin's own job
+    // counts the cells, so the loud bound fires BEFORE the quadratic
+    // cell-pair join can materialize
+    val (cells, m) = vals.groupBy(col("x"), col("y"))
       .agg(count(lit(1)).as("nij"))
-      .localCheckpoint() // built once, read 4× (pairs ×2 + marginals)
-    // the checkpoint makes this count free — the loud bound fires
-    // BEFORE the quadratic cell-pair join can materialize
-    val nc = cells.count()
+      .pinObserving(count(lit(1)).as("n_cells"))
+    val nc = m("n_cells").asInstanceOf[Long]
     require(nc <= maxCells,
       s"RankStats.kendallTauB: $nc cells exceed maxCells=$maxCells — " +
         "bin the continuous column(s) upstream")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType,
   StructField, StructType}
 
 import graft.util.Exact.{round6, round9}
+import graft.util.Pin._
 
 /** Regression fits as AGGREGATION, not iteration over rows: the model
   * the feature-engineering layer (q50/q124/q161) feeds exists to be
@@ -217,7 +218,7 @@ object Regression {
       sum(col("x1") * col("y")).as("c1y"),
       sum(col("x2") * col("y")).as("c2y"),
       sum(col("y") * col("y")).as("cyy"))
-      .localCheckpoint()
+      .pin
     val g = perFold.agg(
       sum(col("cn")).as("gn"), sum(col("c1")).as("g1"),
       sum(col("c2")).as("g2"), sum(col("cy")).as("gy"),

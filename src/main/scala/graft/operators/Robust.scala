@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin._
+
 /** Robust per-group outlier scoring via MAD (median absolute
   * deviation) — the heavy-tail-safe alternative to mean/stddev
   * z-scores (one extreme value drags a mean and inflates a stddev;
@@ -67,7 +69,7 @@ object Robust {
       // maxPoints-bounded per key; BOTH self-join sides consume it, and
       // while the key exchange is reused, the window sort + rank above
       // it would re-run per side (the narrow-pipeline lesson)
-      .localCheckpoint()
+      .pin
     val a = seq0.toDF(seq0.columns.map(c => if (c.startsWith("__")) c + "a" else c): _*)
     val b = seq0.toDF(seq0.columns.map(c => if (c.startsWith("__")) c + "b" else c): _*)
     val slopes = a.join(b, keys)

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Exact.exactSum9
+import graft.util.Pin._
+
 /** Leave-one-out target encoding with additive smoothing — the
   * standard high-cardinality categorical feature for tabular models.
   * Each row's encoding is the mean of the TARGET over the OTHER rows
@@ -87,22 +90,19 @@ object TargetEncode {
     * charEntropy portability contract. Returns 1 row:
     * (n, h_a, h_b, mi, nmi). */
   def mutualInfo(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val cells = df
       .select(col(aCol).cast("string").as("a"),
               col(bCol).cast("string").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull)
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("nij"))
-      .localCheckpoint() // contingency frame: built once, read 4×
+      .pin // contingency frame: built once, read 4×
     val ma = cells.groupBy(col("a")).agg(sum(col("nij")).as("ni"))
     val mb = cells.groupBy(col("b")).agg(sum(col("nij")).as("nj"))
     val tot = cells.agg(sum(col("nij")).as("nn"))
-    def dsum(c: Column) =
-      sum(round(c, 9).cast(DecimalType(38, 9))).cast("double")
     val nd = col("nn").cast("double")
     def entropy(m: DataFrame, cnt: String, out: String): DataFrame =
       m.crossJoin(broadcast(tot))
-        .agg(round(dsum((col(cnt).cast("double") / nd) *
+        .agg(round(exactSum9((col(cnt).cast("double") / nd) *
             log(nd / col(cnt).cast("double"))), 6).as(out))
     val ha = entropy(ma, "ni", "h_a")
     val hb = entropy(mb, "nj", "h_b")
@@ -110,7 +110,7 @@ object TargetEncode {
       .join(broadcast(ma), Seq("a")).join(broadcast(mb), Seq("b"))
       .crossJoin(broadcast(tot))
       .agg(first(col("nn")).as("n"),
-        round(dsum((col("nij").cast("double") / nd) *
+        round(exactSum9((col("nij").cast("double") / nd) *
             log((col("nij").cast("double") * nd) /
                 (col("ni").cast("double") * col("nj").cast("double")))), 6)
           .as("mi"))

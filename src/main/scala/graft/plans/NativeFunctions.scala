@@ -13,14 +13,14 @@ import org.apache.spark.sql.types.StringType
   *  - [[GraftExtensions]] injects every entry at session build;
   *  - [[graft.Graft.init]] registers every entry in an existing session;
   *  - each Column helper (e.g. [[cosineNative]],
-  *    [[MinHashNative.minhashNative]]) registers its own entry, then
-  *    calls it by name.
+  *    [[MinHashNative.minhashNative]]) registers its own entry when the
+  *    session lacks it, then calls it by name.
   */
 object NativeFunctions {
 
   /** One native function: `build` turns the SQL arguments into the
-    * expression. Applying it to Columns registers it in the session
-    * and calls it by name. */
+    * expression. Applying it to Columns registers it in a session that
+    * lacks it and calls it by name. */
   private[graft] final case class Native(name: String, cls: Class[_ <: Expression],
                                          build: Seq[Expression] => Expression) {
     def apply(spark: SparkSession, args: Column*): Column = {
@@ -59,10 +59,14 @@ object NativeFunctions {
   private[graft] val all: Seq[Native] = Seq(Cosine, MinHash, SimHash, AffineMin,
     Codes, DistTable, Adc, StringSet, Jaccard, JaroWinkler, Image, Audio, Video)
 
-  /** Register (or replace) `f` as a temp function of `spark`. */
-  private[graft] def register(spark: SparkSession, f: Native): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      f.name, f.build, "built-in")
+  /** Register `f` as a temp function of `spark` unless the session
+    * already has a function of that name (injected by
+    * [[GraftExtensions]], or registered by an earlier call). */
+  private[graft] def register(spark: SparkSession, f: Native): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(f.name)))
+      registry.createOrReplaceTempFunction(f.name, f.build, "built-in")
+  }
 
   /** Inject every entry into sessions built with `ext`. */
   private[plans] def inject(ext: SparkSessionExtensions): Unit =

@@ -6,7 +6,9 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.Tables._
 import graft.operators.{AsOfJoin, Dedup, Skew, Windows}
+import graft.queries.OracleSql.dsum
 import graft.util.Exact.exactSum
+import graft.util.Pin._
 
 /** Core relational operator queries (SURVEY §2.3-§2.6) over the driver
   * testdata, each with a DuckDB oracle. Conventions for oracle parity:
@@ -831,7 +833,7 @@ object CoreQueries {
       val out = grown.read()
         .select(col("user_id"), col("event_type"), col("event_id"),
                 col("value"))
-        .localCheckpoint() // pin rows, then reclaim the scratch dir
+        .pin // pin rows, then reclaim the scratch dir
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       out
     }),
@@ -964,10 +966,6 @@ object CoreQueries {
                 col("g_status"), col("g_priority"),
                 col("n"), col("sum_total")))
   )
-
-  // Scale 6: see util.Exact — DuckDB's double→decimal cast is lossy at
-  // scale 10 for 1e5-magnitude values.
-  private val dsum = (x: String) => s"CAST(SUM(CAST($x AS DECIMAL(30,6))) AS DOUBLE)"
 
   // q97's oracle, one UNION ALL arm per lineitem column (generated, so
   // the column lists can't drift from the arms' shapes).

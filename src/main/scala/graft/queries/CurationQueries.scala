@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.llm.{Decontaminate, QualityRules, Sampling}
 import graft.operators.{Eval, TargetEncode}
+import graft.queries.OracleSql.{lcgSql, toks}
 
 /** Round-6 curation/governance queries: the audit layer between a raw
   * corpus and a training run — benchmark decontamination, leakage-safe
@@ -15,13 +16,6 @@ import graft.operators.{Eval, TargetEncode}
   */
 object CurationQueries {
   type Q = (SparkSession, String) => DataFrame
-
-  // DuckDB word-tokenizer mirror of TextStats.tokens
-  private val toks = "regexp_split_to_array(trim(text), '\\s+')"
-
-  // the shared portable LCG (Similarity.lcg), DuckDB form
-  private def lcgSql(k: String) =
-    s"(1103515245*((($k)%2147483648+2147483648)%2147483648)+12345)%2147483648"
 
   // SpanDedup.cdcChunkStats' 33-weighted 8-char window code sum at
   // candidate cut position i, DuckDB form (q224)

@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables._
 import graft.llm.{AudioFixtures, Chunking, Dsir, ImageFixtures, Multimodal, NearDup, Packing, Quantize, Redact, Sampling, Similarity, TextStats}
+import graft.queries.OracleSql.{lcgSql, toks}
 import graft.util.Exact.exactSum
+import graft.util.Pin._
 
 /** LLM-training-data operators (driver mandate, SURVEY §7.4) over the
   * documents/embeddings tables. Oracle-matched where DuckDB can express
@@ -113,12 +115,12 @@ object LlmQueries {
       // corpus.
       val native = NearDup.nearDupPairs(docs, "doc_id", "text",
         shingleSize = 1, threshold = 0.8, numBands = 8, rowsPerBand = 4,
-        maxBucket = 100000).localCheckpoint()
+        maxBucket = 100000).pin
       val portable = NearDup.portableNearDupPairs(docs, "doc_id", "text",
-        threshold = 0.8, maxBucket = 100000).localCheckpoint()
+        threshold = 0.8, maxBucket = 100000).pin
       val toks = docs.select(col("doc_id").as("id"),
         array_sort(NearDup.tokenSet(col("text"))).as("toks"))
-        .localCheckpoint()
+        .pin
       val trueJac = native
         .join(toks.select(col("id").as("id_a"), col("toks").as("t_a")), "id_a")
         .join(toks.select(col("id").as("id_b"), col("toks").as("t_b")), "id_b")
@@ -550,7 +552,7 @@ object LlmQueries {
       // density, tiny relative to the corpus, so checkpoint storage is
       // negligible at any scale.
       val pairs = NearDup.portableNearDupPairs(quality, "doc_id", "text",
-                                               threshold = 0.8).localCheckpoint()
+                                               threshold = 0.8).pin
       val nonRep = graft.llm.Components
         .connectedComponents(pairs, "id_a", "id_b")
         .filter(col("node") =!= col("label"))
@@ -1637,12 +1639,12 @@ object LlmQueries {
     // damped power iterations, contributions quantized to 1e-15 and
     // decimal-summed so the only order-sensitive reduction is exact.
     // The link-graph quality signal of web-crawl curation, on the
-    // engine's own pair output; edges localCheckpoint'ed once for the
+    // engine's own pair output; edges pinned once for the
     // degree pass + both iterations (the q70 pattern).
     "q105_pagerank" -> ((s, d) => {
       val pairs = NearDup.portableNearDupPairs(
         documents(s, d).filter(col("doc_id") < 1000), "doc_id", "text",
-        threshold = 0.8).localCheckpoint()
+        threshold = 0.8).pin
       graft.operators.Graph.pageRank(pairs, "id_a", "id_b",
                                      iterations = 2, damping = 0.85)
     }),
@@ -1716,7 +1718,7 @@ object LlmQueries {
                   .as("g"))
         // three consumers (both self-join sides + the size frame)
         // otherwise re-run the regex split + trigram build each
-        .localCheckpoint()
+        .pin
       val e = docs.select(col("doc_id"), explode(col("g")).as("t"))
       val cnt = docs.select(col("doc_id"), size(col("g")).as("n"))
       val inter = e.as("a").join(e.as("b"),
@@ -1850,7 +1852,7 @@ object LlmQueries {
       val edges = knn.select(
           least(col("id_a"), col("id_b")).as("src"),
           greatest(col("id_a"), col("id_b")).as("dst"))
-        .distinct().localCheckpoint()
+        .distinct().pin
       graft.operators.Graph.triangles(edges, "src", "dst")
         .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
@@ -1866,22 +1868,13 @@ object LlmQueries {
       val edges = knn.select(
           least(col("id_a"), col("id_b")).as("src"),
           greatest(col("id_a"), col("id_b")).as("dst"))
-        .distinct().localCheckpoint()
+        .distinct().pin
       graft.operators.Graph.trianglesOriented(edges, "src", "dst")
         .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
     })
   )
 
-  private val toks = "regexp_split_to_array(trim(text), '\\s+')"
-
-  // The deterministic LCG shared with graft.llm.Similarity.lcg — plain
-  // 64-bit integer arithmetic, so the ORACLE can recompute SRP buckets
-  // and IVF centroid selection and both ANN paths hash-match. Mirrors
-  // lcg's pmod input reduction (ANSI-overflow guard + negative-id
-  // handling): (k mod 2^31 + 2^31) mod 2^31 == Spark's pmod.
-  private def lcgSql(k: String) =
-    s"(1103515245*((($k)%2147483648+2147483648)%2147483648)+12345)%2147483648"
   private val cosSql =
     "list_dot_product(qv, cv) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))"
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.llm.{Bm25, QualityRules}
 import graft.operators.{BloomJoin, TopK}
+import graft.queries.OracleSql.{dsum, lcgSql}
 
 /** Round-6 scale-operator queries: aggregation-shaped top-k, join
   * pruning, corpus quality rules, lexical ranking, projection-based
@@ -16,12 +17,6 @@ import graft.operators.{BloomJoin, TopK}
   */
 object PipelineQueries {
   type Q = (SparkSession, String) => DataFrame
-
-  private val dsum = (x: String) => s"CAST(SUM(CAST($x AS DECIMAL(30,6))) AS DOUBLE)"
-
-  // the shared portable LCG (Similarity.lcg), DuckDB form
-  private def lcgSql(k: String) =
-    s"(1103515245*((($k)%2147483648+2147483648)%2147483648)+12345)%2147483648"
 
   // Similarity.mix32, DuckDB form (xor-shift/multiply chain)
   private def mix32Sql(k: String): String = {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables._
 import graft.functions.{Cleaning, Geo, TimeFns, TypeCoercion}
+import graft.queries.OracleSql.dsum
 import graft.sources.OddsJsonFlattener
 import graft.util.Exact.exactSum
 
@@ -149,7 +150,6 @@ object ScalarQueries {
     })
   )
 
-  private val dsum = (x: String) => s"CAST(SUM(CAST($x AS DECIMAL(30,6))) AS DOUBLE)"
   private val recordRe = "^(\\d+)-(\\d+)(?:-(\\d+))?$"
 
   val oracles: Map[String, String] = Map(

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.operators.{Forecast, Linkage, Profiler, RankStats, Regression,
   Skew, TargetEncode}
+import graft.queries.OracleSql.{lcgSql, toks}
 
 /** Round-7 statistics family: model fits as aggregation (OLS, binned
   * logistic GD), rank/distribution-free tests (Spearman, Mann-Whitney,
@@ -17,13 +18,6 @@ import graft.operators.{Forecast, Linkage, Profiler, RankStats, Regression,
   */
 object StatsQueries {
   type Q = (SparkSession, String) => DataFrame
-
-  // DuckDB word-tokenizer mirror of TextStats.tokens
-  private val toks = "regexp_split_to_array(trim(text), '\\s+')"
-
-  // the shared portable LCG (Similarity.lcg), DuckDB form
-  private def lcgSql(k: String) =
-    s"(1103515245*((($k)%2147483648+2147483648)%2147483648)+12345)%2147483648"
 
   val queries: Map[String, Q] = Map(
 

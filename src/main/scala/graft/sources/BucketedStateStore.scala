@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.util.Pin._
 
 /** Generic keyed MERGE over BUCKETED state — SURVEY §7.4's scale path
   * for K2 beyond time-partitioned tables: when the upsert key is not
@@ -13,9 +14,9 @@ import graft.operators.Dedup
   * lives Hive-partitioned by `bucket = pmod(hash(keys), nBuckets)`, so
   * one merge:
   *
-  *   1. buckets and pins the batch, reading its touched bucket ids (≤
-  *      nBuckets driver ints) from the pin's own job — [[PinnedBatch]],
-  *      the helper PartitionedParquetStore's months use too;
+  *   1. buckets and pins the batch, observing its touched bucket ids
+  *      (≤ nBuckets driver ints) in the pin's own job — the observed pin
+  *      PartitionedParquetStore's months use too;
   *   2. reads ONLY those bucket directories (planning-time partition
   *      pruning — untouched state is never even scanned);
   *   3. resolves newest-wins per key over (touched buckets ∪ batch) —
@@ -82,22 +83,21 @@ class BucketedStateStore(spark: SparkSession, root: String,
   def merge(batchRaw: DataFrame, order: Seq[Column]): Unit = {
     // The batch is consumed three times (touched-set lookup, merge
     // union, write) and the touched-bucket set must describe the SAME
-    // rows the merge sees: PinnedBatch (shared with
-    // PartitionedParquetStore's upserts) pins it with localCheckpoint and
-    // reads the touched set from that one job as an observe() metric —
-    // ≤ nBuckets driver ints, no separate distinct-collect job.
-    val (batch, touchedRows) = PinnedBatch.pin(withBucket(batchRaw), Seq("bucket"))
-    val touched = touchedRows.map(_.getInt(0)).sorted
+    // rows the merge sees: the pin observes it in its own job — ≤
+    // nBuckets driver ints, no separate distinct-collect job.
+    val (batch, m) = withBucket(batchRaw)
+      .pinObserving(collect_set(col("bucket")).as("touched"))
+    val touched = m("touched").asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted
     val merged = readOpt() match {
       case Some(existing) =>
-        // localCheckpoint MATERIALIZES the pruned existing side before
+        // the pin MATERIALIZES the pruned existing side before
         // the write below overwrites the same path — correctness must
         // not hang on dynamic-overwrite's stage-then-commit ordering
         // (a mode or version change would silently turn a lazy read
         // into read-your-own-overwrite). Bounded by design: this is
         // the touched-buckets slice, the quantity a merge is sized by.
         Dedup.merge(
-          existing.filter(col("bucket").isin(touched: _*)).localCheckpoint(),
+          existing.filter(col("bucket").isin(touched: _*)).pin,
           batch, keys, order)
       case None => Dedup.keepLatest(batch, keys, order)
     }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.llm.{RobotsTxt, UrlCanon}
+import graft.util.Pin._
 
 /** Crawl-frontier composition — the discovery loop a real intake
   * runs between "we have each host's robots.txt" and "we have a URL
@@ -107,14 +108,14 @@ object Frontier {
     var depth = 0
     var more = !level.isEmpty
     while (depth < maxDepth && more) {
-      // localCheckpoint cuts the per-level lineage: without it each
+      // the pin cuts the per-level lineage: without it each
       // level's action re-parses the WHOLE chain above it
       // (O(depth^2) XML parses) — the classic iterative-algorithm
       // lineage blowup. The checkpoint job is the level's ONE parse;
       // the continue-check below scans the persisted blocks (cheap)
       // instead of re-running the distinct + anti-join the old
       // level.isEmpty paid per level.
-      val entries = parseLevel(level).localCheckpoint()
+      val entries = parseLevel(level).pin
       val urlEntries = entries.filter(col("kind") === "url")
         .select(col("host"), col("source_sitemap"), col("loc"),
                 col("lastmod"), col("priority"))

@@ -1,9 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.util.Pin._
 
 /** The reference's "storage engine" (SURVEY §1.4, §2.4, §2.8):
   * Hive-partitioned Parquet (`year=YYYY/month=MM`) with two upsert
@@ -24,17 +25,13 @@ import graft.operators.Dedup
   *    start-fresh semantics, decided by [[ParquetTable]]).
   *
   * Every upsert evaluates its batch ONCE: the batch (partition columns
-  * added, key-deduped for [[upsertNewestBatch]]) is pinned with
-  * `localCheckpoint`, and its touched months are read from that same job
-  * ([[PinnedBatch]]). A separate distinct-collect for the months would
-  * re-run the batch's whole lineage — for the rankings collection the
-  * melt, the wide pivot, the final pass and the key dedup — and so would
-  * every consumer of an unpinned batch: the write, and for the
-  * newest-batch merge both its broadcast key set and its union side.
-  * Trade-off: the pinned batch has no lineage, so an executor lost
-  * mid-upsert fails the upsert (the collection's scheduler retries it)
-  * instead of recomputing the lost blocks; the pin policy planned in
-  * ROADMAP.md is where that choice will become switchable.
+  * added, key-deduped for [[upsertNewestBatch]]) is pinned, and the pin's
+  * own job observes its touched months. A separate distinct-collect for
+  * the months would re-run the batch's whole lineage — for the rankings
+  * collection the melt, the wide build, the final pass and the key
+  * dedup — and so would every consumer of an unpinned batch: the write,
+  * and for the newest-batch merge both its broadcast key set and its
+  * union side.
   *
   * At 100 TB the per-upsert cost stays bounded by the touched months,
   * not the table; the dedup shuffle is also partition-bounded, and the
@@ -88,7 +85,9 @@ class PartitionedParquetStore(spark: SparkSession, root: String) {
     * keeps a null-timestamp month (`__HIVE_DEFAULT_PARTITION__`) in the
     * merge instead of letting the overwrite drop its stored rows. */
   private def pinWithTouched(fresh: DataFrame): (DataFrame, Option[DataFrame]) = {
-    val (batch, touched) = PinnedBatch.pin(fresh, Seq("year", "month"))
+    val (batch, m) = fresh.pinObserving(
+      collect_set(struct(col("year"), col("month"))).as("touched"))
+    val touched = m("touched").asInstanceOf[scala.collection.Seq[Row]]
     val stored = readOpt().map(_.filter(
       touched.map(r => col("year") <=> r.get(0) && col("month") <=> r.get(1))
         .reduceOption(_ || _).getOrElse(lit(false))))
@@ -108,12 +107,11 @@ class PartitionedParquetStore(spark: SparkSession, root: String) {
   /** K2+A2: keyed keep-latest upsert — newest `tsCol` wins per `keys`
     * (all non-timestamp columns in the reference,
     * team_rankings_data_collector.py:42-45). */
-  def upsertKeepLatest(freshRaw: DataFrame, keys: Seq[String], tsCol: String,
-                       tiebreak: Seq[Column] = Nil): Unit = {
+  def upsertKeepLatest(freshRaw: DataFrame, keys: Seq[String], tsCol: String): Unit = {
     val (fresh, stored) = pinWithTouched(withPartitionCols(freshRaw, tsCol))
     val unioned = stored.fold(fresh)(_.unionByName(fresh, allowMissingColumns = true))
     writeDynamic(
-      Dedup.keepLatest(unioned, keys, col(tsCol).desc +: tiebreak))
+      Dedup.keepLatest(unioned, keys, Seq(col(tsCol).desc)))
   }
 
   /** K2+A2 fast path for the live-collection contract: the fresh batch
@@ -126,10 +124,9 @@ class PartitionedParquetStore(spark: SparkSession, root: String) {
     * vs [[upsertKeepLatest]]'s window over the whole touched partition.
     * Result is identical to upsertKeepLatest whenever the
     * newest-batch precondition holds. */
-  def upsertNewestBatch(freshRaw: DataFrame, keys: Seq[String], tsCol: String,
-                        tiebreak: Seq[Column] = Nil): Unit = {
+  def upsertNewestBatch(freshRaw: DataFrame, keys: Seq[String], tsCol: String): Unit = {
     val (fresh, stored) = pinWithTouched(Dedup.keepLatest(
-      withPartitionCols(freshRaw, tsCol), keys, col(tsCol).desc +: tiebreak))
+      withPartitionCols(freshRaw, tsCol), keys, Seq(col(tsCol).desc)))
     writeDynamic(stored.fold(fresh)(Dedup.mergeSmallUpdates(_, fresh, keys)))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Profiler
+import graft.util.Pin._
 
 /** Streaming Benford monitor — the continuously-running twin of
   * [[Profiler.benfordAudit]]: every micro-batch's first-digit counts
@@ -45,7 +46,7 @@ object StreamingBenford {
               auditPath: String, checkpoint: String): StreamingQuery =
     MicroBatch.drain(stream, checkpoint) { (batch, batchId) =>
       lazy val batchCounts = Profiler.firstDigitCounts(batch, valueCol)
-        .localCheckpoint() // read twice (batch dev + state merge)
+        .pin // read twice (batch dev + state merge)
       MicroBatch.foldState(batch.sparkSession, batchId, statePath)(
         batchCounts,
         (p, b) => p.unionByName(b).groupBy(col("digit")).agg(sum(col("n")).as("n")),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Scd
 import graft.sources.ParquetTable
+import graft.util.Pin._
 
 /** Streaming SCD2 maintenance: each micro-batch of change events folds
   * into a persisted type-2 dimension table via [[Scd.merge]] — the
@@ -49,6 +50,6 @@ object StreamingScd {
                    stateCols)
       }
       // materialize before overwriting the table being read
-      merged.localCheckpoint(true).write.mode("overwrite").parquet(path)
+      merged.pin.write.mode("overwrite").parquet(path)
     }
 }

@@ -27,6 +27,12 @@ object Exact {
   def exactSum(c: Column): Column =
     sum(c.cast(DecimalType(30, 6))).cast(DoubleType)
 
+  /** [[exactSum]] for terms with 9 decimals (products, ratios, trig
+    * values), each rounded to 9 places first. DuckDB mirror:
+    * CAST(SUM(CAST(ROUND(x, 9) AS DECIMAL(38,9))) AS DOUBLE). */
+  def exactSum9(c: Column): Column =
+    sum(round(c, 9).cast(DecimalType(38, 9))).cast("double")
+
   /** exactSum / count — portable mean.
     * DuckDB mirror: CAST(SUM(CAST(x AS DECIMAL(30,6))) AS DOUBLE)/COUNT(x). */
   def exactAvg(c: Column): Column =
