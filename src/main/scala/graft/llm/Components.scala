@@ -123,7 +123,7 @@ object Components {
       // self-row: min(own ∪ neighbor labels) ≡ least(own, min nbrs),
       // one exchange instead of groupBy + join-back (r15 shape), and
       // no `stepped` pin — the r15 pin doubled the pin actions per
-      // round and regressed q180 in both driver runs; the
+      // round and regressed q180 in both measured runs; the
       // pointer-jump self-join's two references below share the
       // aggregation exchange via AQE reuse instead.
       val stepped = sym

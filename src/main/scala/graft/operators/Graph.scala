@@ -46,10 +46,10 @@ object Graph {
     // edge pipeline (corpus scan + distinct) once per iteration per
     // consumer. Both frames are the operator's own bounded units
     // (edges / nodes), the same discipline labelPropagation/bfsLayers
-    // already apply. (No pre-partitioned pin here, unlike Components: the per-round
-    // rank join builds the node frame as a broadcast, so the edge side
-    // never re-shuffles anyway — measured r16, a repartition-by-src
-    // pin cost q105 0.91x for zero saved exchanges.)
+    // already apply. (No pre-partitioned pin here, unlike Components:
+    // the per-round rank join builds the node frame as a broadcast, so
+    // the edge side never re-shuffles anyway — measured r16, a
+    // repartition-by-src pin cost q105 0.91x for zero saved exchanges.)
     val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .unionByName(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .pin
@@ -286,11 +286,11 @@ object Graph {
     * edge list + an anti-join against the visited set — exchanges
     * carry the EDGE list; the frontier shrinks as the graph
     * saturates; visited/frontier are pinned so lineage stays flat, and
-    * each pin counts its own rows (no separate count job). Round count = graph eccentricity from the seeds,
-    * `maxDepth` the guard. Deterministic: a node's dist is its FIRST
-    * reach round — simultaneous expansion makes that partitioning-
-    * independent, so a fixed-depth SQL replay lands on the identical
-    * layering. */
+    * each pin counts its own rows (no separate count job). Round
+    * count = graph eccentricity from the seeds, `maxDepth` the guard.
+    * Deterministic: a node's dist is its FIRST reach round —
+    * simultaneous expansion makes that partitioning-independent, so a
+    * fixed-depth SQL replay lands on the identical layering. */
   def bfsLayers(edges: DataFrame, srcCol: String, dstCol: String,
                 seeds: DataFrame, seedCol: String,
                 maxDepth: Int = 32): DataFrame = {
@@ -332,9 +332,10 @@ object Graph {
     * against the survivor set plus one node-keyed count — exchanges
     * carry the EDGE list, never more; the survivor frame shrinks
     * monotonically and is pinned per round (the pin counting its own
-    * rows) so the plan does not deepen with rounds. Round count is bounded by the
-    * graph's degeneracy ordering (tens, not thousands, on real
-    * graphs); `maxRounds` is a runaway guard, not a tuning knob.
+    * rows) so the plan does not deepen with rounds. Round count is
+    * bounded by the graph's degeneracy ordering (tens, not thousands,
+    * on real graphs); `maxRounds` is a runaway guard, not a tuning
+    * knob.
     * Deterministic: simultaneous (not sequential) removal makes the
     * result independent of any node ordering, so a fixed-step replay
     * of the same peel (the q164 oracle runs 30 rounds) lands on the
