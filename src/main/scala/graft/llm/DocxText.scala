@@ -42,14 +42,6 @@ object DocxText {
     * file header can declare any size; meter actual inflation. */
   private val MaxPartBytes = 256L << 20
 
-  /** Element-nesting cap for the document walk. Real documents nest
-    * tables a handful of levels; a crafted 200k-deep element chain
-    * would otherwise drive the recursion to StackOverflowError —
-    * FATAL, so it would escape the streaming intake's per-document
-    * Try and kill the whole query on one hostile .docx (the PdfText
-    * MaxDepth rationale exactly). */
-  private val MaxDepth = 64
-
   def isZip(b: Array[Byte]): Boolean =
     b.length >= 4 && b(0) == 'P' && b(1) == 'K' &&
       (b(2) == 3 || b(2) == 5 || b(2) == 7)
@@ -74,9 +66,7 @@ object DocxText {
     require(isZip(docx), "not a DOCX (missing zip magic)")
     val part = documentPart(docx)
     val doc = graft.util.SecureXml.builder().parse(new java.io.ByteArrayInputStream(part))
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    walk(doc.getDocumentElement, out)
-    out.toSeq
+    OoxmlParagraphs(doc.getDocumentElement, Runs, "DOCX")
   }
 
   /** Footnote + endnote text: one string per REAL note (the
@@ -98,7 +88,7 @@ object DocxText {
         (0 until kids.getLength).flatMap { i =>
           val k = kids.item(i)
           if (k.getNodeType == org.w3c.dom.Node.ELEMENT_NODE &&
-              (localName(k) == "footnote" || localName(k) == "endnote")) {
+              Set("footnote", "endnote")(OoxmlParagraphs.localName(k))) {
             // attribute matched on LOCAL name (prefix bindings vary)
             val typ = Option(k.getAttributes).flatMap { a =>
               (0 until a.getLength).map(a.item(_)).collectFirst {
@@ -108,11 +98,9 @@ object DocxText {
             }.getOrElse("")
             // ST_FtnEdn: "normal" is the schema DEFAULT — Word omits
             // it but other generators legally write it explicitly
-            if (typ.isEmpty || typ == "normal") {
-              val ps = scala.collection.mutable.ArrayBuffer[String]()
-              walk(k, ps)
-              Some(ps.mkString("\n"))
-            } else None // separator / continuationSeparator / notice
+            if (typ.isEmpty || typ == "normal")
+              Some(OoxmlParagraphs(k, Runs, "DOCX").mkString("\n"))
+            else None // separator / continuationSeparator / notice
           } else None
         }
       }
@@ -146,75 +134,14 @@ object DocxText {
       maxTotalBytes = MaxPartBytes, stopAfterFirst = true)
       .headOption.map(_._2)
 
-  /** Depth-first: each w:p contributes one line; containers (body,
-    * tables, content controls) recurse, depth-capped. Elements
-    * matched on LOCAL name — producers vary the `w:` prefix
-    * binding. */
-  private def walk(node: org.w3c.dom.Node,
-                   out: scala.collection.mutable.ArrayBuffer[String],
-                   depth: Int = 0): Unit = {
-    require(depth < MaxDepth, "DOCX element nesting too deep")
-    val kids = node.getChildNodes
-    var i = 0
-    while (i < kids.getLength) {
-      val k = kids.item(i)
-      if (k.getNodeType == org.w3c.dom.Node.ELEMENT_NODE) {
-        if (localName(k) == "p") {
-          val sb = new java.lang.StringBuilder()
-          runText(k, sb)
-          out += sb.toString
-        } else walk(k, out, depth + 1)
-      }
-      i += 1
-    }
-  }
-
-  private def localName(n: org.w3c.dom.Node): String = {
-    val ln = n.getLocalName
-    if (ln != null) ln
-    else { // non-namespace-aware producers: strip any prefix
-      val nm = n.getNodeName
-      val c = nm.indexOf(':')
-      if (c >= 0) nm.substring(c + 1) else nm
-    }
-  }
-
-  /** Text content of one paragraph subtree: w:t verbatim, w:tab TAB,
-    * w:br / w:cr newline; w:delText (tracked deletions) skipped. */
-  private def runText(node: org.w3c.dom.Node,
-                      sb: java.lang.StringBuilder,
-                      depth: Int = 0): Unit = {
-    require(depth < MaxDepth, "DOCX run nesting too deep")
-    val kids = node.getChildNodes
-    var i = 0
-    while (i < kids.getLength) {
-      val k = kids.item(i)
-      if (k.getNodeType == org.w3c.dom.Node.ELEMENT_NODE) {
-        localName(k) match {
-          case "t" => sb.append(k.getTextContent)
-          case "tab" => sb.append('\t')
-          case "br" | "cr" => sb.append('\n')
-          case "delText" => // tracked deletion: not document text
-          case "instrText" => // field instruction plumbing, not text
-          case "pPr" | "rPr" =>
-          // property bags: w:pPr carries w:tabs/w:tab STOP
-          // definitions — layout, not tab characters
-          case _ => runText(k, sb, depth + 1)
-        }
-      }
-      i += 1
-    }
-  }
+  /** Run elements of a `w:p`: w:tab TAB, w:br / w:cr newline; w:delText
+    * (tracked deletions) and w:instrText (field instruction plumbing)
+    * are not document text; w:pPr carries w:tabs/w:tab STOP definitions
+    * — layout, not tab characters. */
+  private val Runs = Map("tab" -> "\t", "br" -> "\n", "cr" -> "\n",
+    "delText" -> "", "instrText" -> "", "pPr" -> "", "rPr" -> "")
 
   // ------------------------------------------------------------ fixture
-
-  private def xmlEscape(s: String): String =
-    s.flatMap {
-      case '&' => "&amp;"
-      case '<' => "&lt;"
-      case '>' => "&gt;"
-      case c => c.toString
-    }
 
   /** Minimal-but-real .docx writer for specs/oracle fixtures: the
     * three-part OOXML package (content types, rels, document), plus
@@ -240,7 +167,7 @@ object DocxText {
       sb ++= "<w:p>"
       Seq(a, b).filter(_.nonEmpty).foreach { seg =>
         sb ++= "<w:r><w:t xml:space=\"preserve\">"
-        sb ++= xmlEscape(seg)
+        sb ++= graft.util.SecureXml.escape(seg)
         sb ++= "</w:t></w:r>"
       }
       sb ++= "</w:p>"

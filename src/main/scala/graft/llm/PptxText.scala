@@ -40,7 +40,6 @@ import org.apache.spark.sql.functions._
 object PptxText {
 
   private val MaxPartBytes = 256L << 20 // cumulative inflation cap
-  private val MaxDepth = 64
   private val MaxSlides = 10000 // hostile part-count bound
 
   // 1-6 digits: a hostile 20-digit part number must not escape as
@@ -110,59 +109,10 @@ object PptxText {
     * `a:endParaRPr`) are layout, not text. */
   private def slideText(part: Array[Byte]): String = {
     val doc = graft.util.SecureXml.builder().parse(new java.io.ByteArrayInputStream(part))
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    walk(doc.getDocumentElement, out)
-    out.mkString("\n")
+    OoxmlParagraphs(doc.getDocumentElement, Runs, "PPTX").mkString("\n")
   }
 
-  private def walk(node: org.w3c.dom.Node,
-                   out: scala.collection.mutable.ArrayBuffer[String],
-                   depth: Int = 0): Unit = {
-    require(depth < MaxDepth, "PPTX element nesting too deep")
-    val kids = node.getChildNodes
-    var i = 0
-    while (i < kids.getLength) {
-      val k = kids.item(i)
-      if (k.getNodeType == org.w3c.dom.Node.ELEMENT_NODE) {
-        if (localName(k) == "p") {
-          val sb = new java.lang.StringBuilder()
-          runText(k, sb)
-          out += sb.toString
-        } else walk(k, out, depth + 1)
-      }
-      i += 1
-    }
-  }
-
-  private def runText(node: org.w3c.dom.Node,
-                      sb: java.lang.StringBuilder,
-                      depth: Int = 0): Unit = {
-    require(depth < MaxDepth, "PPTX run nesting too deep")
-    val kids = node.getChildNodes
-    var i = 0
-    while (i < kids.getLength) {
-      val k = kids.item(i)
-      if (k.getNodeType == org.w3c.dom.Node.ELEMENT_NODE) {
-        localName(k) match {
-          case "t" => sb.append(k.getTextContent)
-          case "br" => sb.append('\n')
-          case "pPr" | "rPr" | "endParaRPr" => // property bags
-          case _ => runText(k, sb, depth + 1)
-        }
-      }
-      i += 1
-    }
-  }
-
-  private def localName(n: org.w3c.dom.Node): String = {
-    val ln = n.getLocalName
-    if (ln != null) ln
-    else {
-      val nm = n.getNodeName
-      val c = nm.indexOf(':')
-      if (c >= 0) nm.substring(c + 1) else nm
-    }
-  }
+  private val Runs = Map("br" -> "\n", "pPr" -> "", "rPr" -> "", "endParaRPr" -> "")
 
   // ------------------------------------------------------------ fixture
 

@@ -26,14 +26,28 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 case class AffineMinHash(child: Expression, numPerm: Int)
     extends UnaryExpression {
 
-  private val P = 2147483647L
-
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "affine_minhash"
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    AffineMinHash.signature(input.asInstanceOf[ArrayData], numPerm)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.AffineMinHash.signature($a, $numPerm); " +
+        s"${ev.isNull} = ${ev.value} == null;")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object AffineMinHash {
+
+  private val P = 2147483647L
+
+  /** The signature of `hs`, or null when `hs` is empty. */
+  def signature(hs: ArrayData, numPerm: Int): ArrayData = {
     val n = hs.numElements()
     if (n == 0) return null
     val mins = Array.fill(numPerm)(Long.MaxValue)
@@ -50,34 +64,6 @@ case class AffineMinHash(child: Expression, numPerm: Int)
     }
     new GenericArrayData(mins)
   }
-
-  // Locals ctx.freshName'd (see CosineSimilarity for why).
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i"); val h = ctx.freshName("h")
-      val j = ctx.freshName("j"); val p = ctx.freshName("p")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $mins = new long[$numPerm];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h = $a.getLong($i);
-         |    for (int $j = 0; $j < $numPerm; $j++) {
-         |      long $p = ($h * (2L * $j + 1L) + $j) % ${P}L;
-         |      if ($p < $mins[$j]) $mins[$j] = $p;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object AffineMinHashNative {

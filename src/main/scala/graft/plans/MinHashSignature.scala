@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.lit
@@ -28,8 +28,22 @@ case class MinHashSignature(child: Expression, numPerm: Int)
   override def nullable: Boolean = true
   override def prettyName: String = "minhash_native"
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    MinHashSignature.signature(input.asInstanceOf[ArrayData], numPerm)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"${ev.value} = graft.plans.MinHashSignature.signature($a, $numPerm); " +
+        s"${ev.isNull} = ${ev.value} == null;")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashSignature {
+
+  /** The signature of `hs`, or null when `hs` is empty. */
+  def signature(hs: ArrayData, numPerm: Int): ArrayData = {
     val n = hs.numElements()
     if (n == 0) return null
     val mins = Array.fill(numPerm)(Long.MaxValue)
@@ -38,7 +52,7 @@ case class MinHashSignature(child: Expression, numPerm: Int)
       val h = hs.getLong(i)
       var j = 0
       while (j < numPerm) {
-        val p = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(h, j.toLong)
+        val p = XXH64.hashLong(h, j.toLong)
         if (p < mins(j)) mins(j) = p
         j += 1
       }
@@ -46,36 +60,6 @@ case class MinHashSignature(child: Expression, numPerm: Int)
     }
     new GenericArrayData(mins)
   }
-
-  // Locals are ctx.freshName'd: with a non-nullable input the fragment
-  // is inlined with no enclosing block, so two instances in one
-  // projection would collide on fixed names (see CosineSimilarity).
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val mins = ctx.freshName("mins")
-      val i = ctx.freshName("i"); val h = ctx.freshName("h")
-      val j = ctx.freshName("j"); val p = ctx.freshName("p")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $mins = new long[$numPerm];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h = $a.getLong($i);
-         |    for (int $j = 0; $j < $numPerm; $j++) {
-         |      long $p = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong($h, (long) $j);
-         |      if ($p < $mins[$j]) $mins[$j] = $p;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object MinHashNative {

@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * expression tree for an 8×16 codebook is ~2,000 arithmetic nodes —
   * past Janino's 64 KB method limit, so the WHOLE encode stage fell
   * out of whole-stage codegen and ran interpreted (measured 6.6 s for
-  * 5k vectors in BENCH at sf0.1). These expressions emit the loops
-  * directly — code size O(1) in codebook size, the codebook itself a
-  * plan-constant double[] reference — and keep encode and the
+  * 5k vectors in BENCH at sf0.1). These expressions generate one call
+  * into the kernels below — code size O(1) in codebook size, the
+  * codebook itself a plan-constant double[] reference — and keep encode and the
   * corpus-wide ADC scan (the 100 TB hot path) inside whole-stage
   * codegen. Same preference rationale as [[CosineSimilarity]] /
   * [[MinHashSignature]] (SURVEY §7.3).
@@ -37,6 +37,58 @@ object Pq {
     require(e.foldable, "PQ codebook must be a plan-time constant")
     e.eval().asInstanceOf[ArrayData].toDoubleArray()
   }
+
+  /** Per-subspace argmin codeword indices of `x`, or null when `x` is
+    * shorter than nSub*subDim. */
+  def codes(x: ArrayData, cb: Array[Double], nSub: Int, nCodes: Int): ArrayData = {
+    val sd = cb.length / (nSub * nCodes)
+    if (x.numElements() < nSub * sd) return null
+    val codes = new Array[Int](nSub)
+    var s = 0
+    while (s < nSub) {
+      var best = Double.PositiveInfinity; var bestC = 0; var c = 0
+      while (c < nCodes) {
+        val dist = l2(x, cb, s, c, sd, nCodes)
+        if (dist < best) { best = dist; bestC = c }
+        c += 1
+      }
+      codes(s) = bestC; s += 1
+    }
+    new GenericArrayData(codes)
+  }
+
+  /** L2² of `x` to every codeword, entry s*nCodes + c, or null when `x`
+    * is shorter than nSub*subDim. */
+  def distTable(x: ArrayData, cb: Array[Double], nSub: Int, nCodes: Int): ArrayData = {
+    val sd = cb.length / (nSub * nCodes)
+    if (x.numElements() < nSub * sd) return null
+    val dt = new Array[Double](nSub * nCodes)
+    var s = 0
+    while (s < nSub) {
+      var c = 0
+      while (c < nCodes) { dt(s * nCodes + c) = l2(x, cb, s, c, sd, nCodes); c += 1 }
+      s += 1
+    }
+    new GenericArrayData(dt)
+  }
+
+  /** Σ_s dt[s*nCodes + codes[s]] in ascending s. */
+  def adc(codes: ArrayData, dt: ArrayData, nCodes: Int): Double = {
+    var sum = 0.0; var s = 0; val n = codes.numElements()
+    while (s < n) { sum += dt.getDouble(s * nCodes + codes.getInt(s)); s += 1 }
+    sum
+  }
+
+  /** L2² between subvector s of `x` and codeword (s, c). */
+  private def l2(x: ArrayData, cb: Array[Double], s: Int, c: Int,
+                 sd: Int, nCodes: Int): Double = {
+    var dist = 0.0; var i = 0
+    while (i < sd) {
+      val d = x.getDouble(s * sd + i) - cb((s * nCodes + c) * sd + i)
+      dist += d * d; i += 1
+    }
+    dist
+  }
 }
 
 /** codes(v): array<int> of per-subspace argmin codeword indices (ties
@@ -46,65 +98,19 @@ case class PqCodes(left: Expression, right: Expression,
     extends BinaryExpression {
 
   @transient private lazy val cb: Array[Double] = Pq.cbArray(right)
-  private def subDim: Int = cb.length / (nSub * nCodes)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "pq_codes"
 
-  override def nullSafeEval(v: Any, ignored: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
-    val sd = subDim
-    if (x.numElements() < nSub * sd) return null
-    val codes = new Array[Int](nSub)
-    var s = 0
-    while (s < nSub) {
-      var best = Double.PositiveInfinity; var bestC = 0; var c = 0
-      while (c < nCodes) {
-        var dist = 0.0; var i = 0
-        while (i < sd) {
-          val d = x.getDouble(s * sd + i) - cb((s * nCodes + c) * sd + i)
-          dist += d * d; i += 1
-        }
-        if (dist < best) { best = dist; bestC = c }
-        c += 1
-      }
-      codes(s) = bestC; s += 1
-    }
-    new GenericArrayData(codes)
-  }
+  override def nullSafeEval(v: Any, ignored: Any): Any =
+    Pq.codes(v.asInstanceOf[ArrayData], cb, nSub, nCodes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("pqCodebook", cb, "double[]")
-    val sd = subDim
-    nullSafeCodeGen(ctx, ev, (a, _) => {
-      val codes = ctx.freshName("codes"); val s = ctx.freshName("s")
-      val c = ctx.freshName("c"); val i = ctx.freshName("i")
-      val best = ctx.freshName("best"); val bestC = ctx.freshName("bestC")
-      val dist = ctx.freshName("dist"); val d = ctx.freshName("d")
-      s"""
-         |if ($a.numElements() < ${nSub * sd}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $codes = new int[$nSub];
-         |  for (int $s = 0; $s < $nSub; $s++) {
-         |    double $best = Double.POSITIVE_INFINITY;
-         |    int $bestC = 0;
-         |    for (int $c = 0; $c < $nCodes; $c++) {
-         |      double $dist = 0.0;
-         |      for (int $i = 0; $i < $sd; $i++) {
-         |        double $d = $a.getDouble($s * $sd + $i)
-         |          - $cbRef[($s * $nCodes + $c) * $sd + $i];
-         |        $dist += $d * $d;
-         |      }
-         |      if ($dist < $best) { $best = $dist; $bestC = $c; }
-         |    }
-         |    $codes[$s] = $bestC;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, _) =>
+      s"${ev.value} = graft.plans.Pq.codes($a, $cbRef, $nSub, $nCodes); " +
+        s"${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -119,60 +125,19 @@ case class PqDistTable(left: Expression, right: Expression,
     extends BinaryExpression {
 
   @transient private lazy val cb: Array[Double] = Pq.cbArray(right)
-  private def subDim: Int = cb.length / (nSub * nCodes)
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "pq_dist_table"
 
-  override def nullSafeEval(v: Any, ignored: Any): Any = {
-    val x = v.asInstanceOf[ArrayData]
-    val sd = subDim
-    if (x.numElements() < nSub * sd) return null
-    val dt = new Array[Double](nSub * nCodes)
-    var s = 0
-    while (s < nSub) {
-      var c = 0
-      while (c < nCodes) {
-        var dist = 0.0; var i = 0
-        while (i < sd) {
-          val d = x.getDouble(s * sd + i) - cb((s * nCodes + c) * sd + i)
-          dist += d * d; i += 1
-        }
-        dt(s * nCodes + c) = dist; c += 1
-      }
-      s += 1
-    }
-    new GenericArrayData(dt)
-  }
+  override def nullSafeEval(v: Any, ignored: Any): Any =
+    Pq.distTable(v.asInstanceOf[ArrayData], cb, nSub, nCodes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("pqCodebook", cb, "double[]")
-    val sd = subDim
-    nullSafeCodeGen(ctx, ev, (a, _) => {
-      val dt = ctx.freshName("dt"); val s = ctx.freshName("s")
-      val c = ctx.freshName("c"); val i = ctx.freshName("i")
-      val dist = ctx.freshName("dist"); val d = ctx.freshName("d")
-      s"""
-         |if ($a.numElements() < ${nSub * sd}) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double[] $dt = new double[${nSub * nCodes}];
-         |  for (int $s = 0; $s < $nSub; $s++) {
-         |    for (int $c = 0; $c < $nCodes; $c++) {
-         |      double $dist = 0.0;
-         |      for (int $i = 0; $i < $sd; $i++) {
-         |        double $d = $a.getDouble($s * $sd + $i)
-         |          - $cbRef[($s * $nCodes + $c) * $sd + $i];
-         |        $dist += $d * $d;
-         |      }
-         |      $dt[$s * $nCodes + $c] = $dist;
-         |    }
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($dt);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, _) =>
+      s"${ev.value} = graft.plans.Pq.distTable($a, $cbRef, $nSub, $nCodes); " +
+        s"${ev.isNull} = ${ev.value} == null;")
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
@@ -192,29 +157,11 @@ case class PqAdc(left: Expression, right: Expression, nCodes: Int)
   override def nullable: Boolean = true
   override def prettyName: String = "pq_adc"
 
-  override def nullSafeEval(codesAny: Any, dtAny: Any): Any = {
-    val codes = codesAny.asInstanceOf[ArrayData]
-    val dt = dtAny.asInstanceOf[ArrayData]
-    var sum = 0.0; var s = 0; val n = codes.numElements()
-    while (s < n) {
-      sum += dt.getDouble(s * nCodes + codes.getInt(s)); s += 1
-    }
-    java.lang.Double.valueOf(sum)
-  }
+  override def nullSafeEval(codes: Any, dt: Any): Any =
+    Pq.adc(codes.asInstanceOf[ArrayData], dt.asInstanceOf[ArrayData], nCodes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val s = ctx.freshName("s")
-      val sum = ctx.freshName("sum")
-      s"""
-         |int $n = $a.numElements();
-         |double $sum = 0.0;
-         |for (int $s = 0; $s < $n; $s++) {
-         |  $sum += $b.getDouble($s * $nCodes + $a.getInt($s));
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.Pq.adc($a, $b, $nCodes)")
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): Expression =

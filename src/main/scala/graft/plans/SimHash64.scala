@@ -28,8 +28,25 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override def nullable: Boolean = true
   override def prettyName: String = "simhash64_native"
 
-  override def nullSafeEval(input: Any): Any = {
-    val hs = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SimHash64.signature(input.asInstanceOf[ArrayData])
+
+  // the boxed result (null: empty input) passes through a field, not a local
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val sig = ctx.addMutableState("java.lang.Long", "simhash")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"$sig = graft.plans.SimHash64.signature($a); " +
+        s"${ev.isNull} = $sig == null; if (!${ev.isNull}) ${ev.value} = $sig;")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimHash64 {
+
+  /** The signature of `hs`, or null when `hs` is empty. */
+  def signature(hs: ArrayData): java.lang.Long = {
     val n = hs.numElements()
     if (n == 0) return null
     val votes = new Array[Int](64)
@@ -48,37 +65,6 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
     java.lang.Long.valueOf(sig)
   }
-
-  // All locals ctx.freshName'd — non-nullable inputs inline the
-  // fragment without an enclosing block (see CosineSimilarity).
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val votes = ctx.freshName("votes")
-      val i = ctx.freshName("i"); val h = ctx.freshName("h")
-      val b = ctx.freshName("b"); val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $votes = new int[64];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h = $a.getLong($i);
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      $votes[$b] += (int) (($h >>> $b) & 1L) * 2 - 1;
-         |    }
-         |  }
-         |  long $sig = 0L;
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    if ($votes[$b] > 0) $sig |= (1L << $b);
-         |  }
-         |  ${ev.value} = $sig;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object SimHashNative {

@@ -46,8 +46,8 @@ case class SortedJaccard(left: Expression, right: Expression)
   override def prettyName: String = "sorted_jaccard"
 
   // mismatched or unsupported element types fail at ANALYSIS, not
-  // executor-side at eval/codegen (the bind-time dispatch below only
-  // ever sees inputs this check admitted)
+  // executor-side at eval/codegen (the kernel choice below only ever
+  // sees inputs this check admitted)
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
@@ -59,68 +59,58 @@ case class SortedJaccard(left: Expression, right: Expression)
           s"arguments, got $l and $r")
     }
 
-  private lazy val isLongElem: Boolean = left.dataType match {
-    case ArrayType(LongType, _)   => true
-    case ArrayType(StringType, _) => false
-    case other => throw new IllegalArgumentException(
-      s"sorted_jaccard: need array<bigint> or array<string>, got $other")
-  }
+  // the element type picks the kernel once per expression; generated
+  // code names it directly
+  private lazy val longElems: Boolean =
+    left.dataType.asInstanceOf[ArrayType].elementType == LongType
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements(); val m = y.numElements()
-    var i = 0; var j = 0; var inter = 0
-    if (isLongElem) {
-      while (i < n && j < m) {
-        val xv = x.getLong(i); val yv = y.getLong(j)
-        if (xv == yv) { inter += 1; i += 1; j += 1 }
-        else if (xv < yv) i += 1
-        else j += 1
-      }
-    } else {
-      while (i < n && j < m) {
-        val c = x.getUTF8String(i).compareTo(y.getUTF8String(j))
-        if (c == 0) { inter += 1; i += 1; j += 1 }
-        else if (c < 0) i += 1
-        else j += 1
-      }
-    }
-    if (n + m - inter == 0) null
-    else java.lang.Double.valueOf(inter.toDouble / (n + m - inter).toDouble)
+    val r = if (longElems) SortedJaccard.longs(x, y) else SortedJaccard.strings(x, y)
+    if (r.isNaN) null else java.lang.Double.valueOf(r)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val m = ctx.freshName("m")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter")
-      val cmp = ctx.freshName("cmp")
-      // every local is ctx.freshName'd (the CosineSimilarity lesson:
-      // fixed names break Janino when two instances share a scope)
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      val step =
-        if (isLongElem)
-          s"""long $xv = $a.getLong($i); long $yv = $b.getLong($j);
-             |int $cmp = $xv == $yv ? 0 : ($xv < $yv ? -1 : 1);""".stripMargin
-        else
-          s"int $cmp = $a.getUTF8String($i).compareTo($b.getUTF8String($j));"
-      s"""
-         |int $n = $a.numElements(); int $m = $b.numElements();
-         |int $i = 0; int $j = 0; int $inter = 0;
-         |while ($i < $n && $j < $m) {
-         |  $step
-         |  if ($cmp == 0) { $inter++; $i++; $j++; }
-         |  else if ($cmp < 0) { $i++; } else { $j++; }
-         |}
-         |if ($n + $m - $inter == 0) { ${ev.isNull} = true; }
-         |else { ${ev.value} = (double) $inter / (double) ($n + $m - $inter); }
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val kernel = if (longElems) "longs" else "strings"
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.plans.SortedJaccard.$kernel($a, $b); " +
+        s"${ev.isNull} = java.lang.Double.isNaN(${ev.value});")
+  }
 
   override protected def withNewChildrenInternal(newLeft: Expression,
                                                  newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object SortedJaccard {
+
+  /** |x ∩ y| / |x ∪ y| by one merge pass over two sorted distinct
+    * array<bigint>s; NaN (0/0) exactly when both are empty. */
+  def longs(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements(); val m = y.numElements()
+    var i = 0; var j = 0; var inter = 0
+    while (i < n && j < m) {
+      val xv = x.getLong(i); val yv = y.getLong(j)
+      if (xv == yv) { inter += 1; i += 1; j += 1 }
+      else if (xv < yv) i += 1
+      else j += 1
+    }
+    inter.toDouble / (n + m - inter).toDouble
+  }
+
+  /** [[longs]] over two sorted distinct array<string>s. */
+  def strings(x: ArrayData, y: ArrayData): Double = {
+    val n = x.numElements(); val m = y.numElements()
+    var i = 0; var j = 0; var inter = 0
+    while (i < n && j < m) {
+      val c = x.getUTF8String(i).compareTo(y.getUTF8String(j))
+      if (c == 0) { inter += 1; i += 1; j += 1 }
+      else if (c < 0) i += 1
+      else j += 1
+    }
+    inter.toDouble / (n + m - inter).toDouble
+  }
 }
 
 object SortedJaccardNative {
